@@ -1938,6 +1938,59 @@ def q_cid_decode(spark, sf_dir):
         dec["cid"]["supported"].alias("supported"))
 
 
+def _replay_events(spark, sf_dir, name: str, transform) -> str:
+    """Replay events.parquet through a file-source stream in two
+    micro-batches: the data file, then a sentinel row 30 days past the last
+    event, so append mode's watermark passes every real window end and
+    flushes all state. `transform` maps the event stream to the streaming
+    result; returns the name of the memory table holding it. Raises
+    TimeoutError when the run has not finished within 300 s (a partial
+    table would otherwise compare as a value mismatch); the temp dirs are
+    removed either way (the memory table does not need them)."""
+    import datetime as _dt
+    import shutil as _sh
+    import uuid as _uuid
+
+    ev_path = os.path.join(sf_dir, "events.parquet")
+    ev = spark.read.parquet(ev_path)
+    src, ckpt, sent_dir = (tempfile.mkdtemp(prefix=f"isx-{name}-{d}-")
+                           for d in ("src", "ckpt", "sent"))
+    q = None
+    try:
+        data_file = os.path.join(src, "batch-000.parquet")
+        _sh.copyfile(ev_path, data_file)
+        mx = ev.agg(F.max("ts")).collect()[0][0]
+        sentinel = spark.createDataFrame(
+            [(-1, mx + _dt.timedelta(days=30), -1, "sentinel", 0.0, "")],
+            ev.schema)
+        sentinel.coalesce(1).write.mode("overwrite").parquet(sent_dir)
+        part = [f for f in os.listdir(sent_dir)
+                if f.endswith(".parquet")][0]
+        sent_file = os.path.join(src, "batch-001.parquet")
+        _sh.copyfile(os.path.join(sent_dir, part), sent_file)
+        # file source orders by modification time — force data first
+        now = os.path.getmtime(sent_file)
+        os.utime(data_file, (now - 60, now - 60))
+
+        stream = (spark.readStream.schema(ev.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src)
+                  .withColumn("ts", F.col("ts").cast("timestamp")))
+        qname = f"{name}_{_uuid.uuid4().hex[:8]}"
+        q = (transform(stream).writeStream.format("memory")
+             .queryName(qname).outputMode("append")
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        if not q.awaitTermination(300):
+            raise TimeoutError(
+                f"{qname}: streaming replay still running after 300 s")
+        return qname
+    finally:
+        if q is not None and q.isActive:
+            q.stop()
+        for d in (src, ckpt, sent_dir):
+            _sh.rmtree(d, ignore_errors=True)
+
+
 def q_streaming_dedup(spark, sf_dir):
     """REAL Structured Streaming execution of the sniffer's last-seen dedup
     (/root/reference/components/sniffer/providerfilters/lastseenfilter.go:
@@ -1949,41 +2002,13 @@ def q_streaming_dedup(spark, sf_dir):
     event_type)) is deterministic under any partitioning/arrival order, so
     the batch SQL oracle (row_number over the same epoch-aligned buckets)
     matches exactly."""
-    import datetime as _dt
-    import shutil as _sh
-    import uuid as _uuid
-
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    ev = spark.read.parquet(ev_path)
-    src = tempfile.mkdtemp(prefix="isx-stream-src-")
-    ckpt = tempfile.mkdtemp(prefix="isx-stream-ckpt-")
-    data_file = os.path.join(src, "batch-000.parquet")
-    _sh.copyfile(ev_path, data_file)
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    sentinel = spark.createDataFrame(
-        [(-1, mx + _dt.timedelta(days=30), -1, "sentinel", 0.0, "")],
-        ev.schema)
-    sent_dir = tempfile.mkdtemp(prefix="isx-stream-sent-")
-    sentinel.coalesce(1).write.mode("overwrite").parquet(sent_dir)
-    part = [f for f in os.listdir(sent_dir) if f.endswith(".parquet")][0]
-    sent_file = os.path.join(src, "batch-001.parquet")
-    _sh.copyfile(os.path.join(sent_dir, part), sent_file)
-    # file source orders by modification time — force data before sentinel
-    now = os.path.getmtime(sent_file)
-    os.utime(data_file, (now - 60, now - 60))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
-    agg = (stream.withWatermark("ts", "1 hour")
-           .groupBy(F.window("ts", "7 days").alias("w"), "user_id")
-           .agg(F.min(F.struct("ts", "event_id", "event_type"))
-                .alias("first")))
-    qname = "stream_dedup_" + _uuid.uuid4().hex[:8]
-    q = (agg.writeStream.format("memory").queryName(qname)
-         .outputMode("append").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    qname = _replay_events(
+        spark, sf_dir, "stream_dedup",
+        lambda stream: (stream.withWatermark("ts", "1 hour")
+                        .groupBy(F.window("ts", "7 days").alias("w"),
+                                 "user_id")
+                        .agg(F.min(F.struct("ts", "event_id", "event_type"))
+                             .alias("first"))))
     return (spark.table(qname).filter(F.col("user_id") >= 0)
             .select("user_id", F.col("first.ts").alias("first_ts"),
                     F.col("first.event_type").alias("event_type")))
@@ -1999,40 +2024,13 @@ def q_crawl_rate(spark, sf_dir):
     days ahead, so append mode's watermark passes every real window end and
     flushes all state. Spark aligns tumbling windows to the 1970 epoch, so
     the batch oracle buckets by floor(epoch(ts)/21600)."""
-    import datetime as _dt
-    import shutil as _sh
-    import uuid as _uuid
-
     from ipfs_search_spark.streaming.ingest_stream import rate_windows
 
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    ev = spark.read.parquet(ev_path)
-    src = tempfile.mkdtemp(prefix="isx-rate-src-")
-    ckpt = tempfile.mkdtemp(prefix="isx-rate-ckpt-")
-    data_file = os.path.join(src, "batch-000.parquet")
-    _sh.copyfile(ev_path, data_file)
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    sentinel = spark.createDataFrame(
-        [(-1, mx + _dt.timedelta(days=30), -1, "sentinel", 0.0, "")],
-        ev.schema)
-    sent_dir = tempfile.mkdtemp(prefix="isx-rate-sent-")
-    sentinel.coalesce(1).write.mode("overwrite").parquet(sent_dir)
-    part = [f for f in os.listdir(sent_dir) if f.endswith(".parquet")][0]
-    sent_file = os.path.join(src, "batch-001.parquet")
-    _sh.copyfile(os.path.join(sent_dir, part), sent_file)
-    now = os.path.getmtime(sent_file)
-    os.utime(data_file, (now - 60, now - 60))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
-    out = rate_windows(stream, "ts", window="6 hours",
-                       keys=("event_type",), value_col="value")
-    qname = "crawl_rate_" + _uuid.uuid4().hex[:8]
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("append").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    qname = _replay_events(
+        spark, sf_dir, "crawl_rate",
+        lambda stream: rate_windows(stream, "ts", window="6 hours",
+                                    keys=("event_type",),
+                                    value_col="value"))
     return (spark.table(qname)
             .filter(F.col("event_type") != "sentinel")
             .select("window_start", "window_end", "event_type", "n_events",

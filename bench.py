@@ -483,16 +483,6 @@ def sweep_summary() -> list[dict]:
             hist = json.load(f)
     except (ValueError, OSError):
         return []
-    def _clean(e: dict) -> bool:
-        # same two gates as _session_envelope_data (kept inline: that
-        # helper re-reads the file per call and this one groups by size)
-        bw = (e.get("machine_envelope") or {}).get("bw_eff")
-        probes = e.get("capacity_probes_sec") or []
-        spread = (max(probes) / min(probes)) if probes else None
-        floor_ok = (min(probes) <= CPU_FLOOR_MAX) if probes else True
-        return bool(bw and bw >= DRAM_GATE_MIN and floor_ok
-                    and (spread is None or spread <= CPU_SPREAD_MAX))
-
     groups: dict = {}
     for e in hist:
         groups.setdefault((e["n_pages"], tuple(e["levels"])), []).append(e)
@@ -520,7 +510,7 @@ def sweep_summary() -> list[dict]:
         out.append({
             "n_pages": n_pages, "levels": list(levels),
             "sessions": len(entries),
-            "clean_sessions": sum(1 for e in entries if _clean(e)),
+            "clean_sessions": sum(1 for e in entries if is_clean(e)),
             "lo_floor_sec": round(min(lo_runs), 3),
             "hi_floor_sec": round(min(hi_runs), 3),
             "best_session_eff": round(best, 3),
@@ -636,6 +626,29 @@ CPU_SPREAD_MAX = 1.5  # gate: max/min capacity probe within a session
 CPU_FLOOR_MAX = 2.5
 
 
+def _probe_spread(e: dict) -> float | None:
+    """max/min of a session's capacity probes, unrounded (None: no
+    probes recorded)."""
+    probes = e.get("capacity_probes_sec") or []
+    return max(probes) / min(probes) if probes else None
+
+
+def _probe_floor_ok(e: dict) -> bool:
+    probes = e.get("capacity_probes_sec") or []
+    return min(probes) <= CPU_FLOOR_MAX if probes else True
+
+
+def is_clean(e: dict) -> bool:
+    """The one gate for a recorded scaling session: memcpy envelope ≥
+    DRAM_GATE_MIN, best capacity probe ≤ CPU_FLOOR_MAX, and the UNROUNDED
+    probe spread ≤ CPU_SPREAD_MAX. Renderings round the spread for display
+    only, so every table and footnote agrees on which sessions are clean."""
+    bw = (e.get("machine_envelope") or {}).get("bw_eff")
+    spread = _probe_spread(e)
+    return bool(bw and bw >= DRAM_GATE_MIN and _probe_floor_ok(e)
+                and (spread is None or spread <= CPU_SPREAD_MAX))
+
+
 def _session_envelope_data() -> list[dict]:
     """Per-session render data: raw efficiency, that window's memcpy
     envelope, and the session's CPU-probe spread (max/min of the per-run
@@ -653,16 +666,15 @@ def _session_envelope_data() -> list[dict]:
         bw = (e.get("machine_envelope") or {}).get("bw_eff")
         if not bw:
             continue
-        probes = e.get("capacity_probes_sec") or []
-        spread = (round(max(probes) / min(probes), 2) if probes else None)
-        floor_ok = (min(probes) <= CPU_FLOOR_MAX) if probes else True
-        clean = (bw >= DRAM_GATE_MIN and floor_ok
-                 and (spread is None or spread <= CPU_SPREAD_MAX))
+        spread = _probe_spread(e)
         out.append({"ts": e.get("ts", "?"), "corpus": e["n_pages"],
                     "eff": e["efficiency_n_to_4n"], "bw": bw,
                     "ratio": round(e["efficiency_n_to_4n"] / bw, 2),
-                    "spread": spread, "floor_ok": floor_ok,
-                    "clean": clean,
+                    "spread": (round(spread, 2) if spread is not None
+                               else None),
+                    "noisy": spread is not None and spread > CPU_SPREAD_MAX,
+                    "floor_ok": _probe_floor_ok(e),
+                    "clean": is_clean(e),
                     "engine": e.get("engine", "pre-r4")})
     return out
 
@@ -672,7 +684,7 @@ def _session_envelope_rows(data: list[dict]) -> list[str]:
     for d in data:
         flag = ("ok" if d["clean"] else
                 ("cpu-degraded" if not d["floor_ok"] else
-                 "cpu-noisy" if (d["spread"] or 0) > CPU_SPREAD_MAX
+                 "cpu-noisy" if d["noisy"]
                  else "dram-contended"))
         eng = d["engine"]
         eng = eng[len("build-"):][:6] if eng.startswith("build-") else eng
@@ -707,7 +719,7 @@ def _envelope_reading(data: list[dict]) -> str:
         for d in below:
             if not d["floor_ok"]:
                 ev = "cpu probes uniformly degraded"
-            elif (d["spread"] or 0) > CPU_SPREAD_MAX:
+            elif d["noisy"]:
                 ev = f"cpu probes spanning {d['spread']}x"
             else:
                 ev = f"envelope {d['bw']}"

@@ -2,15 +2,20 @@
 
 Plan shape (SURVEY.md §3.3 Spark restatement):
 
-  query strings ──parse──> (query_id, term) + idf (exact df from term_stats,
-                            idf computed with python math.log so it is
-                            bit-identical to the oracle)
+  query strings ──parse──> one QuerySpec per query, at plan time: its
+                            scoring rows (term, idf·boost, group, avgdl;
+                            exact df from term_stats, idf in python math.log
+                            so it is bit-identical to the oracle), negative
+                            terms/phrases, AND count, phrase and tree specs
   postings scan:  bucket IN (...) AND term IN (...)   ← partition + row-group
-                                                        pruning, no full scan
-  broadcast-join tiny query-term side onto postings
-  groupBy(query_id, shard).applyInPandas(score_shard)  ← numpy decode + BM25,
-       block-max pruning, per-shard top-k (docs are disjoint across shards so
-       per-shard top-k merge is EXACT — same as Lucene's 20-shard search)
+                  pruning, no full scan; every term of the batch, read once
+  groupBy(shard).applyInPandas(score)  ← ONE Python call per shard scores
+       the whole batch; the specs ride in the scorer closure (no query-term
+       join). Each posting block ships and decodes once and is shared by
+       every query that reads it; per query: numpy BM25, block-max pruning,
+       per-shard top-k (docs are disjoint across shards so the per-shard
+       top-k merge is EXACT — same as Lucene's 20-shard search).
+       Filtered queries: cogroup(documents-scan allowed rows, by shard).
   window rank over (query_id) → global top-k  (candidates ≤ Q·S·k rows)
   broadcast-join doc_map for url display fields
 
@@ -35,11 +40,12 @@ within POSITIVE-phrase queries (a skipped block would lose position data).
 
 Negation (`-term`, `-"a b"`) resolves IN-SHARD for scoring queries:
 doc-sharding co-locates a doc's negative-term postings with its positive
-ones, so 'negs'/'negps' rows ride the same pandas group, excluded docs
-leave before the per-shard cut, and block-max pruning stays ON with θ
-computed over surviving docs only — no external anti-join, no keep_all.
-Match-all (filter/negation-only) queries keep the external anti-join path
-(their candidates come from the documents scan, not the scorer).
+ones, so they arrive in the same shard call, excluded docs leave before
+the per-shard cut, and block-max pruning stays ON with θ computed over
+surviving docs only — no external anti-join, no keep_all. Match-all
+(filter/negation-only) queries keep the external anti-join path (their
+candidates come from the documents scan, not the scorer); their excluded
+doc sets come from a second call of the same shard scorer.
 
 Filter-only query strings are match-all-then-filter: every doc passing the
 filters at constant score 1.0, ranked by doc_id — per-query
@@ -61,7 +67,9 @@ from __future__ import annotations
 
 import math
 import re
+from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -70,6 +78,9 @@ from pyspark.sql.types import (
 )
 
 from ipfs_search_spark.catalog import TableIO
+from ipfs_search_spark.functions.codec import (
+    block_ub, decode_block, decode_block_positions, tfnorm,
+)
 from ipfs_search_spark.plans.parser import (
     Expansion, Filter, Query, filter_to_sql, parse_query,
 )
@@ -436,591 +447,602 @@ def _tree_sql(node, bool_filters: dict, bitmap: dict, doc_cols,
                             for c in node[1:]) + ")")
 
 
-def _make_scorer(k: int, mode: str, prune: bool, keep_all: bool,
-                 combine: str = "sum", phrase_mode: str | None = None,
-                 cogroup: bool = False, tie_breaker: float = 0.0):
-    """Scorer for one (query, shard) group.
+@dataclass
+class QuerySpec:
+    """One query's scoring spec, built at plan time and shipped to every
+    shard call in the scorer's closure (no query-term relation is joined
+    onto the postings scan).
 
-    cogroup=True returns a TWO-argument function for
-    groupBy().cogroup().applyInPandas: the right side carries the
-    (query_id, shard, doc_id) rows ALLOWED by the query's conjunct
-    filters (`term lang:de`), pre-routed to the doc's shard
-    (pmod(xxhash64(doc_id), n_shards) — the index's own doc-shard
-    function). A query flagged `flt` restricts to that set IN-SHARD —
-    before θ, the AND/phrase gates and the per-shard top-k cut — so
-    filtered queries keep the cut and block-max pruning ON instead of
-    shipping their full candidate doc set to the rank window (r3 verdict).
-    Exact, not approximate: the allowed set is the filter's true doc set,
-    so this is the semi-join moved inside the scorer.
+    rows: positive posting rows (term, weight, group, avgdl); weight is
+        idf·boost (0 for presence-only tree leaves), group the base query
+        term (or clause key) the posting term scores for.
+    negs: NOT-term posting terms; a doc holding any of them is excluded.
+    negp: NOT-phrase groups [slop, variants]; a doc matching any is
+        excluded.
+    n_groups: AND-required group count; 0 = OR / boolean tree, negative =
+        minimum_should_match floor of |n| groups.
+    phrases: required phrase groups [slop, variants]; a variant is a list
+        of posting terms, and a group matches when any variant does.
+    tree: boolean-tree spec {tree, phrases, fbitmap/fconst | bitmap}.
+    keep_all: no per-shard cut (trees evaluated JVM-side on `bits`).
+    flt: restrict to the query's cogrouped allowed doc set.
+    fast_tree: filter-leaf tree decided in-shard; a shard where the query
+        has no postings still emits its filter-only matches.
+    excl_only: match-all negation probe; emit the excluded docs."""
+    rows: list = field(default_factory=list)
+    negs: list = field(default_factory=list)
+    negp: list = field(default_factory=list)
+    n_groups: int = 0
+    phrases: list = field(default_factory=list)
+    tree: dict | None = None
+    keep_all: bool = False
+    flt: bool = False
+    fast_tree: bool = False
+    excl_only: bool = False
 
-    Rows are (possibly fielded) posting lists: each carries idf, boost,
-    avgdl (per-field), and a `group` id — the base query term the row
-    belongs to. Per doc: contributions are reduced WITHIN a group
-    (max → OpenSearch best_fields/dis_max; sum → BM25F-lite) and then
-    summed across groups in ascending group order (float-deterministic,
-    matching the oracle). Single-field indexes have one row per group, so
-    both combines degenerate to the original exact BM25 sum.
+    def negp_terms(self) -> set:
+        return {t for g in self.negp for var in g[1] for t in var}
 
-    phrase_mode (reads the per-query `phrase_json` column — a JSON list of
-    phrase GROUPS; each group is a list of VARIANTS; each variant a list of
-    posting terms. A doc satisfies a group iff it matches ANY variant
-    (fielded search expands one quoted phrase into one variant per field);
-    single-field indexes have exactly one variant per group):
-      'all' — positive path: docs must satisfy EVERY group (quoted phrases
-              are required clauses); applied before the per-shard top-k cut,
-              so the cut stays sound. Disables block pruning for the group
-              (skipped blocks would lose position data and bias θ).
-      'any' — negative path: emit docs satisfying ANY group (the caller
-              anti-joins them away); scores are not meaningful."""
-    def _score(pdf: pd.DataFrame, allowed=None, fmap=None) -> pd.DataFrame:
-        import json as _json
+    def terms(self) -> set:
+        return ({r[0] for r in self.rows} | set(self.negs)
+                | self.negp_terms())
 
-        import numpy as np
-        from ipfs_search_spark.functions.codec import (
-            block_ub, decode_block, decode_block_positions, tfnorm,
-        )
 
-        qid = int(pdf["query_id"].iloc[0])
-        # keep_all is PER-QUERY (the qterms keep_all column): only queries
-        # WITH filters skip the per-shard top-k cut (their filter applies
-        # after scoring, so a pre-filter cut could drop surviving docs).
-        # One filtered query in a batch must not disable the cut for the
-        # others — that ships every unfiltered query's full candidate doc
-        # set through the rank window (r2 verdict). The factory arg stays
-        # as a global override for the match-all negation probes.
-        keep_all_q = keep_all or bool(
-            "keep_all" in pdf.columns and pdf["keep_all"].iloc[0])
-        pdf = pdf.sort_values("term", kind="stable")
-        # In-scorer negation (doc-sharding co-locates a doc's negative-term
-        # postings with its positive ones): 'negs' rows exclude their docs,
-        # 'negps' rows exclude phrase matches — resolved HERE so the
-        # per-shard top-k cut stays sound and block-max pruning stays ON
-        # for negation queries (θ is computed over non-excluded docs only).
-        if "kind" in pdf.columns:
-            negs_pdf = pdf[pdf["kind"] == "negs"]
-            negps_pdf = pdf[pdf["kind"] == "negps"]
-            pdf = pdf[pdf["kind"] == "pos"]
-        else:
-            negs_pdf = negps_pdf = pdf.iloc[0:0]
-        if len(pdf) == 0:
-            return pd.DataFrame({"query_id": [], "doc_id": [],
-                                 "score": [], "bits": []}
-                                ).astype({"query_id": "int32",
-                                          "doc_id": "int64",
-                                          "score": "float64",
-                                          "bits": "int64"})
-        n_rows = len(pdf)
-        phrases: list = []
-        if phrase_mode is not None and "phrase_json" in pdf.columns:
-            pj = pdf["phrase_json"].iloc[0]
-            if pj:
-                phrases = _json.loads(pj)
-        # boolean-tree spec (parser.bool_tree lowered to group keys): the
-        # query's docs must satisfy the tree over per-group presence bits
-        bool_spec = None
-        if "bool_json" in pdf.columns:
-            bj = pdf["bool_json"].iloc[0]
-            if bj:
-                bool_spec = _json.loads(bj)
-        # each phrase group is [slop, [variant, ...]] (variant = term list)
-        phrase_terms = {t for grp in phrases for var in grp[1] for t in var}
-        if bool_spec:
-            phrase_terms |= {t for grp in bool_spec["phrases"].values()
-                             for var in grp[1] for t in var}
-        pos_acc: dict = {t: [] for t in phrase_terms}
+class _ShardPostings:
+    """One shard's postings rows for a query batch. Each (row, block) is
+    decoded at most once — positions likewise, tf-normalisations once per
+    avgdl — and shared by every query of the batch that reads it; blocks
+    no query reads are never decoded. The caches live for one call, so its
+    peak memory is the decoded size of the blocks the batch reads in this
+    shard (32 bytes per posting, plus positions for phrase terms)."""
 
-        # excluded docs of this shard: NOT-term postings + NOT-phrase matches
-        excl = None
-        if len(negs_pdf) or len(negps_pdf):
-            excl_parts = []
-            for blocks in negs_pdf["blocks"]:
-                for blk in blocks:
-                    excl_parts.append(decode_block(blk)[0])
-            negp_groups: list = []
-            if len(negps_pdf):
-                nj = negps_pdf["phrase_json"].iloc[0]
-                if nj:
-                    negp_groups = _json.loads(nj)
-            if negp_groups:
-                np_terms = {t for g in negp_groups
-                            for var in g[1] for t in var}
-                acc: dict = {t: [] for t in np_terms}
-                for term_n, blocks in zip(negps_pdf["term"],
-                                          negps_pdf["blocks"]):
-                    if term_n not in np_terms:
-                        continue
-                    for blk in blocks:
-                        ids_b, tfs_b, _ = decode_block(blk)
-                        acc[term_n].append(
-                            (ids_b, tfs_b,
-                             decode_block_positions(blk, tfs_b)))
-                pos_data_n = {}
-                for t, lst in acc.items():
-                    if lst:
-                        ids_c = np.concatenate([x[0] for x in lst])
-                        tfs_c = np.concatenate([x[1] for x in lst])
-                        pos_c = np.concatenate([x[2] for x in lst])
-                        pos_data_n[t] = (np.repeat(ids_c, tfs_c), pos_c)
-                for slop_n, vars_n in negp_groups:
-                    mlist = [_match_phrase(pos_data_n, var, slop_n)
-                             for var in vars_n]
-                    if mlist:
-                        excl_parts.append(
-                            np.unique(np.concatenate(mlist)))
-            if excl_parts:
-                excl = np.unique(np.concatenate(excl_parts))
-        avgdls = pdf["avgdl"].to_numpy(dtype=np.float64)
-        idfs = pdf["idf"].to_numpy(dtype=np.float64) * \
-            pdf["boost"].to_numpy(dtype=np.float64)
-        groups_sorted = sorted(set(pdf["group"]))
-        group_of = {g: i for i, g in enumerate(groups_sorted)}
-        row_group = pdf["group"].map(group_of).to_numpy(dtype=np.int64)
-        n_groups = len(groups_sorted)
-        term_max_ub = np.array(
-            [i * max((float(block_ub(b["max_tf"], b["min_dl"], a))
-                      for b in blks), default=0.0)
-             for i, a, blks in zip(idfs, avgdls, pdf["blocks"])],
-            dtype=np.float64)
-        # a group's max possible contribution (for pruning bounds). With a
-        # dis_max tie_breaker the blended score max + tb*(sum - max) can
-        # exceed the max bound but never the sum bound, so bounds fall
-        # back to sum-combine (sound, merely looser)
-        group_ub = np.zeros(n_groups)
-        if combine == "max" and tie_breaker == 0.0:
-            np.maximum.at(group_ub, row_group, term_max_ub)
-        else:
-            np.add.at(group_ub, row_group, term_max_ub)
+    def __init__(self, pdf: pd.DataFrame):
+        self.blocks = [list(b) for b in pdf["blocks"]]
+        self.rows_of: dict = {}
+        for i, t in enumerate(pdf["term"]):
+            self.rows_of.setdefault(t, []).append(i)
+        self._dec: dict = {}
+        self._pos: dict = {}
+        self._norm: dict = {}
+        self._ub: dict = {}
 
-        # Position-lazy two-pass for flat positive-phrase queries: decode
-        # the PHRASE terms first (positions included), compute the
-        # phrase-satisfying doc set P, then skip any free term's block
-        # whose docid range contains no member of P — such docs can never
-        # reach the result, and every block holding a P-doc is decoded in
-        # full, so surviving scores are exact. At scale a rare phrase makes
-        # P tiny and the common free terms' posting lists go untouched.
-        phrase_P_u = None
-        matched_pre = None
-        decoded_rows: dict[int, list] = {}
-        if phrases and phrase_mode == "all":
-            for row_i in range(n_rows):
-                t_name = pdf["term"].iloc[row_i]
-                if t_name not in phrase_terms:
-                    continue
-                dec = []
-                for blk in pdf["blocks"].iloc[row_i]:
-                    ids_b, tfs_b, dls_b = decode_block(blk)
-                    dec.append((ids_b, tfs_b, dls_b))
-                    pos_acc[t_name].append(
-                        (ids_b, tfs_b, decode_block_positions(blk, tfs_b)))
-                decoded_rows[row_i] = dec
-            pos_data0: dict = {}
-            for t, lst in pos_acc.items():
-                if lst:
-                    ids_c = np.concatenate([x[0] for x in lst])
-                    tfs_c = np.concatenate([x[1] for x in lst])
-                    pos_c = np.concatenate([x[2] for x in lst])
-                    pos_data0[t] = (np.repeat(ids_c, tfs_c), pos_c)
-            matched_pre = [
-                (np.unique(np.concatenate(
-                    [_match_phrase(pos_data0, var, grp[0])
-                     for var in grp[1]]))
-                 if grp[1] else np.empty(0, np.int64))
-                for grp in phrases
-            ]
-            P = matched_pre[0]
-            for m in matched_pre[1:]:
-                P = np.intersect1d(P, m, assume_unique=True)
-            phrase_P_u = np.sort(P.view(np.uint64))
+    def decode(self, i: int, bi: int):
+        v = self._dec.get((i, bi))
+        if v is None:
+            v = self._dec[(i, bi)] = decode_block(self.blocks[i][bi])
+        return v
 
-        # per-query AND-required group count (0 = OR semantics); pruning is
-        # per-query too — sound only for flat-OR, non-phrase, non-boolean
-        expected = int(pdf["n_groups"].iloc[0])
-        theta = 0.0
-        solo = None
-        best_i = None
-        if prune and n_rows > 1 and not keep_all_q and expected == 0 \
-                and not phrases and bool_spec is None:
-            best_i = int(np.argmax(term_max_ub))
-            ids_l, sc_l = [], []
-            for blk in pdf["blocks"].iloc[best_i]:
-                ids_b, tfs_b, dls_b = decode_block(blk)
-                ids_l.append(ids_b)
-                sc_l.append(idfs[best_i] *
-                            tfnorm(tfs_b, dls_b, avgdls[best_i]))
-            solo = (np.concatenate(ids_l) if ids_l else np.empty(0, np.int64),
-                    np.concatenate(sc_l) if sc_l else np.empty(0))
-            if excl is not None and solo[0].size:
-                kp = ~np.isin(solo[0], excl)
-                solo = (solo[0][kp], solo[1][kp])
-            if allowed is not None and solo[0].size:
-                # θ must be a lower bound over FILTER-SURVIVING docs only —
-                # an unfiltered θ would over-prune blocks holding allowed
-                # docs that belong in the top-k
-                kp = np.isin(solo[0], allowed)
-                solo = (solo[0][kp], solo[1][kp])
-            if solo[1].size >= k:
-                theta = float(np.partition(solo[1], -k)[-k])
+    def norm(self, i: int, bi: int, avgdl: float):
+        v = self._norm.get((i, bi, avgdl))
+        if v is None:
+            _, tfs, dls = self.decode(i, bi)
+            v = self._norm[(i, bi, avgdl)] = tfnorm(tfs, dls, avgdl)
+        return v
 
-        ids_parts, sc_parts, grp_parts = [], [], []
-        for row_i in range(n_rows):
-            blocks = pdf["blocks"].iloc[row_i]
-            t_idf = idfs[row_i]
-            g = row_group[row_i]
-            if row_i == best_i and solo is not None:
-                ids_parts.append(solo[0]); sc_parts.append(solo[1])
-                grp_parts.append(np.full(solo[0].size, g, dtype=np.int64))
+    def block_ubs(self, i: int, avgdl: float):
+        """tfnorm upper bound of every block of row i (block-max)."""
+        v = self._ub.get((i, avgdl))
+        if v is None:
+            blks = self.blocks[i]
+            v = self._ub[(i, avgdl)] = block_ub(
+                np.array([b["max_tf"] for b in blks], dtype=np.int64),
+                np.array([b["min_dl"] for b in blks], dtype=np.int64),
+                avgdl)
+        return v
+
+    def pos_entry(self, i: int, bi: int):
+        """(doc_ids, tfs, flat positions) of one block."""
+        ids_b, tfs_b, _ = self.decode(i, bi)
+        pos = self._pos.get((i, bi))
+        if pos is None:
+            pos = self._pos[(i, bi)] = decode_block_positions(
+                self.blocks[i][bi], tfs_b)
+        return ids_b, tfs_b, pos
+
+
+def _pos_data(acc: dict) -> dict:
+    """term → [(ids, tfs, positions) per block] → term → (el_doc_ids,
+    el_positions), one element per term occurrence (_match_phrase's
+    input)."""
+    out = {}
+    for t, lst in acc.items():
+        if lst:
+            ids_c = np.concatenate([x[0] for x in lst])
+            tfs_c = np.concatenate([x[1] for x in lst])
+            pos_c = np.concatenate([x[2] for x in lst])
+            out[t] = (np.repeat(ids_c, tfs_c), pos_c)
+    return out
+
+
+def _excluded(spec: QuerySpec, sp: _ShardPostings):
+    """The shard's docs a query's negative clauses exclude — NOT-term
+    postings plus NOT-phrase matches — or None when no negative posting
+    lives in this shard."""
+    parts = []
+    for t in spec.negs:
+        for i in sp.rows_of.get(t, ()):
+            for bi in range(len(sp.blocks[i])):
+                parts.append(sp.decode(i, bi)[0])
+    np_terms = spec.negp_terms()
+    if any(t in sp.rows_of for t in np_terms):
+        acc = {t: [sp.pos_entry(i, bi)
+                   for i in sp.rows_of.get(t, ())
+                   for bi in range(len(sp.blocks[i]))]
+               for t in np_terms}
+        pos_data = _pos_data(acc)
+        for slop, vars_ in spec.negp:
+            mlist = [_match_phrase(pos_data, var, slop) for var in vars_]
+            if mlist:
+                parts.append(np.unique(np.concatenate(mlist)))
+    return np.unique(np.concatenate(parts)) if parts else None
+
+
+def _filter_only_matches(spec: QuerySpec, right, k: int):
+    """Filter-only matches of a fast filter-leaf tree in a shard where the
+    query has no postings: the cogrouped docs whose leaf bits satisfy the
+    tree with every term leaf false, at the constant score 1.0."""
+    dids, allow, fb = right
+    if spec.flt:
+        dids, fb = dids[allow == 1], fb[allow == 1]
+    okb = _eval_bits_tree(spec.tree["tree"], spec.tree.get("fbitmap") or {},
+                          spec.tree.get("fconst") or {}, fb)
+    dids = np.sort(dids[okb])
+    # all tie at the constant 1.0: the global rank keeps the k lowest
+    # doc_ids (signed asc — same as the rank window)
+    dids = dids[:k]
+    return dids, np.ones(dids.size, dtype=np.float64), None
+
+
+def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
+                 combine: str, tie_breaker: float, allowed=None, fmap=None):
+    """One query's candidates in one shard → (doc_ids, scores, bits|None),
+    or None when it has none. `allowed`: the query's filter-allowed docs
+    (flt queries); `fmap`: (sorted doc_ids, positive filter-leaf bits) of
+    the shard's docs matching any of its filter leaves."""
+
+    # scoring rows in ascending term order, one per (query row, postings
+    # row): a term has several postings rows per shard on segmented
+    # indexes (disjoint doc sets)
+    rows = [(i, t, w, g, a)
+            for t, w, g, a in sorted(spec.rows, key=lambda r: r[0])
+            for i in sp.rows_of.get(t, ())]
+    if not rows:
+        return None
+    n_rows = len(rows)
+    phrases = spec.phrases
+    bool_spec = spec.tree
+    # each phrase group is [slop, [variant, ...]] (variant = term list)
+    phrase_terms = {t for grp in phrases for var in grp[1] for t in var}
+    if bool_spec:
+        phrase_terms |= {t for grp in bool_spec["phrases"].values()
+                         for var in grp[1] for t in var}
+    pos_acc: dict = {t: [] for t in phrase_terms}
+
+    # excluded docs of this shard: NOT-term postings + NOT-phrase matches
+    excl = _excluded(spec, sp)
+    avgdls = np.array([r[4] for r in rows], dtype=np.float64)
+    idfs = np.array([r[2] for r in rows], dtype=np.float64)
+    groups_sorted = sorted({r[3] for r in rows})
+    group_of = {g: i for i, g in enumerate(groups_sorted)}
+    row_group = np.array([group_of[r[3]] for r in rows], dtype=np.int64)
+    n_groups = len(groups_sorted)
+    term_max_ub = np.array(
+        [w * max(sp.block_ubs(i, a).tolist(), default=0.0)
+         for i, _, w, _, a in rows], dtype=np.float64)
+    # a group's max possible contribution (for pruning bounds). With a
+    # dis_max tie_breaker the blended score max + tb*(sum - max) can
+    # exceed the max bound but never the sum bound, so bounds fall
+    # back to sum-combine (sound, merely looser)
+    group_ub = np.zeros(n_groups)
+    if combine == "max" and tie_breaker == 0.0:
+        np.maximum.at(group_ub, row_group, term_max_ub)
+    else:
+        np.add.at(group_ub, row_group, term_max_ub)
+
+    # Position-lazy two-pass for flat positive-phrase queries: decode
+    # the PHRASE terms first (positions included), compute the
+    # phrase-satisfying doc set P, then skip any free term's block
+    # whose docid range contains no member of P — such docs can never
+    # reach the result, and every block holding a P-doc is decoded in
+    # full, so surviving scores are exact. At scale a rare phrase makes
+    # P tiny and the common free terms' posting lists go untouched.
+    phrase_P_u = None
+    matched_pre = None
+    decoded_rows: set = set()
+    if phrases:
+        for row_i, (i, t_name, _, _, _) in enumerate(rows):
+            if t_name not in phrase_terms:
                 continue
-            if row_i in decoded_rows:
-                # phrase term — decoded (with positions) in pass 1
-                for ids_b, tfs_b, dls_b in decoded_rows[row_i]:
-                    ids_parts.append(ids_b)
-                    sc_parts.append(t_idf *
-                                    tfnorm(tfs_b, dls_b, avgdls[row_i]))
-                    grp_parts.append(np.full(ids_b.size, g, dtype=np.int64))
-                continue
-            # other groups can add at most their group bound; this row's own
-            # group can add at most the group bound (covers max-combine where
-            # siblings don't stack)
-            others_ub = float(group_ub.sum() - group_ub[g])
-            # own-group headroom beyond this block: sibling field-rows only
-            own_extra = float(group_ub[g] - term_max_ub[row_i]) \
-                if (combine == "sum" or tie_breaker > 0.0) else 0.0
-            blocks = list(blocks)
-            for bi, blk in enumerate(blocks):
-                if phrase_P_u is not None:
-                    # block docids ascend in unsigned order across blocks;
-                    # skip if no phrase-matching doc falls in this block's
-                    # [first_doc, next_first) range
-                    lo = np.uint64(int(blk["first_doc_id"]) & ((1 << 64) - 1))
-                    j0 = int(np.searchsorted(phrase_P_u, lo))
-                    if bi + 1 < len(blocks):
-                        hi = np.uint64(
-                            int(blocks[bi + 1]["first_doc_id"])
-                            & ((1 << 64) - 1))
-                        j1 = int(np.searchsorted(phrase_P_u, hi))
-                    else:
-                        j1 = phrase_P_u.size
-                    if j0 == j1:
-                        continue
-                ub = t_idf * float(block_ub(blk["max_tf"], blk["min_dl"],
-                                            avgdls[row_i]))
-                bound = (max(ub, float(group_ub[g]))
-                         if combine == "max" and tie_breaker == 0.0
-                         else ub + own_extra)
-                if theta > 0.0 and bound + others_ub < theta:
-                    continue
-                ids_b, tfs_b, dls_b = decode_block(blk)
+            pos_acc[t_name].extend(sp.pos_entry(i, bi)
+                                   for bi in range(len(sp.blocks[i])))
+            decoded_rows.add(row_i)
+        pos_data0 = _pos_data(pos_acc)
+        matched_pre = [
+            (np.unique(np.concatenate(
+                [_match_phrase(pos_data0, var, grp[0])
+                 for var in grp[1]]))
+             if grp[1] else np.empty(0, np.int64))
+            for grp in phrases
+        ]
+        P = matched_pre[0]
+        for m in matched_pre[1:]:
+            P = np.intersect1d(P, m, assume_unique=True)
+        phrase_P_u = np.sort(P.view(np.uint64))
+
+    # per-query AND-required group count (0 = OR semantics); pruning is
+    # per-query too — sound only for flat-OR, non-phrase, non-boolean
+    expected = spec.n_groups
+    theta = 0.0
+    solo = None
+    best_i = None
+    if prune and n_rows > 1 and not spec.keep_all and expected == 0 \
+            and not phrases and bool_spec is None:
+        best_i = int(np.argmax(term_max_ub))
+        i = rows[best_i][0]
+        ids_l, sc_l = [], []
+        for bi in range(len(sp.blocks[i])):
+            ids_l.append(sp.decode(i, bi)[0])
+            sc_l.append(idfs[best_i] * sp.norm(i, bi, avgdls[best_i]))
+        solo = (np.concatenate(ids_l) if ids_l else np.empty(0, np.int64),
+                np.concatenate(sc_l) if sc_l else np.empty(0))
+        if excl is not None and solo[0].size:
+            kp = ~np.isin(solo[0], excl)
+            solo = (solo[0][kp], solo[1][kp])
+        if allowed is not None and solo[0].size:
+            # θ must be a lower bound over FILTER-SURVIVING docs only —
+            # an unfiltered θ would over-prune blocks holding allowed
+            # docs that belong in the top-k
+            kp = np.isin(solo[0], allowed)
+            solo = (solo[0][kp], solo[1][kp])
+        if solo[1].size >= k:
+            theta = float(np.partition(solo[1], -k)[-k])
+
+    ids_parts, sc_parts, grp_parts = [], [], []
+    for row_i, (i, t_name, _, _, _) in enumerate(rows):
+        blocks = sp.blocks[i]
+        t_idf = idfs[row_i]
+        av = avgdls[row_i]
+        g = row_group[row_i]
+        if row_i == best_i and solo is not None:
+            ids_parts.append(solo[0]); sc_parts.append(solo[1])
+            grp_parts.append(np.full(solo[0].size, g, dtype=np.int64))
+            continue
+        if row_i in decoded_rows:
+            # phrase term — decoded (with positions) in pass 1
+            for bi in range(len(blocks)):
+                ids_b = sp.decode(i, bi)[0]
                 ids_parts.append(ids_b)
-                sc_parts.append(t_idf * tfnorm(tfs_b, dls_b, avgdls[row_i]))
+                sc_parts.append(t_idf * sp.norm(i, bi, av))
                 grp_parts.append(np.full(ids_b.size, g, dtype=np.int64))
-                t_name = pdf["term"].iloc[row_i]
-                if t_name in phrase_terms:
-                    pos_acc[t_name].append(
-                        (ids_b, tfs_b, decode_block_positions(blk, tfs_b)))
-        if not ids_parts:
+            continue
+        # other groups can add at most their group bound; this row's own
+        # group can add at most the group bound (covers max-combine where
+        # siblings don't stack)
+        others_ub = float(group_ub.sum() - group_ub[g])
+        # own-group headroom beyond this block: sibling field-rows only
+        own_extra = float(group_ub[g] - term_max_ub[row_i]) \
+            if (combine == "sum" or tie_breaker > 0.0) else 0.0
+        ubs = sp.block_ubs(i, av)
+        for bi, blk in enumerate(blocks):
+            if phrase_P_u is not None:
+                # block docids ascend in unsigned order across blocks;
+                # skip if no phrase-matching doc falls in this block's
+                # [first_doc, next_first) range
+                lo = np.uint64(int(blk["first_doc_id"]) & ((1 << 64) - 1))
+                j0 = int(np.searchsorted(phrase_P_u, lo))
+                if bi + 1 < len(blocks):
+                    hi = np.uint64(
+                        int(blocks[bi + 1]["first_doc_id"])
+                        & ((1 << 64) - 1))
+                    j1 = int(np.searchsorted(phrase_P_u, hi))
+                else:
+                    j1 = phrase_P_u.size
+                if j0 == j1:
+                    continue
+            ub = t_idf * float(ubs[bi])
+            bound = (max(ub, float(group_ub[g]))
+                     if combine == "max" and tie_breaker == 0.0
+                     else ub + own_extra)
+            if theta > 0.0 and bound + others_ub < theta:
+                continue
+            ids_b = sp.decode(i, bi)[0]
+            ids_parts.append(ids_b)
+            sc_parts.append(t_idf * sp.norm(i, bi, av))
+            grp_parts.append(np.full(ids_b.size, g, dtype=np.int64))
+            if t_name in phrase_terms:
+                pos_acc[t_name].append(sp.pos_entry(i, bi))
+    if not ids_parts:
+        return None
+    ids = np.concatenate(ids_parts)
+    scores = np.concatenate(sc_parts)
+    grps = np.concatenate(grp_parts)
+    # stable lexsort: primary doc (unsigned), secondary group — within a
+    # (doc, group) run the original ascending fielded-term order survives
+    order = np.lexsort((grps, ids.view(np.uint64)))
+    ids, scores, grps = ids[order], scores[order], grps[order]
+    # (doc, group) segments
+    new_doc = np.concatenate(([True], ids[1:] != ids[:-1]))
+    new_seg = new_doc | np.concatenate(([True], grps[1:] != grps[:-1]))
+    seg_idx = np.flatnonzero(new_seg)
+    if combine == "max":
+        seg_scores = np.maximum.reduceat(scores, seg_idx)
+        if tie_breaker > 0.0:
+            # OpenSearch dis_max tie_breaker: max + tb*(sum - max);
+            # the sum accumulates in the same ascending fielded-term
+            # order as the oracle (float-deterministic)
+            seg_sums = np.add.reduceat(scores, seg_idx)
+            seg_scores = seg_scores + tie_breaker * (seg_sums
+                                                     - seg_scores)
+    else:
+        seg_scores = np.add.reduceat(scores, seg_idx)
+    seg_ids = ids[seg_idx]
+    # doc segments over the (doc, group) reduction
+    doc_start = np.flatnonzero(
+        np.concatenate(([True], seg_ids[1:] != seg_ids[:-1])))
+    doc_ids = seg_ids[doc_start]
+    doc_scores = np.add.reduceat(seg_scores, doc_start)
+    if (excl is not None or allowed is not None) and doc_ids.size:
+        # negation (and the filter-allowed restriction) resolve
+        # in-shard: excluded docs leave before the AND/phrase filters
+        # and the per-shard top-k cut (boolean trees never carry
+        # in-scorer negation — the mask handles NOT there)
+        keep_x = np.ones(doc_ids.size, dtype=bool)
+        if excl is not None:
+            keep_x &= ~np.isin(doc_ids, excl)
+        if allowed is not None:
+            keep_x &= np.isin(doc_ids, allowed)
+        doc_ids, doc_scores = doc_ids[keep_x], doc_scores[keep_x]
+        if not keep_x.all() and expected != 0:
+            # the (doc,group) segments feed the AND counts — filter them
+            # consistently with the surviving docs
+            seg_keep = np.ones(seg_ids.size, dtype=bool)
+            if excl is not None:
+                seg_keep &= ~np.isin(seg_ids, excl)
+            if allowed is not None:
+                seg_keep &= np.isin(seg_ids, allowed)
+            seg_ids = seg_ids[seg_keep]
+            doc_start = (np.flatnonzero(np.concatenate(
+                ([True], seg_ids[1:] != seg_ids[:-1])))
+                if seg_ids.size else np.empty(0, np.int64))
+    if expected != 0:
+        # AND: required count comes from the QUERY (n_groups), not from
+        # the rows present in this shard — a shard lacking one query term
+        # entirely must yield zero AND matches. A NEGATIVE n_groups is
+        # minimum_should_match: at least |n| distinct groups must match
+        # (OR with a floor — OpenSearch query_string
+        # minimum_should_match); scoring stays the sum of matches
+        doc_group_counts = np.add.reduceat(
+            np.ones(seg_ids.size, dtype=np.int64), doc_start)
+        keep = (doc_group_counts == expected if expected > 0
+                else doc_group_counts >= -expected)
+        doc_ids, doc_scores = doc_ids[keep], doc_scores[keep]
+    if phrases:
+        # a group matches a doc iff ANY of its variants matches
+        # (precomputed in the two-pass path)
+        mask = np.ones(doc_ids.size, dtype=bool)
+        for m in matched_pre:
+            mask &= np.isin(doc_ids, m)
+        doc_ids, doc_scores = doc_ids[mask], doc_scores[mask]
+    if bool_spec is not None and (doc_ids.size or fmap is not None):
+        # presence matrix over the (doc, group) segments, then evaluate
+        # the boolean tree vectorized; phrase keys resolve through the
+        # positional matcher (any field variant satisfies the phrase).
+        # Scores stay the sum of matched positive clauses — negated
+        # leaves carry idf 0, so they gate matching without scoring.
+        # NOTE the gate above: the block must still run with ZERO
+        # surviving candidates whenever filter-leaf docs were shipped
+        # (fmap) — a conjunct filter that empties a shard's term
+        # candidates must not suppress branch B's filter-only matches.
+        M = np.zeros((doc_ids.size, n_groups), dtype=bool)
+        if doc_ids.size:
+            seg_groups = grps[seg_idx]
+            seg_ids_b = ids[seg_idx]  # pre-filter segments: a seg_id
+            # the allowed-restriction dropped must not alias another
+            # doc's row
+            du = doc_ids.view(np.uint64)
+            su = seg_ids_b.view(np.uint64)
+            rows_idx = np.searchsorted(du, su)
+            rows_c = np.minimum(rows_idx, max(doc_ids.size - 1, 0))
+            valid = du[rows_c] == su
+            M[rows_c[valid], seg_groups[valid]] = True
+        pos_data = _pos_data(pos_acc)
+        ph_pres = {}
+        for key, (slop_b, vars_) in bool_spec["phrases"].items():
+            mlist = [_match_phrase(pos_data, var, slop_b)
+                     for var in vars_]
+            md = (np.unique(np.concatenate(mlist)) if mlist
+                  else np.empty(0, np.int64))
+            ph_pres[key] = np.isin(doc_ids, md)
+        # filter-leaf truth values (in-shard tree evaluation): the
+        # cogroup shipped each candidate's POSITIVE-form leaf bitmask;
+        # docs absent from the map satisfied no positive leaf
+        fbitmap = bool_spec.get("fbitmap") or {}
+        fconst = bool_spec.get("fconst") or {}
+        fvec = np.zeros(doc_ids.size, dtype=np.int64)
+        if fbitmap and fmap is not None and doc_ids.size \
+                and fmap[0].size:
+            pos_f = np.searchsorted(fmap[0], doc_ids)
+            pos_c = np.minimum(pos_f, fmap[0].size - 1)
+            hit = fmap[0][pos_c] == doc_ids
+            fvec[hit] = fmap[1][pos_c[hit]]
+
+        def _ev(node):
+            if isinstance(node, str):
+                if node in ph_pres:
+                    return ph_pres[node]
+                if node in fbitmap:
+                    bit, inv = fbitmap[node]
+                    v = ((fvec >> np.int64(bit)) & 1).astype(bool)
+                    return ~v if inv else v
+                if node in fconst:
+                    return np.full(doc_ids.size, fconst[node],
+                                   dtype=bool)
+                gi = group_of.get(node)
+                if gi is None:  # term absent from the whole index
+                    return np.zeros(doc_ids.size, dtype=bool)
+                return M[:, gi]
+            op = node[0]
+            if op == "not":
+                return ~_ev(node[1])
+            acc = _ev(node[1])
+            for c in node[2:]:
+                acc = (acc & _ev(c)) if op == "and" else (acc | _ev(c))
+            return acc
+
+        bitmap = bool_spec.get("bitmap")
+        if bitmap:
+            # tree has FILTER leaves: the scorer cannot decide the tree
+            # (no doc metadata here) — emit the term/phrase presence
+            # bits instead and let the plan evaluate the full tree
+            # JVM-side after joining the metadata in. No cut here
+            # (keep_all is set for these queries).
+            bits_vec = np.zeros(doc_ids.size, dtype=np.int64)
+            for key, b in bitmap.items():
+                if key in ph_pres:
+                    pres = ph_pres[key]
+                else:
+                    gi = group_of.get(key)
+                    if gi is None:  # absent from the whole index
+                        continue
+                    pres = M[:, gi]
+                bits_vec |= pres.astype(np.int64) << np.int64(b)
+            return doc_ids, doc_scores, bits_vec
+        pre_mask_docs = doc_ids
+        bmask = _ev(bool_spec["tree"])
+        doc_ids, doc_scores = doc_ids[bmask], doc_scores[bmask]
+        if fbitmap or fconst:
+            # constant-score floor for filter-leaf trees: a doc whose
+            # positive term leaves contributed nothing (matched via a
+            # filter leaf / NOT-only probes) scores the OpenSearch
+            # constant 1.0 — identical to the JVM-side floor the
+            # legacy bits path applies after its metadata join
+            doc_scores = np.where(doc_scores > 0.0, doc_scores, 1.0)
+            # branch B IN-SHARD: shipped filter-leaf docs with no
+            # query-term posting here that satisfy the terms-false
+            # tree match at the constant 1.0. (Candidates — even
+            # tree-false ones — are excluded: a term-doc must never
+            # re-enter at the constant after the real evaluation.)
+            if fmap is not None:
+                bd, bb = fmap
+                bsel = ~np.isin(bd, pre_mask_docs)
+                if allowed is not None:
+                    bsel &= np.isin(bd, allowed)
+                bd2, bb2 = bd[bsel], bb[bsel]
+                if bd2.size:
+                    okb = _eval_bits_tree(bool_spec["tree"], fbitmap,
+                                          fconst, bb2)
+                    bd2 = bd2[okb]
+                    doc_ids = np.concatenate([doc_ids, bd2])
+                    doc_scores = np.concatenate(
+                        [doc_scores, np.ones(bd2.size)])
+    if not spec.keep_all and doc_ids.size > k:
+        # exact top-k by (score DESC, doc_id ASC) — the same tie-break
+        # as the global rank window and the oracle; a plain argpartition
+        # on score breaks exact-score ties arbitrarily and can drop the
+        # lower-doc_id doc the final ranking would have kept
+        sel = np.lexsort((doc_ids, -doc_scores))[:k]
+        doc_ids, doc_scores = doc_ids[sel], doc_scores[sel]
+    return doc_ids, doc_scores, None
+
+
+def _split_by_query(right: pd.DataFrame) -> dict:
+    """Cogrouped per-doc rows (query_id, doc_id, allow, fbits) of one
+    shard → query_id → (doc_ids, allow, fbits) arrays."""
+    if not len(right):
+        return {}
+    q = right["query_id"].to_numpy(dtype=np.int64)
+    order = np.argsort(q, kind="stable")
+    q = q[order]
+    cols = [right[c].to_numpy(dtype=np.int64)[order]
+            for c in ("doc_id", "allow", "fbits")]
+    cuts = np.flatnonzero(q[1:] != q[:-1]) + 1
+    starts = np.concatenate(([0], cuts))
+    ends = np.concatenate((cuts, [q.size]))
+    return {int(q[s]): tuple(c[s:e] for c in cols)
+            for s, e in zip(starts.tolist(), ends.tolist())}
+
+
+def _make_scorer(specs: dict, k: int, prune: bool, combine: str = "sum",
+                 tie_breaker: float = 0.0):
+    """Scorer for one SHARD of a query batch: `score(postings, right)`
+    scores every query of `specs` (query_id → QuerySpec) in one Python
+    call and returns their CANDIDATE_SCHEMA rows.
+
+    postings: the shard's pruned postings rows (term, blocks) for every
+    term the batch reads. Each block decodes at most once per call and is
+    shared by all queries that read it (_ShardPostings); block-max
+    pruning still skips the blocks no query needs.
+
+    right (cogroup form, None otherwise): the shard's per-doc
+    (query_id, doc_id, allow, fbits) rows from the one documents scan,
+    routed by pmod(xxhash64(doc_id), n_shards) — the index's own
+    doc-shard function. allow=1 marks a doc passing the query's conjunct
+    filters (`term lang:de`): a `flt` query restricts to that set
+    IN-SHARD — before θ, the AND/phrase gates and the per-shard top-k cut
+    — so filtered queries keep the cut and block-max pruning ON. This is
+    the semi-join moved inside the scorer, exact. fbits carries the doc's
+    positive filter-leaf bitmask for in-shard boolean-tree evaluation.
+
+    Per query (_score_query), rows are (possibly fielded) posting lists:
+    each carries weight = idf·boost, avgdl (per-field) and a group — the
+    base query term the row belongs to. Per doc: contributions reduce
+    WITHIN a group (max → OpenSearch best_fields/dis_max; sum →
+    BM25F-lite), then sum across groups in ascending group order
+    (float-deterministic, matching the oracle). Single-field indexes have
+    one row per group, so both combines degenerate to the exact BM25 sum.
+    Quoted phrases are required groups, checked before the per-shard cut;
+    pruning is off for phrase, AND, floored and tree queries (a skipped
+    block would lose position data or bias θ)."""
+    terms_of = {qid: spec.terms() for qid, spec in specs.items()}
+
+    def score(postings: pd.DataFrame, right: pd.DataFrame | None = None
+              ) -> pd.DataFrame:
+        sp = _ShardPostings(postings)
+        by_q = _split_by_query(right) if right is not None else {}
+        qs, ds, ss, bs = [], [], [], []
+        for qid, spec in specs.items():
+            r = by_q.get(qid)
+            if sp.rows_of.keys().isdisjoint(terms_of[qid]):
+                if not (spec.fast_tree and r is not None):
+                    continue
+                res = _filter_only_matches(spec, r, k)
+            elif spec.excl_only:
+                excl = _excluded(spec, sp)
+                if excl is None:
+                    continue
+                res = (excl, np.zeros(excl.size), None)
+            else:
+                allowed = fmap = None
+                if spec.flt:
+                    allowed = (np.unique(r[0][r[1] == 1]) if r is not None
+                               else np.empty(0, np.int64))
+                if r is not None:
+                    nz = r[2] != 0
+                    if nz.any():
+                        fd, fb = r[0][nz], r[2][nz]
+                        o = np.argsort(fd)
+                        fmap = (fd[o], fb[o])
+                res = _score_query(spec, sp, k, prune, combine, tie_breaker,
+                                   allowed, fmap)
+            if res is None or not res[0].size:
+                continue
+            d, s, b = res
+            qs.append(np.full(d.size, qid, dtype=np.int32))
+            ds.append(d.astype(np.int64))
+            ss.append(s.astype(np.float64))
+            bs.append(b if b is not None else np.zeros(d.size, np.int64))
+        if not qs:
             return pd.DataFrame({"query_id": [], "doc_id": [],
                                  "score": [], "bits": []}
                                 ).astype({"query_id": "int32",
                                           "doc_id": "int64",
                                           "score": "float64",
                                           "bits": "int64"})
-        ids = np.concatenate(ids_parts)
-        scores = np.concatenate(sc_parts)
-        grps = np.concatenate(grp_parts)
-        # stable lexsort: primary doc (unsigned), secondary group — within a
-        # (doc, group) run the original ascending fielded-term order survives
-        order = np.lexsort((grps, ids.view(np.uint64)))
-        ids, scores, grps = ids[order], scores[order], grps[order]
-        # (doc, group) segments
-        new_doc = np.concatenate(([True], ids[1:] != ids[:-1]))
-        new_seg = new_doc | np.concatenate(([True], grps[1:] != grps[:-1]))
-        seg_idx = np.flatnonzero(new_seg)
-        if combine == "max":
-            seg_scores = np.maximum.reduceat(scores, seg_idx)
-            if tie_breaker > 0.0:
-                # OpenSearch dis_max tie_breaker: max + tb*(sum - max);
-                # the sum accumulates in the same ascending fielded-term
-                # order as the oracle (float-deterministic)
-                seg_sums = np.add.reduceat(scores, seg_idx)
-                seg_scores = seg_scores + tie_breaker * (seg_sums
-                                                         - seg_scores)
-        else:
-            seg_scores = np.add.reduceat(scores, seg_idx)
-        seg_ids = ids[seg_idx]
-        # doc segments over the (doc, group) reduction
-        doc_start = np.flatnonzero(
-            np.concatenate(([True], seg_ids[1:] != seg_ids[:-1])))
-        doc_ids = seg_ids[doc_start]
-        doc_scores = np.add.reduceat(seg_scores, doc_start)
-        if (excl is not None or allowed is not None) and doc_ids.size:
-            # negation (and the filter-allowed restriction) resolve
-            # in-shard: excluded docs leave before the AND/phrase filters
-            # and the per-shard top-k cut (boolean trees never carry
-            # in-scorer negation — the mask handles NOT there)
-            keep_x = np.ones(doc_ids.size, dtype=bool)
-            if excl is not None:
-                keep_x &= ~np.isin(doc_ids, excl)
-            if allowed is not None:
-                keep_x &= np.isin(doc_ids, allowed)
-            doc_ids, doc_scores = doc_ids[keep_x], doc_scores[keep_x]
-            if not keep_x.all() and expected != 0:
-                # the (doc,group) segments feed the AND counts — filter them
-                # consistently with the surviving docs
-                seg_keep = np.ones(seg_ids.size, dtype=bool)
-                if excl is not None:
-                    seg_keep &= ~np.isin(seg_ids, excl)
-                if allowed is not None:
-                    seg_keep &= np.isin(seg_ids, allowed)
-                seg_ids = seg_ids[seg_keep]
-                doc_start = (np.flatnonzero(np.concatenate(
-                    ([True], seg_ids[1:] != seg_ids[:-1])))
-                    if seg_ids.size else np.empty(0, np.int64))
-        if expected != 0:
-            # AND: required count comes from the QUERY (n_groups column),
-            # not from the rows present in this shard — a shard lacking one
-            # query term entirely must yield zero AND matches. A NEGATIVE
-            # n_groups is minimum_should_match: at least |n| distinct
-            # groups must match (OR with a floor — OpenSearch query_string
-            # minimum_should_match); scoring stays the sum of matches
-            doc_group_counts = np.add.reduceat(
-                np.ones(seg_ids.size, dtype=np.int64), doc_start)
-            keep = (doc_group_counts == expected if expected > 0
-                    else doc_group_counts >= -expected)
-            doc_ids, doc_scores = doc_ids[keep], doc_scores[keep]
-        pos_data: dict = {}
-        if phrase_terms:
-            for t, lst in pos_acc.items():
-                if lst:
-                    ids_c = np.concatenate([x[0] for x in lst])
-                    tfs_c = np.concatenate([x[1] for x in lst])
-                    pos_c = np.concatenate([x[2] for x in lst])
-                    pos_data[t] = (np.repeat(ids_c, tfs_c), pos_c)
-        if phrases:
-            # a group matches a doc iff ANY of its variants matches
-            # (precomputed in the two-pass path)
-            matched = matched_pre if matched_pre is not None else [
-                (np.unique(np.concatenate(
-                    [_match_phrase(pos_data, var, grp[0])
-                     for var in grp[1]]))
-                 if grp[1] else np.empty(0, np.int64))
-                for grp in phrases
-            ]
-            if phrase_mode == "any":
-                docs_any = (np.unique(np.concatenate(matched)) if matched
-                            else np.empty(0, np.int64))
-                return pd.DataFrame({
-                    "query_id": np.full(docs_any.size, qid, dtype=np.int32),
-                    "doc_id": docs_any.astype(np.int64),
-                    "score": np.zeros(docs_any.size, dtype=np.float64),
-                    "bits": np.zeros(docs_any.size, dtype=np.int64),
-                })
-            mask = np.ones(doc_ids.size, dtype=bool)
-            for m in matched:
-                mask &= np.isin(doc_ids, m)
-            doc_ids, doc_scores = doc_ids[mask], doc_scores[mask]
-        if bool_spec is not None and (doc_ids.size or fmap is not None):
-            # presence matrix over the (doc, group) segments, then evaluate
-            # the boolean tree vectorized; phrase keys resolve through the
-            # positional matcher (any field variant satisfies the phrase).
-            # Scores stay the sum of matched positive clauses — negated
-            # leaves carry idf 0, so they gate matching without scoring.
-            # NOTE the gate above: the block must still run with ZERO
-            # surviving candidates whenever filter-leaf docs were shipped
-            # (fmap) — a conjunct filter that empties a shard's term
-            # candidates must not suppress branch B's filter-only matches.
-            M = np.zeros((doc_ids.size, n_groups), dtype=bool)
-            if doc_ids.size:
-                seg_groups = grps[seg_idx]
-                seg_ids_b = ids[seg_idx]  # pre-filter segments: a seg_id
-                # the allowed-restriction dropped must not alias another
-                # doc's row
-                du = doc_ids.view(np.uint64)
-                su = seg_ids_b.view(np.uint64)
-                rows_idx = np.searchsorted(du, su)
-                rows_c = np.minimum(rows_idx, max(doc_ids.size - 1, 0))
-                valid = du[rows_c] == su
-                M[rows_c[valid], seg_groups[valid]] = True
-            ph_pres = {}
-            for key, (slop_b, vars_) in bool_spec["phrases"].items():
-                mlist = [_match_phrase(pos_data, var, slop_b)
-                         for var in vars_]
-                md = (np.unique(np.concatenate(mlist)) if mlist
-                      else np.empty(0, np.int64))
-                ph_pres[key] = np.isin(doc_ids, md)
-            # filter-leaf truth values (in-shard tree evaluation): the
-            # cogroup shipped each candidate's POSITIVE-form leaf bitmask;
-            # docs absent from the map satisfied no positive leaf
-            fbitmap = bool_spec.get("fbitmap") or {}
-            fconst = bool_spec.get("fconst") or {}
-            fvec = np.zeros(doc_ids.size, dtype=np.int64)
-            if fbitmap and fmap is not None and doc_ids.size \
-                    and fmap[0].size:
-                pos_f = np.searchsorted(fmap[0], doc_ids)
-                pos_c = np.minimum(pos_f, fmap[0].size - 1)
-                hit = fmap[0][pos_c] == doc_ids
-                fvec[hit] = fmap[1][pos_c[hit]]
-
-            def _ev(node):
-                if isinstance(node, str):
-                    if node in ph_pres:
-                        return ph_pres[node]
-                    if node in fbitmap:
-                        bit, inv = fbitmap[node]
-                        v = ((fvec >> np.int64(bit)) & 1).astype(bool)
-                        return ~v if inv else v
-                    if node in fconst:
-                        return np.full(doc_ids.size, fconst[node],
-                                       dtype=bool)
-                    gi = group_of.get(node)
-                    if gi is None:  # term absent from the whole index
-                        return np.zeros(doc_ids.size, dtype=bool)
-                    return M[:, gi]
-                op = node[0]
-                if op == "not":
-                    return ~_ev(node[1])
-                acc = _ev(node[1])
-                for c in node[2:]:
-                    acc = (acc & _ev(c)) if op == "and" else (acc | _ev(c))
-                return acc
-
-            bitmap = bool_spec.get("bitmap")
-            if bitmap:
-                # tree has FILTER leaves: the scorer cannot decide the tree
-                # (no doc metadata here) — emit the term/phrase presence
-                # bits instead and let the plan evaluate the full tree
-                # JVM-side after joining the metadata in. No cut here
-                # (keep_all rides the qterms column for these queries).
-                bits_vec = np.zeros(doc_ids.size, dtype=np.int64)
-                for key, b in bitmap.items():
-                    if key in ph_pres:
-                        pres = ph_pres[key]
-                    else:
-                        gi = group_of.get(key)
-                        if gi is None:  # absent from the whole index
-                            continue
-                        pres = M[:, gi]
-                    bits_vec |= pres.astype(np.int64) << np.int64(b)
-                return pd.DataFrame({
-                    "query_id": np.full(doc_ids.size, qid, dtype=np.int32),
-                    "doc_id": doc_ids.astype(np.int64),
-                    "score": doc_scores.astype(np.float64),
-                    "bits": bits_vec,
-                })
-            pre_mask_docs = doc_ids
-            bmask = _ev(bool_spec["tree"])
-            doc_ids, doc_scores = doc_ids[bmask], doc_scores[bmask]
-            if fbitmap or fconst:
-                # constant-score floor for filter-leaf trees: a doc whose
-                # positive term leaves contributed nothing (matched via a
-                # filter leaf / NOT-only probes) scores the OpenSearch
-                # constant 1.0 — identical to the JVM-side floor the
-                # legacy bits path applies after its metadata join
-                doc_scores = np.where(doc_scores > 0.0, doc_scores, 1.0)
-                # branch B IN-SHARD: shipped filter-leaf docs with no
-                # query-term posting here that satisfy the terms-false
-                # tree match at the constant 1.0. (Candidates — even
-                # tree-false ones — are excluded: a term-doc must never
-                # re-enter at the constant after the real evaluation.)
-                if fmap is not None:
-                    bd, bb = fmap
-                    bsel = ~np.isin(bd, pre_mask_docs)
-                    if allowed is not None:
-                        bsel &= np.isin(bd, allowed)
-                    bd2, bb2 = bd[bsel], bb[bsel]
-                    if bd2.size:
-                        okb = _eval_bits_tree(bool_spec["tree"], fbitmap,
-                                              fconst, bb2)
-                        bd2 = bd2[okb]
-                        doc_ids = np.concatenate([doc_ids, bd2])
-                        doc_scores = np.concatenate(
-                            [doc_scores, np.ones(bd2.size)])
-        if not keep_all_q and doc_ids.size > k:
-            # exact top-k by (score DESC, doc_id ASC) — the same tie-break
-            # as the global rank window and the oracle; a plain argpartition
-            # on score breaks exact-score ties arbitrarily and can drop the
-            # lower-doc_id doc the final ranking would have kept
-            sel = np.lexsort((doc_ids, -doc_scores))[:k]
-            doc_ids, doc_scores = doc_ids[sel], doc_scores[sel]
-        return pd.DataFrame({
-            "query_id": np.full(doc_ids.size, qid, dtype=np.int32),
-            "doc_id": doc_ids.astype(np.int64),
-            "score": doc_scores.astype(np.float64),
-            "bits": np.zeros(doc_ids.size, dtype=np.int64),
-        })
-
-    if not cogroup:
-        # single-argument form (a 2-arg function would receive the group
-        # KEY as its first argument from applyInPandas)
-        def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _score(pdf)
-        return score_shard
-
-    def score_cogroup(left: pd.DataFrame, right: pd.DataFrame):
-        import json as _json
-
-        import numpy as np
-
-        empty = pd.DataFrame({"query_id": [], "doc_id": [],
-                              "score": [], "bits": []}
-                             ).astype({"query_id": "int32",
-                                       "doc_id": "int64",
-                                       "score": "float64",
-                                       "bits": "int64"})
-        # carrier row (fast filter-leaf trees): delivers the tree spec +
-        # conjunct flag so shards with NO term postings still emit their
-        # filter-only matches
-        docs_r = right
-        spec_json, carrier_allow = "", 0
-        if "spec" in right.columns and len(right):
-            cmask = right["spec"].astype(str) != ""
-            if cmask.any():
-                crow = right[cmask].iloc[0]
-                spec_json = str(crow["spec"])
-                carrier_allow = int(crow["allow"])
-            docs_r = right[~cmask]
-        if len(left) == 0:
-            if not spec_json or not len(docs_r):
-                # allowed-only group of a conjunct-filtered query: no
-                # query-term posting here — nothing can score
-                return empty
-            # B-only: filter-only matches where the query has no postings
-            spec = _json.loads(spec_json)
-            dids = docs_r["doc_id"].to_numpy(dtype=np.int64)
-            fb = docs_r["fbits"].to_numpy(dtype=np.int64)
-            if carrier_allow:
-                ok_a = docs_r["allow"].to_numpy(dtype=np.int64) == 1
-                dids, fb = dids[ok_a], fb[ok_a]
-            okb = _eval_bits_tree(spec["tree"], spec.get("fbitmap") or {},
-                                  spec.get("fconst") or {}, fb)
-            dids = np.sort(dids[okb])
-            if dids.size > k:
-                # all tie at the constant 1.0: the global rank keeps the
-                # k lowest doc_ids (signed asc — same as the rank window)
-                dids = dids[:k]
-            return pd.DataFrame({
-                "query_id": np.full(
-                    dids.size, int(right["query_id"].iloc[0]),
-                    dtype=np.int32),
-                "doc_id": dids.astype(np.int64),
-                "score": np.ones(dids.size, dtype=np.float64),
-                "bits": np.zeros(dids.size, dtype=np.int64),
-            })
-        allowed = None
-        if "flt" in left.columns and bool(left["flt"].iloc[0]):
-            mask = (docs_r["allow"] == 1) if "allow" in docs_r.columns \
-                else slice(None)
-            allowed = np.unique(
-                docs_r.loc[mask, "doc_id"].to_numpy(dtype=np.int64))
-        fmap = None
-        if "fbits" in docs_r.columns and len(docs_r):
-            rr = docs_r[docs_r["fbits"] != 0]
-            if len(rr):
-                fd = rr["doc_id"].to_numpy(dtype=np.int64)
-                fb = rr["fbits"].to_numpy(dtype=np.int64)
-                o = np.argsort(fd)
-                fmap = (fd[o], fb[o])
-        return _score(left, allowed, fmap)
-    return score_cogroup
+        return pd.DataFrame({"query_id": np.concatenate(qs),
+                             "doc_id": np.concatenate(ds),
+                             "score": np.concatenate(ss),
+                             "bits": np.concatenate(bs)})
+    return score
 
 
 class Searcher:
@@ -1517,12 +1539,9 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
         tstats.update(exp)
         exp_terms[e.key] = sorted(exp)
 
-    # qterms: one row per (query, fielded term). group = the base query term;
-    # n_groups = the query's matching base-term count (AND semantics);
-    # kind = pos (scoring) / neg (NOT term) / negp (NOT-phrase term);
-    # phrase_json = the query's phrase spec for the matching pass.
-    import json as _json
-
+    # one QuerySpec per query (see QuerySpec): its scoring rows — one per
+    # (query, fielded term), group = the base query term — its negative
+    # terms and phrases, and its AND count, phrase and tree specs.
     def phrase_groups(phrs, slops=None):
         """Each phrase → [slop, variants]: one posting-term variant per
         field on fielded indexes (a doc satisfies the phrase if ANY field
@@ -1567,12 +1586,9 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
     # per-shard top-k cut ON (keep_all previously shipped the query's
     # whole candidate set to the rank window — r3 verdict).
     leaf_preds: dict[int, list] = {}  # qid -> [(bit, pos_pred_sql)]
-    # one spec-carrier right-side row per (fast-ft query, shard): delivers
-    # the tree spec + conjunct flag to shards where the query has NO term
-    # postings (empty left side), so their filter-only matches still emit
-    carriers: list = []  # (qid, bool_json, flt_flag)
 
-    qterm_rows = []
+    specs: dict[int, QuerySpec] = {}       # scoring queries
+    excl_specs: dict[int, QuerySpec] = {}  # match-all negation probes
     bitmaps: dict[int, dict] = {}
     for qid, p in parsed.items():
         # ft_fast: this filter-leaf tree evaluates fully IN-SHARD (leaf
@@ -1610,11 +1626,9 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
         pos_groups = phrase_groups(p.phrases, p.phrase_slops)
         if p.phrases and any(not g[1] for g in pos_groups):
             continue
-        phrase_json = _json.dumps(pos_groups) if p.phrases else ""
         live_np = [g for g in phrase_groups(p.not_phrases,
                                             p.not_phrase_slops) if g[1]]
-        negp_json = _json.dumps(live_np) if live_np else ""
-        bool_json = ""
+        spec = None
         if p.bool_tree is not None:
             bphrases = {key: phrase_groups(
                 [terms], [p.bool_phrase_slops.get(key, 0)])[0]
@@ -1656,9 +1670,6 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                         f"63 term/phrase leaves, got {len(leaves)}")
                 spec["bitmap"] = {key: i for i, key in enumerate(leaves)}
                 bitmaps[qid] = spec["bitmap"]
-            bool_json = _json.dumps(spec)
-            if p.bool_filters and ft_fast:
-                carriers.append((qid, bool_json, fl))
         # per-query AND-required count; 0 = OR / boolean-tree semantics
         # (an expansion clause counts as ONE group however many terms it
         # expanded to); NEGATIVE = minimum_should_match floor (at least
@@ -1669,6 +1680,11 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
         if (min_should_match > 1 and n_grp == 0 and p.bool_tree is None
                 and not p.match_all):
             n_grp = -int(min_should_match)
+        qs = QuerySpec(n_groups=n_grp,
+                       phrases=pos_groups if p.phrases else [],
+                       tree=spec, keep_all=bool(ka), flt=bool(fl),
+                       fast_tree=bool(ft_fast),
+                       negp=live_np, excl_only=p.match_all)
 
         def _exp_rows(e, gkey, scored):
             """Scoring rows of one expansion clause: every vocabulary match
@@ -1684,8 +1700,7 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                 else:
                     t_idf = idf(n_docs, tstats[ft][0]) if scored else 0.0
                     b, af = boost_e, avgdl
-                qterm_rows.append((qid, ft, t_idf, "pos", b, gkey, af,
-                                   n_grp, phrase_json, bool_json, ka, fl))
+                qs.rows.append((ft, t_idf * b, gkey, af))
 
         if not p.match_all:
             for e in live_exps:
@@ -1707,71 +1722,55 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                         t_idf, boost, av = (idf(nf, tstats[ft][0]),
                                             float(fields[fld]), af)
                     boost *= float(p.boosts.get(t, 1.0))  # ^boost on idf
-                    qterm_rows.append((qid, ft, t_idf, "pos", boost, t, av,
-                                       n_grp, phrase_json, bool_json, ka, fl))
+                    qs.rows.append((ft, t_idf * boost, t, av))
             if p.bool_tree is not None:
                 # NOT-context-only leaves: fetched for presence bits, idf 0
                 # so they never contribute score
                 for t in p.bool_neg_terms:
                     for fld, ft in variants(t):
                         av = avgdl if fld is None else fstats[fld][1]
-                        qterm_rows.append((qid, ft, 0.0, "pos", 1.0, t, av,
-                                           n_grp, phrase_json, bool_json,
-                                           ka, fl))
-        # match-all queries resolve negation externally (their candidates
-        # come from the documents scan, not the scorer); scoring queries
-        # resolve it IN-SHARD ('negs'/'negps' rows ride the same pandas
-        # group — doc-sharding co-locates a doc's negative postings), which
-        # keeps per-shard top-k cuts and block pruning on
-        kn, knp = ("neg", "negp") if p.match_all else ("negs", "negps")
-        for t in neg:
-            for fld, ft in variants(t):
-                qterm_rows.append((qid, ft, 0.0, kn, 1.0, t,
-                                   avgdl if fld is None else fstats[fld][1],
-                                   0, "", "", ka, fl))
-        # negated expansions (`-te*`, `-term~1`): docs matching ANY
-        # expansion term are excluded — each term rides as its own negative
-        # row (in-shard for scoring queries, external probe for match-all)
-        for ft in sorted({t for e in p.not_expansions
-                          for t in exp_terms.get(e.key, [])}):
-            av = fstats[ft.split(":", 1)[0]][1] if fields else avgdl
-            qterm_rows.append((qid, ft, 0.0, kn, 1.0, ft, av,
-                               0, "", "", ka, fl))
-        for ft in sorted({t for g in live_np for var in g[1] for t in var}):
-            # variants already carry posting-term keys (fielded or bare)
-            qterm_rows.append((qid, ft, 0.0, knp, 1.0, ft, avgdl,
-                               0, negp_json, "", ka, fl))
-    if not qterm_rows and not matchall_qids and not ft_qids:
+                        qs.rows.append((ft, 0.0, t, av))
+        # negative clauses: scoring queries resolve them IN-SHARD (doc-
+        # sharding co-locates a doc's negative postings with its positive
+        # ones), which keeps per-shard top-k cuts and block pruning on;
+        # match-all queries run the same spec as an exclusion probe
+        # (their candidates come from the documents scan, not the scorer).
+        # Negated expansions (`-te*`, `-term~1`) exclude docs matching ANY
+        # expansion term.
+        qs.negs = ([ft for t in neg for _, ft in variants(t)]
+                   + sorted({t for e in p.not_expansions
+                             for t in exp_terms.get(e.key, [])}))
+        if not p.match_all:
+            if qs.terms() or qs.fast_tree:
+                specs[qid] = qs
+        elif qs.terms():
+            excl_specs[qid] = qs
+    if not specs and not matchall_qids and not ft_qids:
         return spark.createDataFrame(
             [], "query_id int, rank int, doc_id long, url string, score double")
 
     has_filters = any(p.filters for p in parsed.values())
-    # external anti-join only for match-all queries (scoring queries handle
-    # negation in-scorer and keep their top-k cuts)
-    has_ext_neg = any(p.match_all and (p.not_terms or p.not_phrases
-                                       or p.not_expansions)
-                      for p in parsed.values())
+
+    def postings_scan(q_specs: dict) -> DataFrame:
+        """The batch's postings rows, pruned by bucket (partition
+        directories) and term (row-group stats), one per (term, shard,
+        segment), grouped by shard: every query's terms ride in the
+        scorer closure, so each posting list ships and decodes once."""
+        terms = sorted({t for s in q_specs.values() for t in s.terms()})
+        buckets = sorted({tstats[t][1] for t in terms})
+        return (sx.postings
+                .filter(F.col("bucket").isin(buckets) &
+                        F.col("term").isin(terms))
+                .select("shard", "term", "blocks")
+                .groupBy("shard"))
+
+    def postings_only(score):
+        # applyInPandas hands a two-argument function the group key first
+        return lambda postings: score(postings)
 
     candidates = None
-    probe = None
-    if qterm_rows or carriers:
-        buckets = sorted({tstats[r[1]][1] for r in qterm_rows})
-        live_terms = sorted({r[1] for r in qterm_rows})
-
-        qterms = spark.createDataFrame(
-            qterm_rows,
-            "query_id int, term string, idf double, kind string, "
-            "boost double, group string, avgdl double, n_groups int, "
-            "phrase_json string, bool_json string, keep_all int, flt int")
-        postings = (sx.postings
-                    .filter(F.col("bucket").isin(buckets) &
-                            F.col("term").isin(live_terms)))
-        probe = postings.join(F.broadcast(qterms), "term")
-
-        pos_probe = probe.filter(
-            F.col("kind").isin(["pos", "negs", "negps"]))
-        # keep_all=False: the qterms keep_all column carries the PER-QUERY
-        # flag, so only filter-leaf-tree queries skip their per-shard cut
+    if specs:
+        score = _make_scorer(specs, k_page, prune, combine, tie_breaker)
         if cg:
             # ONE pruned documents scan serves every filtered query in the
             # batch (r3 verdict: Q filtered queries used to plan Q scans):
@@ -1814,52 +1813,27 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                     .select(F.col("s.query_id").alias("query_id"), "shard",
                             F.col("doc_id").cast("long").alias("doc_id"),
                             F.col("s.allow").alias("allow"),
-                            F.col("s.fbits").alias("fbits"),
-                            F.lit("").alias("spec")))
+                            F.col("s.fbits").alias("fbits")))
             else:  # filtered queries exist but none has a live predicate
                 allowed_df = spark.createDataFrame(
                     [], "query_id int, shard int, doc_id long, "
-                        "allow int, fbits long, spec string")
-            if carriers:
-                # doc_id 0, NOT null: a null would make Arrow hand pandas
-                # a float64 doc_id column for the whole group, silently
-                # rounding real 64-bit ids; carrier rows are excluded from
-                # the doc rows by their non-empty spec regardless
-                crows = [(q, s, 0, int(a), 0, spec)
-                         for q, spec, a in carriers
-                         for s in range(int(sx.n_shards))]
-                allowed_df = allowed_df.unionByName(spark.createDataFrame(
-                    crows, "query_id int, shard int, doc_id long, "
-                           "allow int, fbits long, spec string"))
-            candidates = pos_probe.groupBy("query_id", "shard").cogroup(
-                allowed_df.groupBy("query_id", "shard")
-            ).applyInPandas(
-                _make_scorer(k_page, mode, prune, False, combine,
-                             phrase_mode="all", cogroup=True,
-                             tie_breaker=tie_breaker),
-                CANDIDATE_SCHEMA)
+                        "allow int, fbits long")
+            candidates = postings_scan(specs).cogroup(
+                allowed_df.groupBy("shard")
+            ).applyInPandas(score, CANDIDATE_SCHEMA)
         else:
-            candidates = pos_probe.groupBy("query_id", "shard").applyInPandas(
-                _make_scorer(k_page, mode, prune, False, combine,
-                             phrase_mode="all", tie_breaker=tie_breaker),
-                CANDIDATE_SCHEMA)
+            candidates = postings_scan(specs).applyInPandas(
+                postings_only(score), CANDIDATE_SCHEMA)
 
-    # match-all negation probes (the excluded doc sets) are built up front
-    # so the per-query loop below can anti-join BEFORE its top-k cut
+    # match-all negation probes (the excluded doc sets), through the same
+    # shard scorer, are built up front so the per-query loop below can
+    # anti-join BEFORE its top-k cut
     neg_union = None
-    if has_ext_neg and probe is not None:
-        neg_probe = probe.filter(F.col("kind") == "neg") \
-            .withColumn("kind", F.lit("pos"))
-        neg_docs = neg_probe.groupBy("query_id", "shard").applyInPandas(
-            _make_scorer(k, "or", False, True, combine), CANDIDATE_SCHEMA
+    if excl_specs:
+        excl = _make_scorer(excl_specs, k, False, combine, tie_breaker)
+        neg_union = postings_scan(excl_specs).applyInPandas(
+            postings_only(excl), CANDIDATE_SCHEMA
         ).select("query_id", "doc_id")
-        negp_probe = probe.filter(F.col("kind") == "negp") \
-            .withColumn("kind", F.lit("pos"))
-        negp_docs = negp_probe.groupBy("query_id", "shard").applyInPandas(
-            _make_scorer(k, "or", False, True, combine, phrase_mode="any"),
-            CANDIDATE_SCHEMA
-        ).select("query_id", "doc_id")
-        neg_union = neg_docs.unionByName(negp_docs)
 
     # Boolean trees with filter leaves. FAST (monotone, default-false)
     # trees were decided entirely IN-SHARD: candidates already hold their

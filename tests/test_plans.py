@@ -3,6 +3,7 @@
 Python in the hot path) fails here even while results stay correct."""
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def _plan(df) -> str:
@@ -25,13 +26,15 @@ def test_postings_scan_is_pruned(spark, built_index):
 
 
 def test_query_probe_broadcasts_small_side(spark, built_index):
-    """Query terms (tiny) must broadcast onto postings — a shuffled join here
-    would reshuffle the index per query."""
+    """The postings probe never shuffle-joins the index: query terms ride
+    in the scorer closure (no join at all), and the plan's one join is the
+    broadcast display join."""
     from ipfs_search_spark.plans.query import search
     io, _ = built_index
     df = search(spark, io, [(0, "data spark")], k=5)
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_display_join_broadcasts_topk(spark, built_index):
@@ -90,29 +93,62 @@ def test_brute_topk_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in _plan(top)
 
 
-def test_per_shard_cut_is_per_query(spark):
-    """keep_all is per-query: an unfiltered query's (query, shard) scorer
-    group emits at most k rows even when ANOTHER query in the batch carries
-    filters — only the filtered query ships its full candidate doc set
-    (its filter applies post-scoring)."""
+def _postings(*terms):
+    """One shard's postings frame: (term, doc_ids, tf) → a blocks row."""
     import numpy as np
     import pandas as pd
 
     from ipfs_search_spark.functions.codec import encode_blocks
-    from ipfs_search_spark.plans.query import _make_scorer
+    rows = []
+    for term, ids, tf in terms:
+        ids = np.asarray(ids, dtype=np.int64)
+        rows.append(encode_blocks(ids, np.full(ids.size, tf, np.int64),
+                                  50 + ids % 7, block_size=128))
+    return pd.DataFrame({"shard": [0] * len(terms),
+                         "term": [t[0] for t in terms], "blocks": rows})
 
-    ids = np.arange(100, dtype=np.int64)
-    blocks = encode_blocks(ids, np.full(100, 2, np.int64),
-                           np.full(100, 50, np.int64), block_size=128)
-    base = {"query_id": [0], "term": ["t"], "idf": [1.0], "kind": ["pos"],
-            "boost": [1.0], "group": ["t"], "avgdl": [50.0], "n_groups": [0],
-            "phrase_json": [""], "bool_json": [""], "blocks": [blocks],
-            "shard": [0]}
-    scorer = _make_scorer(10, "or", True, False, "sum", phrase_mode="all")
-    out_unfiltered = scorer(pd.DataFrame({**base, "keep_all": [0]}))
+
+def test_per_shard_cut_is_per_query(spark):
+    """keep_all is per-query: an unfiltered query emits at most k rows
+    from its shard call even when ANOTHER query of the same call keeps
+    all its candidates (a legacy filter-leaf tree, whose tree applies
+    after scoring)."""
+    from ipfs_search_spark.plans.query import QuerySpec, _make_scorer
+
+    postings = _postings(("t", range(100), 2))
+    row = ("t", 1.0, "t", 50.0)
+    cut, keep = QuerySpec(rows=[row]), QuerySpec(rows=[row], keep_all=True)
+    out_unfiltered = _make_scorer({0: cut}, 10, True)(postings)
     assert len(out_unfiltered) == 10  # cut applied for this query
-    out_filtered = scorer(pd.DataFrame({**base, "keep_all": [1]}))
-    assert len(out_filtered) == 100  # filtered query keeps all candidates
+    out_filtered = _make_scorer({0: keep}, 10, True)(postings)
+    assert len(out_filtered) == 100  # keep_all query keeps all candidates
+    # both in ONE shard call: each keeps its own cut
+    both = _make_scorer({0: cut, 1: keep}, 10, True)(postings)
+    assert (both["query_id"] == 0).sum() == 10
+    assert (both["query_id"] == 1).sum() == 100
+
+
+def test_shard_call_shares_terms_across_queries():
+    """Queries of one shard call read the same posting list `t` (decoded
+    once, shared): each query's rows equal its solo call."""
+    from ipfs_search_spark.plans.query import QuerySpec, _make_scorer
+
+    postings = _postings(("t", range(0, 300), 3), ("u", range(0, 300, 3), 1),
+                         ("v", range(100, 400), 2))
+    specs = {
+        0: QuerySpec(rows=[("t", 1.3, "t", 50.0), ("u", 2.1, "u", 50.0)]),
+        1: QuerySpec(rows=[("t", 1.3, "t", 50.0), ("v", 0.7, "v", 50.0)],
+                     n_groups=2),
+        2: QuerySpec(rows=[("t", 1.3, "t", 50.0)], negs=["u"]),
+        # another avgdl (a field's) for the same posting list
+        3: QuerySpec(rows=[("t", 1.3, "t", 80.0), ("u", 2.1, "u", 80.0)]),
+    }
+    batch = _make_scorer(specs, 10, True)(postings)
+    assert sorted(set(batch["query_id"])) == [0, 1, 2, 3]
+    for qid, spec in specs.items():
+        solo = _make_scorer({qid: spec}, 10, True)(postings)
+        got = batch[batch["query_id"] == qid].reset_index(drop=True)
+        assert got.equals(solo.reset_index(drop=True)), qid
 
 
 def test_mixed_batch_same_results_as_solo(spark, built_index):
@@ -126,6 +162,47 @@ def test_mixed_batch_same_results_as_solo(spark, built_index):
              search(spark, io, [(0, "data spark"), (1, "data lang:en")],
                     k=5).collect() if r["query_id"] == 0]
     assert mixed == alone
+
+
+@pytest.fixture(scope="module")
+def pos_index(spark, pages, tmp_path_factory):
+    from ipfs_search_spark.catalog import TableIO
+    from ipfs_search_spark.operators.index_build import build_index
+    io = TableIO(spark, str(tmp_path_factory.mktemp("isx-plans-pos")))
+    build_index(spark, pages, io, n_shards=4, n_buckets=16,
+                max_bytes=1 << 15, positions=True)
+    return io
+
+
+def test_batch_rows_equal_solo_runs(spark, pos_index):
+    """One search() call mixing every scorer shape returns, for every
+    query_id, exactly the rows of that query run alone. The batch scores
+    per shard: no join of postings with a query-term relation, and the
+    pandas scorer groups by shard alone."""
+    import re
+
+    from ipfs_search_spark.plans.query import Searcher
+    sx = Searcher(spark, pos_index)
+    batch = ["data spark", "+data spark -merge", "data spark lang:en",
+             "da* merge", "(data^2 OR spark) AND merge", "data OR NOT spark",
+             '"data spark"~2 merge', "lang:en -data", "lang:de OR merge"]
+    qs = list(enumerate(batch))
+    df = sx.search(qs, k=5)
+    rows = [tuple(r) for r in df.collect()]
+    for qid, q in qs:
+        got = [r for r in rows if r[0] == qid]
+        solo = [tuple(r) for r in sx.search([(qid, q)], k=5).collect()]
+        assert got == solo, q
+        assert solo, q
+    plan = _plan(df)
+    # the postings scan feeds the scorer directly: no join keyed on term
+    assert not re.search(r"keys \[\d+\]: \[term#", plan)
+    scorers = re.findall(
+        r"FlatMap(Co)?GroupsInPandas\n(?:.*\n)*?Arguments: (.*)", plan)
+    assert scorers
+    for co, args in scorers:
+        keys = re.findall(r"\[([^\]]*)\]", args)[:2 if co else 1]
+        assert all(re.fullmatch(r"shard#\d+", k) for k in keys), args
 
 
 def test_matchall_negation_is_bounded(spark, built_index):
@@ -150,38 +227,35 @@ def test_matchall_negation_is_bounded(spark, built_index):
 
 
 def test_filtered_query_cut_stays_on_in_shard():
-    """A `term lang:de` query's (query, shard) scorer group emits at most
-    k rows: the filter-allowed doc set rides the cogroup into the scorer,
-    the restriction happens in-shard, and the per-shard top-k cut stays ON
-    (r3 verdict: filtered queries used to ship their full candidate set)."""
+    """A `term lang:de` query emits at most k rows from its shard call:
+    the filter-allowed doc set rides the cogroup into the scorer, the
+    restriction happens in-shard, and the per-shard top-k cut stays ON
+    (filtered queries used to ship their full candidate set)."""
     import numpy as np
     import pandas as pd
 
-    from ipfs_search_spark.functions.codec import encode_blocks
-    from ipfs_search_spark.plans.query import _make_scorer
+    from ipfs_search_spark.plans.query import QuerySpec, _make_scorer
 
-    ids = np.arange(100, dtype=np.int64)
-    blocks = encode_blocks(ids, np.full(100, 2, np.int64),
-                           np.full(100, 50, np.int64), block_size=128)
-    left = pd.DataFrame({
-        "query_id": [0], "term": ["t"], "idf": [1.0], "kind": ["pos"],
-        "boost": [1.0], "group": ["t"], "avgdl": [50.0], "n_groups": [0],
-        "phrase_json": [""], "bool_json": [""], "blocks": [blocks],
-        "shard": [0], "keep_all": [0], "flt": [1]})
+    postings = _postings(("t", range(100), 2))
+    row = ("t", 1.0, "t", 50.0)
     allowed = pd.DataFrame({"query_id": [0] * 40, "shard": [0] * 40,
-                            "doc_id": np.arange(30, 70, dtype=np.int64)})
-    scorer = _make_scorer(10, "or", True, False, "sum",
-                          phrase_mode="all", cogroup=True)
-    out = scorer(left, allowed)
+                            "doc_id": np.arange(30, 70, dtype=np.int64),
+                            "allow": [1] * 40, "fbits": [0] * 40})
+    scorer = _make_scorer({0: QuerySpec(rows=[row], flt=True)}, 10, True)
+    out = scorer(postings, allowed)
     assert len(out) == 10  # cut ON despite the filter
     assert set(out["doc_id"]) <= set(range(30, 70))  # in-shard restriction
     # empty allowed side → the filter matches nothing in this shard
     empty = allowed.iloc[0:0]
-    assert len(scorer(left, empty)) == 0
+    assert len(scorer(postings, empty)) == 0
     # unfiltered query in the same cogroup: right side ignored
-    left0 = left.assign(flt=[0])
-    out0 = scorer(left0, empty)
-    assert len(out0) == 10 and not set(out0["doc_id"]) <= set(range(30, 70))
+    both = _make_scorer({0: QuerySpec(rows=[row], flt=True),
+                         1: QuerySpec(rows=[row])}, 10, True)
+    out0 = both(postings, empty)
+    assert len(out0) == 10 and set(out0["query_id"]) == {1}
+    assert not set(out0["doc_id"]) <= set(range(30, 70))
+    out1 = both(postings, allowed)
+    assert out1[out1["query_id"] == 0].reset_index(drop=True).equals(out)
 
 
 def test_filtered_batch_plans_one_documents_scan(spark, built_index):

@@ -162,3 +162,48 @@ def test_rate_windows_session(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         rate_windows(ev, "ts", slide="5 minutes", session_gap="10 minutes")
+
+
+def test_replay_harness_times_out_and_cleans_up(spark, monkeypatch,
+                                                tmp_path):
+    """The streaming oracle entries' replay harness raises TimeoutError
+    when the run has not finished (instead of handing a partial memory
+    table to the value comparison), and removes its temp dirs whether the
+    run finished or not."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    import __spark_entry__ as entry_mod
+    t0 = datetime.datetime(2024, 1, 1)
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(20), pa.int64()),
+        "ts": pa.array([t0 + datetime.timedelta(hours=i) for i in range(20)],
+                       pa.timestamp("us")),
+        "user_id": pa.array([i % 3 for i in range(20)], pa.int64()),
+        "event_type": ["view"] * 20,
+        "value": [1.0] * 20,
+        "props": [""] * 20,
+    }), str(tmp_path / "events.parquet"))
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(*a, **kw):
+        made.append(real_mkdtemp(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    qname = entry_mod._replay_events(spark, str(tmp_path), "replay_ok",
+                                     lambda stream: stream)
+    assert spark.table(qname).count() == 20 + 1  # + the sentinel
+    assert len(made) == 3 and not any(os.path.exists(d) for d in made)
+
+    made.clear()
+    monkeypatch.setattr(StreamingQuery, "awaitTermination",
+                        lambda self, timeout=None: False)
+    with pytest.raises(TimeoutError):
+        entry_mod._replay_events(spark, str(tmp_path), "replay_slow",
+                                 lambda stream: stream)
+    assert len(made) == 3 and not any(os.path.exists(d) for d in made)
