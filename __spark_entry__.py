@@ -1297,8 +1297,9 @@ def q_filter_tree(spark, sf_dir):
     """Filters as boolean-tree LEAVES (constant-score clauses): `lang:de OR
     merge` — a doc matches via the metadata clause OR the term; term
     matches score BM25, filter-only matches the constant 1.0, ties by
-    doc_id. The scorer emits term-presence bits and the tree compiles to a
-    Catalyst predicate evaluated after the metadata join. Reference:
+    doc_id. One documents scan ships each doc's filter-leaf bitmask to
+    its postings shard, and the shard scorer evaluates the whole tree
+    there before its per-shard top-k cut. Reference:
     query_string field clauses inside the boolean tree,
     /root/reference/docs/api.md:4."""
     from ipfs_search_spark.plans.query import search

@@ -547,6 +547,29 @@ _STAGING_POSTINGS = "_compacting_postings"
 _STAGING_TERM_STATS = "_compacting_term_stats"
 
 
+def covered_segment_ids(io: TableIO) -> set:
+    """The ids of the posting segments, after checking that every one has
+    its per-segment stats rows in segment_term_stats and segment_doc_stats.
+    Merged statistics are sums over those rows, so an uncovered segment (a
+    legacy append, or a batch torn after its posting_segments append) would
+    be silently undercounted: raise instead. A stats-only orphan (torn
+    before that append) is harmless: its docs are in `documents` and have
+    no postings yet. Three column-pruned segment_id scans."""
+    def ids(table):
+        if not io.exists(table):
+            return set()
+        return {r[0] for r in io.read(table)
+                .select("segment_id").distinct().collect()}
+    seg_ids = ids("posting_segments")
+    if not (seg_ids <= ids("segment_term_stats")
+            and seg_ids <= ids("segment_doc_stats")):
+        raise ValueError(
+            "a postings segment lacks its per-segment stats rows (legacy "
+            "append?) — merged statistics would silently undercount; "
+            "rebuild instead")
+    return seg_ids
+
+
 def compact_segments(io: TableIO) -> dict:
     """Fold streaming posting segments back into the base tables — the
     Lucene merge-down the reference gets from its OpenSearch backend's
@@ -573,9 +596,8 @@ def compact_segments(io: TableIO) -> dict:
     Like Lucene's merges, compaction must not run concurrently with
     ingest appends or Searcher construction.
 
-    Requires per-segment stats coverage (segment_term_stats /
-    segment_doc_stats rows for every segment) — the same gate the
-    incremental Searcher applies; raises ValueError on a legacy segment
+    Requires per-segment stats coverage (covered_segment_ids, the same
+    gate Searcher init applies); raises ValueError on an uncovered segment
     rather than silently undercounting df/n_docs."""
     if io.exists(COMPACTION_MANIFEST):
         return _install_compaction(io)
@@ -591,20 +613,7 @@ def compact_segments(io: TableIO) -> dict:
             "compact_segments needs the base total_dl (rebuild the base "
             "index, or compact via a full rebuild)")
     seg = io.read("posting_segments")
-    seg_ids = {r[0] for r in
-               seg.select("segment_id").distinct().collect()}
-
-    def _stat_ids(table):
-        if not io.exists(table):
-            return set()
-        return {r[0] for r in io.read(table)
-                .select("segment_id").distinct().collect()}
-    if not (seg_ids <= _stat_ids("segment_term_stats")
-            and seg_ids <= _stat_ids("segment_doc_stats")):
-        raise ValueError(
-            "compact_segments: a postings segment lacks its per-segment "
-            "stats rows (legacy append?) — merged statistics would "
-            "silently undercount; rebuild instead")
+    seg_ids = covered_segment_ids(io)
 
     # phase 1 — stage merged postings: only segment-touched (term, shard)
     # cells re-encode, at the BASE index's block size (a divergent merge

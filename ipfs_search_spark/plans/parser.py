@@ -105,9 +105,9 @@ Filters compose two ways:
   NOTE the constant is exactly 1.0 (OpenSearch's constant-score filter
   clause): a filter-only match can therefore outrank a term match whose
   BM25 total is below 1.0 (common low-idf terms, long docs) — ties at the
-  constant break by doc_id. The scorer emits per-doc term-presence bits;
-  the tree compiles to one Catalyst predicate evaluated after the metadata
-  join (plans/query.py _tree_sql).
+  constant break by doc_id. The shard scorer evaluates the whole tree on
+  per-doc term presence plus each doc's cogrouped filter-leaf bitmask
+  (plans/query.py _eval_tree).
 
 Restrictions (documented, errors not silent semantic changes):
 - a boolean query needs at least one positive clause (pure `NOT x` trees

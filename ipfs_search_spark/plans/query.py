@@ -42,7 +42,7 @@ Negation (`-term`, `-"a b"`) resolves IN-SHARD for scoring queries:
 doc-sharding co-locates a doc's negative-term postings with its positive
 ones, so they arrive in the same shard call, excluded docs leave before
 the per-shard cut, and block-max pruning stays ON with θ computed over
-surviving docs only — no external anti-join, no keep_all. Match-all
+surviving docs only — no external anti-join. Match-all
 (filter/negation-only) queries keep the external anti-join path (their
 candidates come from the documents scan, not the scorer); their excluded
 doc sets come from a second call of the same shard scorer.
@@ -51,16 +51,22 @@ Filter-only query strings are match-all-then-filter: every doc passing the
 filters at constant score 1.0, ranked by doc_id — per-query
 TakeOrderedAndProject when the query has no negative clauses.
 
-Boolean trees (parser.bool_tree — nested AND/OR/NOT with ^boost): every
-leaf term is fetched as a posting row (NOT-only leaves at idf 0 so they
-gate without scoring); the scorer builds a per-doc presence bitmask over
-the (doc, group) segments it already reduces, evaluates the tree with
-vectorized numpy boolean ops (phrase leaves resolve through the positional
-matcher), and filters before the per-shard top-k cut — doc-sharding makes
-both the scores and the mask complete within a shard, so the cut stays
-exact. Per-term ^boost multiplies idf (Lucene semantics). Pruning and
-AND-required counts are per-query (a batch can mix flat OR, flat AND,
-and boolean-tree queries).
+Boolean trees (parser.bool_tree — nested AND/OR/NOT with ^boost) take the
+same in-shard path, whatever their shape. Every leaf term is fetched as a
+posting row (NOT-only leaves at idf 0 so they gate without scoring); the
+scorer builds a per-doc presence bitmask over the (doc, group) segments
+it already reduces, evaluates the tree with vectorized numpy boolean ops
+(phrase leaves resolve through the positional matcher), and filters before
+the per-shard top-k cut — doc-sharding makes both the scores and the mask
+complete within a shard, so the cut stays exact. Filter leaves
+(`lang:de OR merge`) resolve through a per-doc leaf bitmask that the one
+documents scan routes to the doc's shard. A tree that can match a doc
+holding no query term — one with filter leaves, or a default-true tree
+like `a OR NOT b` whose shipped rows are every indexed doc — also emits
+those docs (branch B) at the constant 1.0 from the same shard call, cut
+to the shard's k lowest doc_ids. Per-term ^boost multiplies idf (Lucene
+semantics). Pruning and AND-required counts are per-query (a batch can
+mix flat OR, flat AND, and boolean-tree queries).
 """
 
 from __future__ import annotations
@@ -82,18 +88,13 @@ from ipfs_search_spark.functions.codec import (
     block_ub, decode_block, decode_block_positions, tfnorm,
 )
 from ipfs_search_spark.plans.parser import (
-    Expansion, Filter, Query, filter_to_sql, parse_query,
+    Expansion, Filter, Query, QueryParseError, filter_to_sql, parse_query,
 )
 
 CANDIDATE_SCHEMA = StructType([
     StructField("query_id", IntegerType()),
     StructField("doc_id", LongType()),
     StructField("score", DoubleType()),
-    # per-doc presence bitmask of the query's term/phrase tree leaves —
-    # populated ONLY for boolean trees carrying filter leaves (the final
-    # tree evaluation then happens JVM-side, where the doc metadata the
-    # filter leaves need is joinable); 0 everywhere else
-    StructField("bits", LongType()),
 ])
 
 
@@ -346,40 +347,16 @@ def _filters_pred(p: Query, doc_cols) -> str | None:
     return " AND ".join(preds) if preds else "true"
 
 
-def _tree_leaves(node) -> set:
-    """All string leaf keys of an encoded boolean tree."""
-    if isinstance(node, str):
-        return {node}
-    out: set = set()
-    for c in node[1:]:
-        out |= _tree_leaves(c)
-    return out
-
-
-def _neg_term_leaves(node, bool_filters: dict, neg: bool = False) -> bool:
-    """True when any term/phrase/expansion leaf sits in NEGATIVE context
-    (odd NOT depth). Such trees are non-monotone in term presence, so the
-    filter-only branch (which assumes all term leaves false) cannot be
-    reconciled with a per-shard-cut candidate set — those queries keep the
-    legacy keep_all + JVM-side tree evaluation."""
-    if isinstance(node, str):
-        return neg and node not in bool_filters
-    if node[0] == "not":
-        return _neg_term_leaves(node[1], bool_filters, not neg)
-    return any(_neg_term_leaves(c, bool_filters, neg) for c in node[1:])
-
-
 def _default_tree_const(node, bool_filters: dict) -> bool:
     """The tree's value at the DEFAULT valuation — every term/phrase/
     expansion leaf false, every filter leaf's positive form false (so a
     negated leaf reads true). This is what the tree evaluates to for a doc
     that contains no query term and matches no positive filter clause.
-    The in-shard fast path requires False: then every possible match
-    either holds a query term (a scorer candidate) or matches a positive
-    filter clause (shipped to its shard by the allowed/bits scan) — no
-    doc outside the cogroup can satisfy the query, so no unbounded
-    documents-scan branch is needed (`a OR NOT lang:en` has default True:
-    every non-english doc matches — that shape keeps the legacy path)."""
+    False: every possible match either holds a query term (a scorer
+    candidate) or matches a positive filter clause (shipped to its shard
+    by the documents scan). True (`a OR NOT lang:en`: every non-english
+    doc matches): the documents scan ships every indexed doc passing the
+    query's conjunct filters instead."""
     if isinstance(node, str):
         flt = bool_filters.get(node)
         return bool(flt.neg) if flt is not None else False
@@ -389,62 +366,29 @@ def _default_tree_const(node, bool_filters: dict) -> bool:
     return all(vals) if node[0] == "and" else any(vals)
 
 
-def _eval_bits_tree(node, fbitmap: dict, fconst: dict, bits):
-    """Vectorized terms-false tree evaluation over filter-leaf bitmasks:
-    term/phrase/expansion leaves read false, filter leaves read their
-    (possibly inverted) bit — the in-shard form of branch B's predicate."""
-    import numpy as np
+def _eval_tree(node, fbitmap: dict, fconst: dict, fbits, present: dict):
+    """Vectorized tree evaluation over n docs: filter leaves read their
+    (possibly inverted) bit of `fbits` (the docs' positive filter-leaf
+    bitmasks), leaves on columns this index lacks their constant, and
+    term/phrase/expansion leaves their `present` vector — a leaf missing
+    from it (absent from the index, or branch B's terms-false form) reads
+    false."""
     if isinstance(node, str):
         if node in fbitmap:
             bit, inv = fbitmap[node]
-            v = ((bits >> np.int64(int(bit))) & 1).astype(bool)
+            v = ((fbits >> np.int64(bit)) & 1).astype(bool)
             return ~v if inv else v
         if node in fconst:
-            return np.full(bits.size, bool(fconst[node]), dtype=bool)
-        return np.zeros(bits.size, dtype=bool)
+            return np.full(fbits.size, bool(fconst[node]), dtype=bool)
+        v = present.get(node)
+        return v if v is not None else np.zeros(fbits.size, dtype=bool)
     if node[0] == "not":
-        return ~_eval_bits_tree(node[1], fbitmap, fconst, bits)
-    acc = _eval_bits_tree(node[1], fbitmap, fconst, bits)
+        return ~_eval_tree(node[1], fbitmap, fconst, fbits, present)
+    acc = _eval_tree(node[1], fbitmap, fconst, fbits, present)
     for c in node[2:]:
-        nxt = _eval_bits_tree(c, fbitmap, fconst, bits)
+        nxt = _eval_tree(c, fbitmap, fconst, fbits, present)
         acc = (acc & nxt) if node[0] == "and" else (acc | nxt)
     return acc
-
-
-def _tree_sql(node, bool_filters: dict, bitmap: dict, doc_cols,
-              terms_false: bool = False) -> str:
-    """Compile an encoded boolean tree with filter leaves to a Spark SQL
-    predicate over (candidate ⋈ documents) rows: term/phrase leaves become
-    bit tests on the scorer-emitted `bits` column, filter leaves become
-    their (validated, escaped) metadata predicates. terms_false=True
-    renders the filter-only-satisfiable form (every term leaf false) —
-    the predicate for docs with no query term at all."""
-    if isinstance(node, str):
-        flt = bool_filters.get(node)
-        if flt is not None:
-            base = ("references" if flt.field == "references.name"
-                    else flt.field)
-            if base not in doc_cols:
-                return "true" if flt.neg else "false"
-            # coalesce: a NULL metadata value means the leaf does not
-            # match (and under NOT, that the doc is kept) — Lucene
-            # must/must_not semantics, not SQL 3-valued logic
-            return f"coalesce(({filter_to_sql(flt)}), false)"
-        if terms_false:
-            return "false"
-        b = bitmap.get(node)
-        if b is None:  # term absent from the whole index
-            return "false"
-        return f"((bits & {1 << b}) != 0)"
-    op = node[0]
-    if op == "not":
-        return ("(NOT " +
-                _tree_sql(node[1], bool_filters, bitmap, doc_cols,
-                          terms_false) + ")")
-    glue = " AND " if op == "and" else " OR "
-    return ("(" + glue.join(_tree_sql(c, bool_filters, bitmap, doc_cols,
-                                      terms_false)
-                            for c in node[1:]) + ")")
 
 
 @dataclass
@@ -463,21 +407,24 @@ class QuerySpec:
         minimum_should_match floor of |n| groups.
     phrases: required phrase groups [slop, variants]; a variant is a list
         of posting terms, and a group matches when any variant does.
-    tree: boolean-tree spec {tree, phrases, fbitmap/fconst | bitmap}.
-    keep_all: no per-shard cut (trees evaluated JVM-side on `bits`).
+    tree: boolean-tree spec {tree, phrases, fbitmap, fconst}; fbitmap:
+        filter leaf → [bit, invert] in the cogrouped `fbits`, fconst: leaf
+        on a column this index lacks → its constant truth value.
     flt: restrict to the query's cogrouped allowed doc set.
-    fast_tree: filter-leaf tree decided in-shard; a shard where the query
-        has no postings still emits its filter-only matches.
-    excl_only: match-all negation probe; emit the excluded docs."""
+    branch_b: the tree can match a doc holding no query term (filter
+        leaves, or default-true); such docs arrive on the cogroup's right
+        side and match at the constant 1.0, in every shard.
+    excl_only: match-all negation probe; emit the excluded docs.
+
+    Every query keeps its per-shard top-k cut."""
     rows: list = field(default_factory=list)
     negs: list = field(default_factory=list)
     negp: list = field(default_factory=list)
     n_groups: int = 0
     phrases: list = field(default_factory=list)
     tree: dict | None = None
-    keep_all: bool = False
     flt: bool = False
-    fast_tree: bool = False
+    branch_b: bool = False
     excl_only: bool = False
 
     def negp_terms(self) -> set:
@@ -577,28 +524,29 @@ def _excluded(spec: QuerySpec, sp: _ShardPostings):
     return np.unique(np.concatenate(parts)) if parts else None
 
 
-def _filter_only_matches(spec: QuerySpec, right, k: int):
-    """Filter-only matches of a fast filter-leaf tree in a shard where the
-    query has no postings: the cogrouped docs whose leaf bits satisfy the
-    tree with every term leaf false, at the constant score 1.0."""
-    dids, allow, fb = right
-    if spec.flt:
-        dids, fb = dids[allow == 1], fb[allow == 1]
-    okb = _eval_bits_tree(spec.tree["tree"], spec.tree.get("fbitmap") or {},
-                          spec.tree.get("fconst") or {}, fb)
-    dids = np.sort(dids[okb])
-    # all tie at the constant 1.0: the global rank keeps the k lowest
-    # doc_ids (signed asc — same as the rank window)
-    dids = dids[:k]
-    return dids, np.ones(dids.size, dtype=np.float64), None
+def _branch_b(spec: QuerySpec, fmap, allowed, seen=None):
+    """Branch B of a tree in one shard: the shipped docs (fmap: sorted
+    doc_ids, positive filter-leaf bits) that hold no query-term posting
+    here (not in `seen`; the full tree decides those), pass the conjunct
+    filters (`allowed`) and satisfy the tree with every term leaf false.
+    They match at the constant 1.0; the result stays doc_id-sorted."""
+    dids, fb = fmap
+    sel = np.ones(dids.size, dtype=bool)
+    if seen is not None:
+        sel &= ~np.isin(dids, seen)
+    if allowed is not None:
+        sel &= np.isin(dids, allowed)
+    dids, fb = dids[sel], fb[sel]
+    t = spec.tree
+    return dids[_eval_tree(t["tree"], t["fbitmap"], t["fconst"], fb, {})]
 
 
 def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
                  combine: str, tie_breaker: float, allowed=None, fmap=None):
-    """One query's candidates in one shard → (doc_ids, scores, bits|None),
-    or None when it has none. `allowed`: the query's filter-allowed docs
-    (flt queries); `fmap`: (sorted doc_ids, positive filter-leaf bits) of
-    the shard's docs matching any of its filter leaves."""
+    """One query's candidates in one shard → (doc_ids, scores), or None
+    when it has none. `allowed`: the query's filter-allowed docs (flt
+    queries); `fmap`: (sorted doc_ids, positive filter-leaf bits) of the
+    shard's docs shipped for a branch-B tree."""
 
     # scoring rows in ascending term order, one per (query row, postings
     # row): a term has several postings rows per shard on segmented
@@ -675,7 +623,7 @@ def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
     theta = 0.0
     solo = None
     best_i = None
-    if prune and n_rows > 1 and not spec.keep_all and expected == 0 \
+    if prune and n_rows > 1 and expected == 0 \
             and not phrases and bool_spec is None:
         best_i = int(np.argmax(term_max_ub))
         i = rows[best_i][0]
@@ -830,7 +778,7 @@ def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
         # Scores stay the sum of matched positive clauses — negated
         # leaves carry idf 0, so they gate matching without scoring.
         # NOTE the gate above: the block must still run with ZERO
-        # surviving candidates whenever filter-leaf docs were shipped
+        # surviving candidates whenever branch-B docs were shipped
         # (fmap) — a conjunct filter that empties a shard's term
         # candidates must not suppress branch B's filter-only matches.
         M = np.zeros((doc_ids.size, n_groups), dtype=bool)
@@ -845,104 +793,46 @@ def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
             rows_c = np.minimum(rows_idx, max(doc_ids.size - 1, 0))
             valid = du[rows_c] == su
             M[rows_c[valid], seg_groups[valid]] = True
+        present = {g: M[:, gi] for g, gi in group_of.items()}
         pos_data = _pos_data(pos_acc)
-        ph_pres = {}
         for key, (slop_b, vars_) in bool_spec["phrases"].items():
             mlist = [_match_phrase(pos_data, var, slop_b)
                      for var in vars_]
             md = (np.unique(np.concatenate(mlist)) if mlist
                   else np.empty(0, np.int64))
-            ph_pres[key] = np.isin(doc_ids, md)
-        # filter-leaf truth values (in-shard tree evaluation): the
-        # cogroup shipped each candidate's POSITIVE-form leaf bitmask;
-        # docs absent from the map satisfied no positive leaf
-        fbitmap = bool_spec.get("fbitmap") or {}
-        fconst = bool_spec.get("fconst") or {}
+            present[key] = np.isin(doc_ids, md)
+        # filter-leaf truth values: the cogroup shipped each doc's
+        # POSITIVE-form leaf bitmask; docs absent from the map satisfied
+        # no positive leaf
         fvec = np.zeros(doc_ids.size, dtype=np.int64)
-        if fbitmap and fmap is not None and doc_ids.size \
-                and fmap[0].size:
+        if fmap is not None and doc_ids.size and fmap[0].size:
             pos_f = np.searchsorted(fmap[0], doc_ids)
             pos_c = np.minimum(pos_f, fmap[0].size - 1)
             hit = fmap[0][pos_c] == doc_ids
             fvec[hit] = fmap[1][pos_c[hit]]
-
-        def _ev(node):
-            if isinstance(node, str):
-                if node in ph_pres:
-                    return ph_pres[node]
-                if node in fbitmap:
-                    bit, inv = fbitmap[node]
-                    v = ((fvec >> np.int64(bit)) & 1).astype(bool)
-                    return ~v if inv else v
-                if node in fconst:
-                    return np.full(doc_ids.size, fconst[node],
-                                   dtype=bool)
-                gi = group_of.get(node)
-                if gi is None:  # term absent from the whole index
-                    return np.zeros(doc_ids.size, dtype=bool)
-                return M[:, gi]
-            op = node[0]
-            if op == "not":
-                return ~_ev(node[1])
-            acc = _ev(node[1])
-            for c in node[2:]:
-                acc = (acc & _ev(c)) if op == "and" else (acc | _ev(c))
-            return acc
-
-        bitmap = bool_spec.get("bitmap")
-        if bitmap:
-            # tree has FILTER leaves: the scorer cannot decide the tree
-            # (no doc metadata here) — emit the term/phrase presence
-            # bits instead and let the plan evaluate the full tree
-            # JVM-side after joining the metadata in. No cut here
-            # (keep_all is set for these queries).
-            bits_vec = np.zeros(doc_ids.size, dtype=np.int64)
-            for key, b in bitmap.items():
-                if key in ph_pres:
-                    pres = ph_pres[key]
-                else:
-                    gi = group_of.get(key)
-                    if gi is None:  # absent from the whole index
-                        continue
-                    pres = M[:, gi]
-                bits_vec |= pres.astype(np.int64) << np.int64(b)
-            return doc_ids, doc_scores, bits_vec
-        pre_mask_docs = doc_ids
-        bmask = _ev(bool_spec["tree"])
+        bmask = _eval_tree(bool_spec["tree"], bool_spec["fbitmap"],
+                           bool_spec["fconst"], fvec, present)
         doc_ids, doc_scores = doc_ids[bmask], doc_scores[bmask]
-        if fbitmap or fconst:
-            # constant-score floor for filter-leaf trees: a doc whose
-            # positive term leaves contributed nothing (matched via a
-            # filter leaf / NOT-only probes) scores the OpenSearch
-            # constant 1.0 — identical to the JVM-side floor the
-            # legacy bits path applies after its metadata join
+        if spec.branch_b:
+            # constant-score floor: a doc whose positive term leaves
+            # contributed nothing (matched via a filter leaf / NOT-only
+            # probes) scores the OpenSearch constant 1.0
             doc_scores = np.where(doc_scores > 0.0, doc_scores, 1.0)
-            # branch B IN-SHARD: shipped filter-leaf docs with no
-            # query-term posting here that satisfy the terms-false
-            # tree match at the constant 1.0. (Candidates — even
-            # tree-false ones — are excluded: a term-doc must never
-            # re-enter at the constant after the real evaluation.)
             if fmap is not None:
-                bd, bb = fmap
-                bsel = ~np.isin(bd, pre_mask_docs)
-                if allowed is not None:
-                    bsel &= np.isin(bd, allowed)
-                bd2, bb2 = bd[bsel], bb[bsel]
-                if bd2.size:
-                    okb = _eval_bits_tree(bool_spec["tree"], fbitmap,
-                                          fconst, bb2)
-                    bd2 = bd2[okb]
-                    doc_ids = np.concatenate([doc_ids, bd2])
-                    doc_scores = np.concatenate(
-                        [doc_scores, np.ones(bd2.size)])
-    if not spec.keep_all and doc_ids.size > k:
+                # branch B: every doc holding a query-term posting here
+                # (even a tree-false one) was decided above and must not
+                # re-enter at the constant
+                bd = _branch_b(spec, fmap, allowed, ids[new_doc])
+                doc_ids = np.concatenate([doc_ids, bd])
+                doc_scores = np.concatenate([doc_scores, np.ones(bd.size)])
+    if doc_ids.size > k:
         # exact top-k by (score DESC, doc_id ASC) — the same tie-break
         # as the global rank window and the oracle; a plain argpartition
         # on score breaks exact-score ties arbitrarily and can drop the
         # lower-doc_id doc the final ranking would have kept
         sel = np.lexsort((doc_ids, -doc_scores))[:k]
         doc_ids, doc_scores = doc_ids[sel], doc_scores[sel]
-    return doc_ids, doc_scores, None
+    return doc_ids, doc_scores
 
 
 def _split_by_query(right: pd.DataFrame) -> dict:
@@ -979,9 +869,10 @@ def _make_scorer(specs: dict, k: int, prune: bool, combine: str = "sum",
     doc-shard function. allow=1 marks a doc passing the query's conjunct
     filters (`term lang:de`): a `flt` query restricts to that set
     IN-SHARD — before θ, the AND/phrase gates and the per-shard top-k cut
-    — so filtered queries keep the cut and block-max pruning ON. This is
-    the semi-join moved inside the scorer, exact. fbits carries the doc's
-    positive filter-leaf bitmask for in-shard boolean-tree evaluation.
+    — so filtered queries keep the cut and block-max pruning ON. fbits
+    carries the doc's positive filter-leaf bitmask for in-shard
+    boolean-tree evaluation; every row of a branch-B tree is a possible
+    filter-only match.
 
     Per query (_score_query), rows are (possibly fielded) posting lists:
     each carries weight = idf·boost, avgdl (per-field) and a group — the
@@ -999,49 +890,44 @@ def _make_scorer(specs: dict, k: int, prune: bool, combine: str = "sum",
               ) -> pd.DataFrame:
         sp = _ShardPostings(postings)
         by_q = _split_by_query(right) if right is not None else {}
-        qs, ds, ss, bs = [], [], [], []
+        qs, ds, ss = [], [], []
         for qid, spec in specs.items():
             r = by_q.get(qid)
+            allowed = fmap = None
+            if spec.flt:
+                allowed = (np.unique(r[0][r[1] == 1]) if r is not None
+                           else np.empty(0, np.int64))
+            if spec.branch_b and r is not None:
+                o = np.argsort(r[0])
+                fmap = (r[0][o], r[2][o])
             if sp.rows_of.keys().isdisjoint(terms_of[qid]):
-                if not (spec.fast_tree and r is not None):
+                if fmap is None:
                     continue
-                res = _filter_only_matches(spec, r, k)
+                # no postings here: branch B alone, all tied at 1.0 —
+                # the global rank keeps the k lowest doc_ids
+                d = _branch_b(spec, fmap, allowed)[:k]
+                res = (d, np.ones(d.size))
             elif spec.excl_only:
                 excl = _excluded(spec, sp)
                 if excl is None:
                     continue
-                res = (excl, np.zeros(excl.size), None)
+                res = (excl, np.zeros(excl.size))
             else:
-                allowed = fmap = None
-                if spec.flt:
-                    allowed = (np.unique(r[0][r[1] == 1]) if r is not None
-                               else np.empty(0, np.int64))
-                if r is not None:
-                    nz = r[2] != 0
-                    if nz.any():
-                        fd, fb = r[0][nz], r[2][nz]
-                        o = np.argsort(fd)
-                        fmap = (fd[o], fb[o])
                 res = _score_query(spec, sp, k, prune, combine, tie_breaker,
                                    allowed, fmap)
             if res is None or not res[0].size:
                 continue
-            d, s, b = res
-            qs.append(np.full(d.size, qid, dtype=np.int32))
-            ds.append(d.astype(np.int64))
-            ss.append(s.astype(np.float64))
-            bs.append(b if b is not None else np.zeros(d.size, np.int64))
+            qs.append(np.full(res[0].size, qid, dtype=np.int32))
+            ds.append(res[0].astype(np.int64))
+            ss.append(res[1].astype(np.float64))
         if not qs:
-            return pd.DataFrame({"query_id": [], "doc_id": [],
-                                 "score": [], "bits": []}
+            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}
                                 ).astype({"query_id": "int32",
                                           "doc_id": "int64",
-                                          "score": "float64",
-                                          "bits": "int64"})
+                                          "score": "float64"})
         return pd.DataFrame({"query_id": np.concatenate(qs),
                              "doc_id": np.concatenate(ds),
-                             "score": np.concatenate(ss),
-                             "bits": np.concatenate(bs)})
+                             "score": np.concatenate(ss)})
     return score
 
 
@@ -1085,7 +971,9 @@ class Searcher:
         NEW docs (anti-joined at ingest), so the union's doc sets are
         disjoint and exact global stats are recomputed over the union —
         scores match a from-scratch rebuild bit-for-bit. Default: on when
-        the segments table exists."""
+        the segments table exists. Raises ValueError on a segment without
+        its per-segment stats rows (the check compact_segments applies)
+        and on an index that records no n_shards."""
         self.spark, self.io = spark, io
         self.fuzzy_transpositions = bool(fuzzy_transpositions)
         self.fuzzy_prefix_length = int(fuzzy_prefix_length)
@@ -1093,95 +981,65 @@ class Searcher:
             raise ValueError("fuzzy_prefix_length must be >= 0")
         self.documents = io.read("documents")
         has_base = io.exists("postings")
+        stats = (io.read("index_stats").collect()[0].asDict()
+                 if has_base else {})
         if include_segments is None:
             include_segments = io.exists("posting_segments")
         if include_segments and io.exists("posting_segments"):
-            seg_df = self.io.read("posting_segments")
-            seg = seg_df.drop("segment_id")
-            base = io.read("postings") if has_base else None
-            self.postings = (base.unionByName(seg) if base is not None
-                             else seg)
-            base_row = None
-            if has_base and io.exists("index_stats"):
-                base_row = io.read("index_stats").collect()[0].asDict()
-                self._stats_row = base_row
-            incremental = (io.exists("segment_term_stats")
-                           and io.exists("segment_doc_stats")
-                           and (not has_base
-                                or (io.exists("term_stats")
-                                    and base_row is not None
-                                    and base_row.get("total_dl")
-                                    is not None)))
-            if incremental:
-                # Coverage gate: the incremental path is only sound when
-                # EVERY postings segment has its per-segment stats rows. A
-                # legacy segment (appended before segment stats existed) or
-                # a crash between the stats appends and the posting_segments
-                # append (streaming/ingest_stream.py orders stats FIRST, so
-                # the torn shape is a stats-only orphan, which is harmless:
-                # its docs are in `documents`, matching what the legacy
-                # re-aggregation would count) breaks the subset the other
-                # way — summed df/n_docs would silently miss that segment.
-                # The three segment_id scans are column-pruned and tiny.
-                def _seg_ids(table):
-                    return {r[0] for r in io.read(table)
-                            .select("segment_id").distinct().collect()}
-                post_ids = _seg_ids("posting_segments")
-                incremental = (post_ids <= _seg_ids("segment_term_stats")
-                               and post_ids <= _seg_ids("segment_doc_stats"))
-            if incremental:
-                # exact global stats by SUMMING the small per-segment stats
-                # tables (written at append time) with the base tables —
-                # init touches no postings data files (plan-asserted).
-                # Integer df/cf/total_dl sums make the merged stats
-                # bit-identical to a from-scratch re-aggregation.
-                seg_ts = io.read("segment_term_stats").drop("segment_id")
-                ts = (io.read("term_stats").unionByName(seg_ts) if has_base
-                      else seg_ts)
-                self.term_stats = ts.groupBy("term").agg(
-                    F.first("bucket").alias("bucket"),
-                    F.sum("df").alias("df"),
-                    F.sum("cf").alias("cf"))
-                srow = io.read("segment_doc_stats").agg(
-                    F.sum("n_docs").alias("n"),
-                    F.sum("total_dl").alias("dl")).collect()[0]
-                self.n_docs = (int(base_row["n_docs"]) if base_row else 0) \
-                    + int(srow["n"] or 0)
-                total = (int(base_row["total_dl"]) if base_row else 0) \
-                    + int(srow["dl"] or 0)
-                self.avgdl = (float(total) / self.n_docs
-                              if self.n_docs else 0.0)
-            else:
-                # legacy segment layout (no per-segment stats tables):
-                # re-aggregate the postings union — a full postings scan,
-                # kept only for indexes written before segment stats existed
-                from ipfs_search_spark.operators.index_build import (
-                    compute_doc_stats,
-                )
-                self.term_stats = self.postings.groupBy("term").agg(
-                    F.first("bucket").alias("bucket"),
-                    F.sum("df_part").alias("df"),
-                    F.sum("cf_part").alias("cf"))
-                self.n_docs, self.avgdl = compute_doc_stats(self.documents)
+            from ipfs_search_spark.operators.index_build import (
+                covered_segment_ids,
+            )
+            covered_segment_ids(io)
+            if has_base and stats.get("total_dl") is None:
+                raise ValueError(
+                    "segmented index: the base index_stats lacks total_dl "
+                    "(rebuild the base index)")
+            seg = io.read("posting_segments").drop("segment_id")
+            self.postings = (io.read("postings").unionByName(seg)
+                             if has_base else seg)
+            # exact global stats by SUMMING the small per-segment stats
+            # tables (written at append time) with the base tables —
+            # init touches no postings data files (plan-asserted).
+            # Integer df/cf/total_dl sums make the merged stats
+            # bit-identical to a from-scratch re-aggregation.
+            seg_ts = io.read("segment_term_stats").drop("segment_id")
+            ts = (io.read("term_stats").unionByName(seg_ts) if has_base
+                  else seg_ts)
+            self.term_stats = ts.groupBy("term").agg(
+                F.first("bucket").alias("bucket"),
+                F.sum("df").alias("df"),
+                F.sum("cf").alias("cf"))
+            sds = io.read("segment_doc_stats")
+            aggs = [F.sum("n_docs").alias("n"), F.sum("total_dl").alias("dl")]
+            if "n_shards" in sds.columns:
+                # segments-only indexes (no base build) record the
+                # doc→shard parameter per segment; min == max checks the
+                # segments agree, in the same aggregate
+                aggs += [F.min("n_shards").alias("s0"),
+                         F.max("n_shards").alias("s1")]
+            srow = sds.agg(*aggs).collect()[0].asDict()
+            if not has_base and srow.get("s0") != srow.get("s1"):
+                raise ValueError("posting segments disagree on n_shards")
+            self.n_docs = int(stats.get("n_docs", 0)) + int(srow["n"] or 0)
+            total = int(stats.get("total_dl", 0)) + int(srow["dl"] or 0)
+            self.avgdl = float(total) / self.n_docs if self.n_docs else 0.0
+            ns = stats["n_shards"] if has_base else srow.get("s0")
         else:
-            stats = io.read("index_stats").collect()[0].asDict()
             self.n_docs = int(stats["n_docs"])
             self.avgdl = float(stats["avgdl"])
             self.term_stats = io.read("term_stats")
             self.postings = io.read("postings")
-            self._stats_row = stats
-        # positional flag (phrase-query capability) from index_stats —
-        # reuse the row already collected above when available
-        srow = getattr(self, "_stats_row", None)
-        if srow is None and io.exists("index_stats"):
-            srow = io.read("index_stats").collect()[0].asDict()
-        self.positional = bool((srow or {}).get("positional", False))
-        # the index's doc→shard function parameter: lets the query side
-        # route per-doc rows (the filter-allowed set) to the shard that
-        # holds the doc's postings. None on legacy stats-less layouts —
-        # filtered queries then fall back to the external semi-join.
-        ns = (srow or {}).get("n_shards")
-        self.n_shards = int(ns) if ns else None
+            ns = stats.get("n_shards")
+        # positional flag (phrase-query capability) from index_stats
+        self.positional = bool(stats.get("positional", False))
+        # the index's doc→shard function parameter: the query side routes
+        # per-doc rows (filter-allowed sets, filter-leaf bits) to the
+        # shard that holds the doc's postings
+        if ns is None:
+            raise ValueError(
+                "index records no n_shards (written before the doc→shard "
+                "parameter was stored): rebuild it")
+        self.n_shards = int(ns)
         self._term_cache: dict | None = None
         if cache_terms is None:
             cache_terms = self.term_stats.count() <= self.TERM_CACHE_MAX
@@ -1476,21 +1334,18 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
     all_exps = {e for p in parsed.values()
                 for e in (list(p.expansions) + list(p.not_expansions)
                           + list(p.bool_expansions.values()))}
-    # boolean trees needing a documents-scan branch: trees with filter
-    # leaves (constant-score clauses — candidate generation below, final
-    # tree evaluation JVM-side after the metadata join; their candidates
-    # exist even when no term leaf is live), plus default-TRUE pure-term
-    # trees (`a OR NOT b`: a doc containing NEITHER term satisfies the
-    # tree — Lucene prohibited-clause-over-all-docs semantics — and enters
-    # through branch B at the constant score, bounded to the k_page lowest
-    # doc_ids)
-    ft_qids = sorted(qid for qid, p in parsed.items()
-                     if p.bool_tree is not None
-                     and (p.bool_filters
-                          or _default_tree_const(p.bool_tree,
-                                                 p.bool_filters)))
+    # branch-B trees: trees that can match a doc holding no query term —
+    # trees with filter leaves (constant-score clauses: `lang:de OR
+    # merge`), and default-TRUE trees (`a OR NOT b`: a doc containing
+    # NEITHER term satisfies the tree — Lucene prohibited-clause-over-all-
+    # docs semantics). Such docs enter in-shard at the constant score.
+    dt_qids = {qid for qid, p in parsed.items()
+               if p.bool_tree is not None
+               and _default_tree_const(p.bool_tree, p.bool_filters)}
+    b_qids = dt_qids | {qid for qid, p in parsed.items()
+                        if p.bool_tree is not None and p.bool_filters}
     if not base_terms and not matchall_qids and not all_exps \
-            and not ft_qids:
+            and not b_qids:
         return spark.createDataFrame(
             [], "query_id int, rank int, doc_id long, url string, score double")
 
@@ -1564,51 +1419,32 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
     # Conjunct-filter specs for SCORING queries: the allowed doc set of
     # each query's filters, routed to the doc's shard and cogrouped into
     # the scorer, so the restriction (and therefore the per-shard top-k
-    # cut and block-max pruning) happens IN-SHARD — a filtered query no
-    # longer ships its full candidate set to the rank window (r3 verdict).
-    # pred == 'true' (filters that drop on this schema) means unfiltered;
-    # pred is None (filters that cannot match) means nothing allowed.
+    # cut and block-max pruning) happens IN-SHARD. A query whose filters
+    # drop on this schema (pred 'true') is unfiltered; one whose filters
+    # cannot match any doc (pred None) matches nothing.
     docs = sx.documents
-    flt_specs: dict[int, str | None] = {}
+    flt_specs: dict[int, str] = {}
+    no_match: set = set()
     for qid, p in parsed.items():
         if p.match_all or not p.filters:
             continue
         pr = _filters_pred(p, docs.columns)
-        if pr != "true":
+        if pr is None:
+            no_match.add(qid)
+        elif pr != "true":
             flt_specs[qid] = pr
-    cg = (bool(flt_specs) or bool(ft_qids)) and sx.n_shards is not None
     # filter-LEAF bit specs (trees like `lang:de OR merge`): each leaf's
     # POSITIVE-form predicate — negated leaves invert in the scorer, so
     # the shipped doc set stays the selective positive match, never its
     # complement — evaluated in the same single documents scan as the
     # conjunct allowed sets and cogrouped to the doc's shard as a bitmask.
-    # The scorer then evaluates the FULL tree in-shard and keeps its
-    # per-shard top-k cut ON (keep_all previously shipped the query's
-    # whole candidate set to the rank window — r3 verdict).
     leaf_preds: dict[int, list] = {}  # qid -> [(bit, pos_pred_sql)]
 
     specs: dict[int, QuerySpec] = {}       # scoring queries
     excl_specs: dict[int, QuerySpec] = {}  # match-all negation probes
-    bitmaps: dict[int, dict] = {}
     for qid, p in parsed.items():
-        # ft_fast: this filter-leaf tree evaluates fully IN-SHARD (leaf
-        # bitmask via the cogroup) and keeps its per-shard cut. Trees with
-        # a term leaf in NOT context stay on the legacy keep_all + JVM
-        # bits path (see _neg_term_leaves); likewise everything on legacy
-        # stats-less layouts (no doc→shard route) and conjunct filters
-        # there (external semi-join).
-        ft_fast = (cg and p.bool_filters and p.bool_tree is not None
-                   and not _neg_term_leaves(p.bool_tree, p.bool_filters)
-                   and not _default_tree_const(p.bool_tree, p.bool_filters))
-        # default-true PURE-TERM tree (`a OR NOT b`, no filter leaves):
-        # keep_all + presence bits + JVM tree eval (branch A) + a bounded
-        # documents-scan branch B for the term-absent matches
-        dt_pure = (p.bool_tree is not None and not p.bool_filters
-                   and _default_tree_const(p.bool_tree, p.bool_filters))
-        ka = 1 if ((p.filters and not cg)
-                   or (p.bool_filters and not ft_fast)
-                   or dt_pure) else 0
-        fl = 1 if (cg and qid in flt_specs) else 0
+        if qid in no_match:
+            continue
         pos = [t for t in p.terms if variants(t)]
         neg = [t for t in p.not_terms if variants(t)]
         live_exps = [e for e in p.expansions if exp_terms.get(e.key)]
@@ -1633,43 +1469,28 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
             bphrases = {key: phrase_groups(
                 [terms], [p.bool_phrase_slops.get(key, 0)])[0]
                 for key, terms in p.bool_phrases.items()}
-            spec = {"tree": p.bool_tree, "phrases": bphrases}
-            if p.bool_filters and ft_fast:
-                # in-shard tree evaluation: filter leaves resolve through
-                # the cogrouped per-doc bitmask (fbitmap: leaf -> [bit,
-                # invert]); leaves on fields this index lacks are baked
-                # constants. The scorer evaluates the WHOLE tree and keeps
-                # its per-shard cut — no JVM-side bits pass for branch A.
-                if len(p.bool_filters) > 63:
-                    raise ValueError(
-                        "boolean trees support at most 63 filter leaves, "
-                        f"got {len(p.bool_filters)}")
-                fb: dict = {}
-                fc: dict = {}
-                lps: list = []
-                for i, key in enumerate(sorted(p.bool_filters)):
-                    flt = p.bool_filters[key]
-                    base_col = ("references"
-                                if flt.field == "references.name"
-                                else flt.field)
-                    if base_col not in docs.columns:
-                        fc[key] = bool(flt.neg)
-                        continue
-                    fb[key] = [i, bool(flt.neg)]
-                    pflt = Filter(flt.field, flt.op, flt.value, neg=False)
-                    lps.append((i, filter_to_sql(pflt)))
-                spec["fbitmap"], spec["fconst"] = fb, fc
-                if lps:
-                    leaf_preds[qid] = lps
-            elif p.bool_filters or dt_pure:
-                leaves = sorted(_tree_leaves(p.bool_tree)
-                                - set(p.bool_filters))
-                if len(leaves) > 63:
-                    raise ValueError(
-                        "boolean trees with filter leaves support at most "
-                        f"63 term/phrase leaves, got {len(leaves)}")
-                spec["bitmap"] = {key: i for i, key in enumerate(leaves)}
-                bitmaps[qid] = spec["bitmap"]
+            # filter leaves resolve through the cogrouped per-doc bitmask
+            # (fbitmap: leaf -> [bit, invert]); leaves on fields this
+            # index lacks are baked constants (fconst)
+            spec = {"tree": p.bool_tree, "phrases": bphrases,
+                    "fbitmap": {}, "fconst": {}}
+            if len(p.bool_filters) > 63:
+                raise QueryParseError(
+                    "boolean trees support at most 63 filter leaves, "
+                    f"got {len(p.bool_filters)}")
+            lps: list = []
+            for i, key in enumerate(sorted(p.bool_filters)):
+                flt = p.bool_filters[key]
+                base_col = ("references" if flt.field == "references.name"
+                            else flt.field)
+                if base_col not in docs.columns:
+                    spec["fconst"][key] = bool(flt.neg)
+                    continue
+                spec["fbitmap"][key] = [i, bool(flt.neg)]
+                pflt = Filter(flt.field, flt.op, flt.value, neg=False)
+                lps.append((i, filter_to_sql(pflt)))
+            if lps:
+                leaf_preds[qid] = lps
         # per-query AND-required count; 0 = OR / boolean-tree semantics
         # (an expansion clause counts as ONE group however many terms it
         # expanded to); NEGATIVE = minimum_should_match floor (at least
@@ -1682,8 +1503,8 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
             n_grp = -int(min_should_match)
         qs = QuerySpec(n_groups=n_grp,
                        phrases=pos_groups if p.phrases else [],
-                       tree=spec, keep_all=bool(ka), flt=bool(fl),
-                       fast_tree=bool(ft_fast),
+                       tree=spec, flt=qid in flt_specs,
+                       branch_b=qid in b_qids,
                        negp=live_np, excl_only=p.match_all)
 
         def _exp_rows(e, gkey, scored):
@@ -1724,7 +1545,7 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                     boost *= float(p.boosts.get(t, 1.0))  # ^boost on idf
                     qs.rows.append((ft, t_idf * boost, t, av))
             if p.bool_tree is not None:
-                # NOT-context-only leaves: fetched for presence bits, idf 0
+                # NOT-context-only leaves: fetched for presence, idf 0
                 # so they never contribute score
                 for t in p.bool_neg_terms:
                     for fld, ft in variants(t):
@@ -1741,15 +1562,13 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                    + sorted({t for e in p.not_expansions
                              for t in exp_terms.get(e.key, [])}))
         if not p.match_all:
-            if qs.terms() or qs.fast_tree:
+            if qs.terms() or qs.branch_b:
                 specs[qid] = qs
         elif qs.terms():
             excl_specs[qid] = qs
-    if not specs and not matchall_qids and not ft_qids:
+    if not specs and not matchall_qids:
         return spark.createDataFrame(
             [], "query_id int, rank int, doc_id long, url string, score double")
-
-    has_filters = any(p.filters for p in parsed.values())
 
     def postings_scan(q_specs: dict) -> DataFrame:
         """The batch's postings rows, pruned by bucket (partition
@@ -1771,41 +1590,47 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
     candidates = None
     if specs:
         score = _make_scorer(specs, k_page, prune, combine, tie_breaker)
-        if cg:
-            # ONE pruned documents scan serves every filtered query in the
-            # batch (r3 verdict: Q filtered queries used to plan Q scans):
-            # the OR of all live predicates (conjunct filters AND tree
-            # filter leaves) pushes down; each matching doc emits one row
-            # per query it is relevant to — allow=1 when it passes the
-            # query's conjunct filters, fbits = the bitmask of satisfied
-            # positive-form filter leaves — routed to the doc's postings
-            # shard for the cogroup.
-            live = {q: pr for q, pr in flt_specs.items() if pr is not None}
-            scan_preds = [f"({pr})" for pr in live.values()] + \
-                [f"({pr})" for lps in leaf_preds.values() for _, pr in lps]
+        cg_qids = sorted(q for q, qs in specs.items()
+                         if qs.flt or qs.branch_b)
+        if cg_qids:
+            # ONE pruned documents scan serves every query of the batch
+            # that reads per-doc rows: the OR of their predicates pushes
+            # down — conjunct filters and positive-form filter leaves, or
+            # the conjunct filters alone (`true` when none) for a
+            # default-true tree, every doc passing them being a possible
+            # match. Each scanned doc emits one row per query it is
+            # relevant to — allow=1 when it passes the query's conjunct
+            # filters, fbits = the bitmask of satisfied positive-form
+            # filter leaves — routed to the doc's postings shard for the
+            # cogroup.
+            scan_preds, structs = [], []
+            for q in cg_qids:
+                conj = flt_specs.get(q)
+                if q in dt_qids:
+                    scan_preds.append(conj or "true")
+                else:
+                    scan_preds += ([conj] if conj else []) + \
+                        [pr for _, pr in leaf_preds.get(q, [])]
+                allow_e = (F.when(F.expr(conj), F.lit(1)).otherwise(F.lit(0))
+                           if conj else F.lit(int(q in dt_qids)))
+                fb_e = F.lit(0).cast("long")
+                for bit, pr in leaf_preds.get(q, []):
+                    fb_e = fb_e + (
+                        F.when(F.expr(pr), F.lit(1 << bit).cast("long"))
+                        .otherwise(F.lit(0).cast("long")))
+                structs.append(F.struct(
+                    F.lit(q).cast("int").alias("query_id"),
+                    allow_e.cast("int").alias("allow"),
+                    fb_e.alias("fbits")))
             if scan_preds:
-                structs = []
-                for q in sorted(set(live) | set(leaf_preds)):
-                    allow_e = (F.when(F.expr(live[q]), F.lit(1))
-                               .otherwise(F.lit(0))
-                               if q in live else F.lit(0))
-                    fb_e = F.lit(0).cast("long")
-                    for bit, pr in leaf_preds.get(q, []):
-                        fb_e = fb_e + (
-                            F.when(F.expr(pr),
-                                   F.lit(1 << bit).cast("long"))
-                            .otherwise(F.lit(0).cast("long")))
-                    structs.append(F.struct(
-                        F.lit(q).cast("int").alias("query_id"),
-                        allow_e.cast("int").alias("allow"),
-                        fb_e.alias("fbits")))
                 base_scan = (docs.filter(F.col("status") == "ok")
                              if "status" in docs.columns else docs)
                 rel = F.filter(
                     F.array(*structs),
                     lambda s: (s["allow"] == 1) | (s["fbits"] != 0))
                 allowed_df = (
-                    base_scan.filter(F.expr(" OR ".join(scan_preds)))
+                    base_scan.filter(F.expr(" OR ".join(
+                        f"({pr})" for pr in scan_preds)))
                     .select("doc_id", F.explode(rel).alias("s"))
                     .withColumn("shard",
                                 F.pmod(F.xxhash64("doc_id"),
@@ -1814,7 +1639,7 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                             F.col("doc_id").cast("long").alias("doc_id"),
                             F.col("s.allow").alias("allow"),
                             F.col("s.fbits").alias("fbits")))
-            else:  # filtered queries exist but none has a live predicate
+            else:  # every filter leaf is on a column this index lacks
                 allowed_df = spark.createDataFrame(
                     [], "query_id int, shard int, doc_id long, "
                         "allow int, fbits long")
@@ -1834,79 +1659,6 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
         neg_union = postings_scan(excl_specs).applyInPandas(
             postings_only(excl), CANDIDATE_SCHEMA
         ).select("query_id", "doc_id")
-
-    # Boolean trees with filter leaves. FAST (monotone, default-false)
-    # trees were decided entirely IN-SHARD: candidates already hold their
-    # tree-true, constant-floored, per-shard-cut rows — branch A — AND
-    # their filter-only matches — branch B, emitted from the cogrouped
-    # leaf-bit rows (every possible match either has a query term or
-    # matches a positive filter clause, so the cogroup saw it). Nothing
-    # to do here for them. LEGACY trees (term leaves under NOT, default-
-    # true trees like `a OR NOT lang:de`, stats-less layouts) emitted
-    # term/phrase presence bits instead: (A) evaluate the FULL tree here,
-    # where the metadata the filter leaves need is joinable, keeping the
-    # term score floored at the constant 1.0; (B) filter-only matches —
-    # a pruned documents scan with every term leaf false, constant score
-    # 1.0, anti-joined against A's (keep_all, uncut) universe, cut to the
-    # k_page lowest doc_ids (sound: B rows all tie at 1.0 and the global
-    # rank breaks ties by doc_id ASC).
-    legacy_ft = sorted(set(ft_qids) & set(bitmaps)) if ft_qids else []
-    if legacy_ft:
-        meta_cols = sorted({
-            ("references" if f.field == "references.name" else f.field)
-            for qid in legacy_ft
-            for f in parsed[qid].bool_filters.values()
-        } & set(docs.columns))
-        parts = ([candidates.filter(~F.col("query_id").isin(legacy_ft))]
-                 if candidates is not None else [])
-        base = (docs.filter(F.col("status") == "ok")
-                if "status" in docs.columns else docs)
-        for qid in legacy_ft:
-            p = parsed[qid]
-            bm = bitmaps.get(qid, {})
-            if candidates is not None and qid in bitmaps:
-                tree_pred = _tree_sql(p.bool_tree, p.bool_filters, bm,
-                                      docs.columns)
-                a = candidates.filter(F.col("query_id") == qid)
-                if p.bool_filters:
-                    # filter leaves need doc metadata; pure-term
-                    # default-true trees evaluate on bits alone — no
-                    # documents scan for branch A. INNER join (candidate
-                    # doc_ids always exist in docs — same build) with NO
-                    # broadcast hint: this legacy path carries keep_all
-                    # (uncut) candidates, which a common term makes
-                    # corpus-sized — forcing a broadcast here would
-                    # collect that unbounded set to the driver (r5
-                    # review). AQE picks broadcast on its own whenever the
-                    # candidate side is actually small.
-                    a = a.join(docs.select("doc_id", *meta_cols),
-                               "doc_id", "inner")
-                a = (a.filter(F.expr(tree_pred))
-                     .select("query_id", "doc_id",
-                             F.when(F.col("score") > 0.0, F.col("score"))
-                             .otherwise(F.lit(1.0)).alias("score"),
-                             F.lit(0).cast("long").alias("bits")))
-                parts.append(a)
-            conj = _filters_pred(p, docs.columns)
-            if conj is None:
-                continue  # conjunct filters cannot match on this index
-            b_pred = _tree_sql(p.bool_tree, p.bool_filters, bm,
-                               docs.columns, terms_false=True)
-            if conj != "true":
-                b_pred = f"({b_pred}) AND ({conj})"
-            b = (base.filter(F.expr(b_pred))
-                 .select(F.lit(qid).cast("int").alias("query_id"),
-                         F.col("doc_id").cast("long").alias("doc_id"),
-                         F.lit(1.0).alias("score"),
-                         F.lit(0).cast("long").alias("bits")))
-            if candidates is not None:
-                b = b.join(candidates.filter(F.col("query_id") == qid)
-                           .select("doc_id"), "doc_id", "left_anti")
-            parts.append(b.orderBy("doc_id").limit(k_page))
-        candidates = None
-        for pt in parts:
-            candidates = pt if candidates is None \
-                else candidates.unionByName(pt)
 
     # match-all-then-filter queries (filter/negation-only query strings):
     # every doc passing the filters, constant score 1.0, ranked by doc_id —
@@ -1928,39 +1680,13 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
             d = d.filter(F.expr(pred))
         sel = d.select(F.lit(qid).cast("int").alias("query_id"),
                        F.col("doc_id").cast("long").alias("doc_id"),
-                       F.lit(1.0).alias("score"),
-                       F.lit(0).cast("long").alias("bits"))
+                       F.lit(1.0).alias("score"))
         if (p.not_terms or p.not_phrases or p.not_expansions) \
                 and neg_union is not None:
             sel = sel.join(neg_union.filter(F.col("query_id") == qid),
                            ["query_id", "doc_id"], "left_anti")
         sel = sel.orderBy("doc_id").limit(k_page)
         candidates = sel if candidates is None else candidates.unionByName(sel)
-
-    if has_filters and not cg:
-        # legacy fallback (stats-less layouts only): external semi-join
-        # against per-query allowed branches. The primary path enforces
-        # conjunct filters in-shard via the cogroup above.
-        # The semi-join restricts only the queries that HAVE
-        # filters; unfiltered queries bypass it entirely (no all-docs
-        # allowed branch scanning the documents table per unfiltered query)
-        flt_qids = [qid for qid, p in parsed.items() if p.filters]
-        flt_df = None
-        for qid in flt_qids:
-            pred = _filters_pred(parsed[qid], docs.columns)
-            if pred is None:  # impossible filters → no doc allowed
-                allowed = docs.filter(F.lit(False)).select(
-                    F.lit(qid).alias("query_id"), "doc_id")
-            else:
-                allowed = docs.filter(F.expr(pred)).select(
-                    F.lit(qid).alias("query_id"), "doc_id")
-            flt_df = allowed if flt_df is None else flt_df.unionByName(allowed)
-        if flt_df is not None:
-            cand_f = (candidates.filter(F.col("query_id").isin(flt_qids))
-                      .join(flt_df, ["query_id", "doc_id"], "left_semi"))
-            candidates = (candidates
-                          .filter(~F.col("query_id").isin(flt_qids))
-                          .unionByName(cand_f))
 
     if candidates is None:
         return spark.createDataFrame(

@@ -99,7 +99,9 @@ def incremental_index_microbatch(io, n_shards: int = 8, n_buckets: int = 64,
 
     Each segment append also records its OWN statistics —
     `segment_term_stats` (per-term df/cf of this segment) and
-    `segment_doc_stats` (doc count + exact integer dl sum) — so a Searcher
+    `segment_doc_stats` (doc count + exact integer dl sum, plus the
+    doc→shard parameter `n_shards`, which an index of segments alone has
+    nowhere else to record) — so a Searcher
     over base∪segments derives exact global stats by SUMMING the small
     stats tables instead of re-aggregating every postings row at init
     (which is a full postings scan per session at web scale)."""
@@ -160,8 +162,8 @@ def incremental_index_microbatch(io, n_shards: int = 8, n_buckets: int = 64,
             "segment_term_stats")
         io.append_atomic(
             docs.sparkSession.createDataFrame(
-                [(int(batch_id), n_docs, total_dl)],
-                "segment_id long, n_docs long, total_dl long"),
+                [(int(batch_id), n_docs, total_dl, int(n_shards))],
+                "segment_id long, n_docs long, total_dl long, n_shards int"),
             "segment_doc_stats")
         io.append_atomic(postings, "posting_segments")
 

@@ -14,7 +14,7 @@ rank below any term match scoring >1 and tie-break by doc_id).
 import pytest
 
 from ipfs_search_spark.oracle import BM25Oracle
-from ipfs_search_spark.plans.parser import parse_query
+from ipfs_search_spark.plans.parser import QueryParseError, parse_query
 from ipfs_search_spark.plans.query import Searcher
 
 
@@ -104,6 +104,12 @@ QUERIES = [
     "size:(>2500 <800) OR data",
     "data -lang:(de en)",
     "lang:(de OR -en) OR merge",
+    # a term leaf under NOT, and a default-true tree, beside filter leaves
+    "(lang:de OR merge) AND NOT spark",
+    "(lang:de OR data) AND NOT merge",
+    "size:>1000 (lang:de OR merge) AND NOT data",
+    "(data AND NOT lang:en) OR (lang:de AND NOT merge)",
+    "lang:de OR NOT data",
 ]
 
 
@@ -121,11 +127,13 @@ def test_filter_tree_rank_identity(spark, env, qs):
 
 
 def test_filter_tree_batch_with_plain_queries(spark, env):
-    """Mixed batch: a filter-tree query must not disturb flat/boolean
-    queries running in the same call (per-query keep_all / bitmap)."""
+    """Mixed batch: filter-tree queries (monotone, NOT over a term leaf,
+    default-true) must not disturb flat/boolean queries running in the
+    same call, nor each other."""
     sx, oracle, meta = env
     batch = [(0, "lang:de OR data"), (1, "data spark"),
-             (2, "(data OR merge) AND index")]
+             (2, "(data OR merge) AND index"), (3, "data OR NOT lang:en"),
+             (4, "(lang:de OR merge) AND NOT spark")]
     by_q = {}
     for r in sx.search(batch, k=10).collect():
         by_q.setdefault(r["query_id"], []).append(
@@ -219,3 +227,25 @@ def test_filter_leaf_missing_column_is_false(spark, tmp_path_factory):
            sx.search([(0, "size:>10 OR data")], k=40).collect()}
     want = {i for i in range(40) if i % 2}  # only the term branch matches
     assert got == want
+
+
+def test_filter_leaf_cap_raises_parse_error(spark, env):
+    """The in-shard filter-leaf bitmask is one int64: 64 filter leaves
+    raise a clean QueryParseError (a ValueError)."""
+    sx, _, _ = env
+    qs = " OR ".join(f"size:{i}" for i in range(64)) + " OR data"
+    assert len(parse_query(qs).bool_filters) == 64
+    with pytest.raises(QueryParseError, match="63 filter leaves"):
+        sx.search([(0, qs)], k=10).collect()
+
+
+def test_many_term_leaves_under_not(spark, env):
+    """Term leaves have no cap: a default-true tree with 70 term leaves
+    under NOT returns the oracle's top-k."""
+    sx, oracle, meta = env
+    qs = ("lang:de OR NOT (data OR spark OR merge OR "
+          + " OR ".join(f"t{i}" for i in range(4, 71)) + ")")
+    want = oracle_topk(oracle, meta, qs, 10)
+    got = [(r["doc_id"], r["score"])
+           for r in sx.search([(0, qs)], k=10).collect()]
+    assert want and got == want

@@ -83,12 +83,14 @@ def test_segmented_searcher_init_reads_no_postings(spark):
     assert (sx.n_docs, sx.avgdl) == (n_exact, avgdl_exact)
 
 
-def test_legacy_segment_without_stats_falls_back(spark):
+def test_legacy_segment_without_stats_raises(spark):
     """A postings segment with NO per-segment stats rows (written by code
     predating segment stats, or a batch torn after the posting_segments
-    append) must NOT take the incremental-stats path — summed df/n_docs
-    would silently miss it. The coverage gate falls back to the legacy full
-    re-aggregation, and answers still match a from-scratch rebuild."""
+    append) would make summed df/n_docs silently miss it: Searcher init
+    raises, with the same message as compact_segments."""
+    import shutil
+
+    from ipfs_search_spark.operators.index_build import compact_segments
     all_pages = pages_df(spark, n=300, seed=77).cache()
     base = all_pages.limit(200).cache()
     rest = all_pages.subtract(base).cache()
@@ -97,28 +99,66 @@ def test_legacy_segment_without_stats_falls_back(spark):
     build_index(spark, base, io_inc, n_shards=4, n_buckets=16)
     handle = incremental_index_microbatch(io_inc, n_shards=4, n_buckets=16)
     handle(rest, batch_id=1)
-    # simulate the legacy layout: drop the per-segment stats tables so the
-    # postings segment has no coverage
-    import shutil
+
+    def assert_both_raise():
+        with pytest.raises(ValueError) as compact_err:
+            compact_segments(io_inc)
+        with pytest.raises(ValueError) as searcher_err:
+            Searcher(spark, io_inc)
+        assert "lacks its per-segment stats" in str(searcher_err.value)
+        assert str(searcher_err.value) == str(compact_err.value)
+
+    # the legacy layout: no per-segment stats table at all
     shutil.rmtree(io_inc._path("segment_term_stats"))
-
-    io_full = TableIO(spark, tempfile.mkdtemp(prefix="isx-legacyfull-"))
-    build_index(spark, all_pages, io_full, n_shards=4, n_buckets=16)
-    assert _results(Searcher(spark, io_inc)) == \
-        _results(Searcher(spark, io_full))
-
-    # partial coverage (stats tables exist but miss a segment) must ALSO
-    # fall back: re-add segment stats for a NEW batch only, leaving batch 1
-    # uncovered — the gate compares distinct segment_id sets
+    assert_both_raise()
+    # partial coverage (stats tables exist but miss a segment): re-add
+    # segment stats for a NEW batch only, leaving batch 1 uncovered
     more = (all_pages.limit(40)
             .withColumn("url", F.concat(F.col("url"), F.lit("?v2")))
             .cache())
     handle(more, batch_id=2)
-    io_full2 = TableIO(spark, tempfile.mkdtemp(prefix="isx-legacyfull2-"))
-    build_index(spark, all_pages.unionByName(more), io_full2,
-                n_shards=4, n_buckets=16)
-    assert _results(Searcher(spark, io_inc)) == \
-        _results(Searcher(spark, io_full2))
+    assert io_inc.exists("segment_term_stats")
+    assert_both_raise()
+
+
+def test_segments_only_index_matches_rebuild(spark):
+    """An index made of micro-batch appends alone (no base build, so no
+    index_stats) answers filtered, filter-leaf and default-true queries
+    exactly like a from-scratch build: the segments record n_shards, so
+    the per-doc rows route to the right shard."""
+    all_pages = pages_df(spark, n=300, seed=31).cache()
+    b1 = all_pages.limit(120).cache()
+    b2 = all_pages.subtract(b1)
+
+    io_seg = TableIO(spark, tempfile.mkdtemp(prefix="isx-segonly-"))
+    handle = incremental_index_microbatch(io_seg, n_shards=4, n_buckets=16)
+    handle(b1, batch_id=1)
+    handle(b2, batch_id=2)
+    assert not io_seg.exists("postings") and not io_seg.exists("index_stats")
+
+    io_full = TableIO(spark, tempfile.mkdtemp(prefix="isx-segonly-full-"))
+    build_index(spark, all_pages, io_full, n_shards=4, n_buckets=16)
+
+    queries = [(0, "data lang:de"), (1, "lang:de OR data"),
+               (2, "data OR NOT lang:de")]
+    seg = _results(Searcher(spark, io_seg), queries)
+    assert seg == _results(Searcher(spark, io_full), queries)
+    assert all(seg.get(q) for q, _ in queries)
+
+    # a later segment appended with another n_shards: no single doc→shard
+    # route, raise
+    incremental_index_microbatch(io_seg, n_shards=2, n_buckets=16)(
+        all_pages.limit(20).withColumn("url", F.concat("url", F.lit("?v3"))),
+        batch_id=3)
+    with pytest.raises(ValueError, match="disagree on n_shards"):
+        Searcher(spark, io_seg)
+    # segment stats written without n_shards: no doc→shard route, raise
+    rows = [tuple(r) for r in io_seg.read("segment_doc_stats")
+            .select("segment_id", "n_docs", "total_dl").collect()]
+    io_seg.write_rows("segment_doc_stats", rows,
+                      "segment_id long, n_docs long, total_dl long")
+    with pytest.raises(ValueError, match="n_shards"):
+        Searcher(spark, io_seg)
 
 
 def test_compact_segments_matches_rebuild(spark):

@@ -109,23 +109,22 @@ def _postings(*terms):
 
 
 def test_per_shard_cut_is_per_query(spark):
-    """keep_all is per-query: an unfiltered query emits at most k rows
-    from its shard call even when ANOTHER query of the same call keeps
-    all its candidates (a legacy filter-leaf tree, whose tree applies
-    after scoring)."""
+    """Each query of one shard call keeps its own per-shard cut: two
+    queries in one call each emit at most k rows (fewer when they have
+    fewer candidates), exactly the rows of their solo calls."""
     from ipfs_search_spark.plans.query import QuerySpec, _make_scorer
 
-    postings = _postings(("t", range(100), 2))
-    row = ("t", 1.0, "t", 50.0)
-    cut, keep = QuerySpec(rows=[row]), QuerySpec(rows=[row], keep_all=True)
-    out_unfiltered = _make_scorer({0: cut}, 10, True)(postings)
-    assert len(out_unfiltered) == 10  # cut applied for this query
-    out_filtered = _make_scorer({0: keep}, 10, True)(postings)
-    assert len(out_filtered) == 100  # keep_all query keeps all candidates
-    # both in ONE shard call: each keeps its own cut
-    both = _make_scorer({0: cut, 1: keep}, 10, True)(postings)
-    assert (both["query_id"] == 0).sum() == 10
-    assert (both["query_id"] == 1).sum() == 100
+    postings = _postings(("t", range(100), 2), ("u", range(0, 500, 100), 1))
+    many = QuerySpec(rows=[("t", 1.0, "t", 50.0)])
+    few = QuerySpec(rows=[("u", 1.0, "u", 50.0)])
+    solo_many = _make_scorer({0: many}, 10, True)(postings)
+    solo_few = _make_scorer({1: few}, 10, True)(postings)
+    assert len(solo_many) == 10  # cut applied for this query
+    assert len(solo_few) == 5  # all 5 candidates, under k
+    both = _make_scorer({0: many, 1: few}, 10, True)(postings)
+    for qid, solo in ((0, solo_many), (1, solo_few)):
+        got = both[both["query_id"] == qid].reset_index(drop=True)
+        assert got.equals(solo.reset_index(drop=True)), qid
 
 
 def test_shard_call_shares_terms_across_queries():
@@ -153,7 +152,7 @@ def test_shard_call_shares_terms_across_queries():
 
 def test_mixed_batch_same_results_as_solo(spark, built_index):
     """A filtered query riding in the batch must not change an unfiltered
-    query's results (the per-query keep_all path is exact)."""
+    query's results (every query keeps its own in-shard cut)."""
     from ipfs_search_spark.plans.query import search
     io, _ = built_index
     alone = [tuple(r) for r in
@@ -376,16 +375,64 @@ def test_transpositions_scan_stays_arrow_and_prefiltered(spark,
 
 
 def test_or_not_tree_plans_two_documents_scans(spark, built_index):
-    """Default-true pure-term trees (`a OR NOT b`) must plan exactly TWO
-    documents scans — the bounded branch-B base scan and the final url
-    lookup. Branch A evaluates on scorer bits alone (no metadata join;
-    a third scan here is a full table read per query at 100 TB)."""
+    """Default-true pure-term trees (`a OR NOT b`) run in-shard like every
+    other tree: exactly TWO documents scans — the per-doc rows cogrouped
+    into the shard scorer, and the final url lookup (a third scan here is
+    a full table read per query at 100 TB). Their term-absent matches
+    (branch B) come from the shard call, cut to k rows per shard."""
     import re
-    from ipfs_search_spark.plans.query import search
+
+    import numpy as np
+    import pandas as pd
+
+    from ipfs_search_spark.plans.query import QuerySpec, _make_scorer, search
     io, _ = built_index
     df = search(spark, io, [(0, "merge OR NOT batch")], k=10)
     plan = _plan(df)
     n = len(re.findall(r"Location.*documents", plan))
     assert n == 2, f"expected 2 documents scans, got {n}"
-    assert "TakeOrderedAndProject" in plan  # branch B is bounded
+    assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
+
+    # one shard of `t OR NOT u`: docs 0..99 hold t (score > 1), docs
+    # 50..299 hold u, docs 300..399 hold neither (branch B, constant 1.0)
+    postings = _postings(("t", range(100), 2), ("u", range(50, 300), 1))
+    right = pd.DataFrame({"query_id": 0, "shard": 0,
+                          "doc_id": np.arange(400, dtype=np.int64),
+                          "allow": 1, "fbits": 0})
+    spec = QuerySpec(rows=[("t", 3.0, "t", 50.0), ("u", 0.0, "u", 50.0)],
+                     tree={"tree": ["or", "t", ["not", "u"]], "phrases": {},
+                           "fbitmap": {}, "fconst": {}},
+                     branch_b=True)
+    out = _make_scorer({0: spec}, 10, True)(postings, right)
+    assert len(out) == 10  # the shard emits at most k_page rows
+    assert set(out["doc_id"]) <= set(range(100))
+    out = _make_scorer({0: spec}, 150, True)(postings, right)
+    assert len(out) == 150
+    assert sorted(out[out["score"] > 1.0]["doc_id"]) == list(range(100))
+    assert sorted(out[out["score"] == 1.0]["doc_id"]) == list(range(300, 350))
+
+
+def test_moved_tree_shapes_run_no_more_jobs(spark, built_index):
+    """Trees with a term leaf under NOT and default-true trees share the
+    in-shard path of `lang:de OR merge`, so neither runs more Spark jobs."""
+    from ipfs_search_spark.plans.query import Searcher
+    io, _ = built_index
+    sx = Searcher(spark, io)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    try:
+        for i, q in enumerate(["lang:de OR merge",
+                               "(lang:de OR merge) AND NOT spark",
+                               "merge OR NOT batch"]):
+            group = f"moved-tree-jobs-{i}"
+            sc.setJobGroup(group, q)
+            assert sx.search([(0, q)], k=10).collect()
+            jobs[q] = len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    base = jobs.pop("lang:de OR merge")
+    assert base > 0
+    assert all(n <= base for n in jobs.values()), (base, jobs)
