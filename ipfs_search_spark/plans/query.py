@@ -15,7 +15,9 @@ Plan shape (SURVEY.md §3.3 Spark restatement):
        every query that reads it; per query: numpy BM25, block-max pruning,
        per-shard top-k (docs are disjoint across shards so the per-shard
        top-k merge is EXACT — same as Lucene's 20-shard search).
-       Filtered queries: cogroup(documents-scan allowed rows, by shard).
+       Filtered, filter-leaf and match-all queries: cogroup(one documents
+       scan's per-doc rows, by shard). Every query kind takes this one
+       candidate path; the plan does not grow with the batch.
   window rank over (query_id) → global top-k  (candidates ≤ Q·S·k rows)
   broadcast-join doc_map for url display fields
 
@@ -38,18 +40,17 @@ per-posting positions and verifies adjacency with a vectorized
 doc-sharding keeps the check shard-local and exact. Pruning is disabled
 within POSITIVE-phrase queries (a skipped block would lose position data).
 
-Negation (`-term`, `-"a b"`) resolves IN-SHARD for scoring queries:
-doc-sharding co-locates a doc's negative-term postings with its positive
-ones, so they arrive in the same shard call, excluded docs leave before
-the per-shard cut, and block-max pruning stays ON with θ computed over
-surviving docs only — no external anti-join. Match-all
-(filter/negation-only) queries keep the external anti-join path (their
-candidates come from the documents scan, not the scorer); their excluded
-doc sets come from a second call of the same shard scorer.
+Negation (`-term`, `-"a b"`) resolves IN-SHARD: doc-sharding co-locates a
+doc's negative-term postings with its positive ones (and with its
+cogrouped per-doc rows), so they arrive in the same shard call, excluded
+docs leave before the per-shard cut, and block-max pruning stays ON with θ
+computed over surviving docs only — no anti-join.
 
-Filter-only query strings are match-all-then-filter: every doc passing the
-filters at constant score 1.0, ranked by doc_id — per-query
-TakeOrderedAndProject when the query has no negative clauses.
+Match-all (filter/negation-only) query strings (`lang:de`, `lang:en
+-data`, `-data`): every indexed doc passing the filters, minus the
+excluded ones, at constant score 1.0, ranked by doc_id. The documents scan
+ships each passing doc to its shard; the shard call emits its k lowest
+surviving doc_ids.
 
 Boolean trees (parser.bool_tree — nested AND/OR/NOT with ^boost) take the
 same in-shard path, whatever their shape. Every leaf term is fetched as a
@@ -414,7 +415,9 @@ class QuerySpec:
     branch_b: the tree can match a doc holding no query term (filter
         leaves, or default-true); such docs arrive on the cogroup's right
         side and match at the constant 1.0, in every shard.
-    excl_only: match-all negation probe; emit the excluded docs.
+    match_all: a filter/negation-only query (no positive clause; flt is
+        set): its matches are its allowed docs minus the excluded ones, at
+        the constant 1.0, cut to the shard's k lowest doc_ids.
 
     Every query keeps its per-shard top-k cut."""
     rows: list = field(default_factory=list)
@@ -425,7 +428,7 @@ class QuerySpec:
     tree: dict | None = None
     flt: bool = False
     branch_b: bool = False
-    excl_only: bool = False
+    match_all: bool = False
 
     def negp_terms(self) -> set:
         return {t for g in self.negp for var in g[1] for t in var}
@@ -869,8 +872,9 @@ def _make_scorer(specs: dict, k: int, prune: bool, combine: str = "sum",
     doc-shard function. allow=1 marks a doc passing the query's conjunct
     filters (`term lang:de`): a `flt` query restricts to that set
     IN-SHARD — before θ, the AND/phrase gates and the per-shard top-k cut
-    — so filtered queries keep the cut and block-max pruning ON. fbits
-    carries the doc's positive filter-leaf bitmask for in-shard
+    — so filtered queries keep the cut and block-max pruning ON; for a
+    match-all query that set, minus its excluded docs, is the answer.
+    fbits carries the doc's positive filter-leaf bitmask for in-shard
     boolean-tree evaluation; every row of a branch-B tree is a possible
     filter-only match.
 
@@ -900,18 +904,20 @@ def _make_scorer(specs: dict, k: int, prune: bool, combine: str = "sum",
             if spec.branch_b and r is not None:
                 o = np.argsort(r[0])
                 fmap = (r[0][o], r[2][o])
-            if sp.rows_of.keys().isdisjoint(terms_of[qid]):
+            if spec.match_all:
+                # allowed is np.unique-sorted (signed, the rank's doc_id
+                # order): all tied at 1.0, the k lowest survive the rank
+                excl = _excluded(spec, sp)
+                d = (allowed if excl is None
+                     else allowed[~np.isin(allowed, excl)])[:k]
+                res = (d, np.ones(d.size))
+            elif sp.rows_of.keys().isdisjoint(terms_of[qid]):
                 if fmap is None:
                     continue
                 # no postings here: branch B alone, all tied at 1.0 —
                 # the global rank keeps the k lowest doc_ids
                 d = _branch_b(spec, fmap, allowed)[:k]
                 res = (d, np.ones(d.size))
-            elif spec.excl_only:
-                excl = _excluded(spec, sp)
-                if excl is None:
-                    continue
-                res = (excl, np.zeros(excl.size))
             else:
                 res = _score_query(spec, sp, k, prune, combine, tie_breaker,
                                    allowed, fmap)
@@ -1327,7 +1333,7 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
         raise ValueError(
             "phrase query requires a positional index "
             "(build_index(..., positions=True))")
-    matchall_qids = sorted(q for q, p in parsed.items() if p.match_all)
+    matchall_qids = {q for q, p in parsed.items() if p.match_all}
     base_terms = sorted({t for p in parsed.values()
                          for t in (p.terms + p.not_terms + p.bool_neg_terms +
                                    [t for ph in p.not_phrases for t in ph])})
@@ -1416,17 +1422,17 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
             groups.append([int(slops[gi]) if slops else 0, vars_])
         return groups
 
-    # Conjunct-filter specs for SCORING queries: the allowed doc set of
-    # each query's filters, routed to the doc's shard and cogrouped into
-    # the scorer, so the restriction (and therefore the per-shard top-k
-    # cut and block-max pruning) happens IN-SHARD. A query whose filters
-    # drop on this schema (pred 'true') is unfiltered; one whose filters
-    # cannot match any doc (pred None) matches nothing.
+    # Conjunct-filter specs: the allowed doc set of each query's filters,
+    # routed to the doc's shard and cogrouped into the scorer, so the
+    # restriction (and therefore the per-shard top-k cut and block-max
+    # pruning) happens IN-SHARD. A query whose filters drop on this schema
+    # (pred 'true') is unfiltered; one whose filters cannot match any doc
+    # (pred None) matches nothing.
     docs = sx.documents
     flt_specs: dict[int, str] = {}
     no_match: set = set()
     for qid, p in parsed.items():
-        if p.match_all or not p.filters:
+        if not p.filters:
             continue
         pr = _filters_pred(p, docs.columns)
         if pr is None:
@@ -1440,8 +1446,7 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
     # conjunct allowed sets and cogrouped to the doc's shard as a bitmask.
     leaf_preds: dict[int, list] = {}  # qid -> [(bit, pos_pred_sql)]
 
-    specs: dict[int, QuerySpec] = {}       # scoring queries
-    excl_specs: dict[int, QuerySpec] = {}  # match-all negation probes
+    specs: dict[int, QuerySpec] = {}
     for qid, p in parsed.items():
         if qid in no_match:
             continue
@@ -1452,7 +1457,7 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
         # (likewise an expansion clause with zero vocabulary matches), so
         # the conjunction is empty — don't silently drop the clause
         # (boolean trees handle absent terms as always-false leaves instead)
-        if p.bool_tree is None and p.mode == "and" and not p.match_all \
+        if p.bool_tree is None and p.mode == "and" \
                 and (len(pos) < len(p.terms)
                      or len(live_exps) < len(p.expansions)):
             continue
@@ -1496,16 +1501,14 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
         # expanded to); NEGATIVE = minimum_should_match floor (at least
         # |n| distinct groups — AND mode supersedes it, all are required)
         n_grp = (len(pos) + len(live_exps)
-                 if (p.mode == "and" and p.bool_tree is None
-                     and not p.match_all) else 0)
-        if (min_should_match > 1 and n_grp == 0 and p.bool_tree is None
-                and not p.match_all):
+                 if p.mode == "and" and p.bool_tree is None else 0)
+        if min_should_match > 1 and n_grp == 0 and p.bool_tree is None:
             n_grp = -int(min_should_match)
         qs = QuerySpec(n_groups=n_grp,
                        phrases=pos_groups if p.phrases else [],
-                       tree=spec, flt=qid in flt_specs,
+                       tree=spec, flt=qid in flt_specs or p.match_all,
                        branch_b=qid in b_qids,
-                       negp=live_np, excl_only=p.match_all)
+                       negp=live_np, match_all=p.match_all)
 
         def _exp_rows(e, gkey, scored):
             """Scoring rows of one expansion clause: every vocabulary match
@@ -1523,174 +1526,121 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                     b, af = boost_e, avgdl
                 qs.rows.append((ft, t_idf * b, gkey, af))
 
-        if not p.match_all:
-            for e in live_exps:
-                _exp_rows(e, e.key, True)
-            if p.bool_tree is not None:
-                # expansion leaves inside the tree: the leaf key is the
-                # scorer group key, so presence M[:,g] is true iff ANY
-                # expansion term matched — OR-of-variants leaf semantics
-                for key in sorted(p.bool_expansions):
-                    _exp_rows(p.bool_expansions[key], key,
-                              key in p.bool_exp_scored)
-            for t in pos:
+        for e in live_exps:
+            _exp_rows(e, e.key, True)
+        if p.bool_tree is not None:
+            # expansion leaves inside the tree: the leaf key is the
+            # scorer group key, so presence M[:,g] is true iff ANY
+            # expansion term matched — OR-of-variants leaf semantics
+            for key in sorted(p.bool_expansions):
+                _exp_rows(p.bool_expansions[key], key,
+                          key in p.bool_exp_scored)
+        for t in pos:
+            for fld, ft in variants(t):
+                if fld is None:
+                    t_idf, boost, av = (idf(n_docs, tstats[ft][0]), 1.0,
+                                        avgdl)
+                else:
+                    nf, af = fstats[fld]
+                    t_idf, boost, av = (idf(nf, tstats[ft][0]),
+                                        float(fields[fld]), af)
+                boost *= float(p.boosts.get(t, 1.0))  # ^boost on idf
+                qs.rows.append((ft, t_idf * boost, t, av))
+        if p.bool_tree is not None:
+            # NOT-context-only leaves: fetched for presence, idf 0
+            # so they never contribute score
+            for t in p.bool_neg_terms:
                 for fld, ft in variants(t):
-                    if fld is None:
-                        t_idf, boost, av = (idf(n_docs, tstats[ft][0]), 1.0,
-                                            avgdl)
-                    else:
-                        nf, af = fstats[fld]
-                        t_idf, boost, av = (idf(nf, tstats[ft][0]),
-                                            float(fields[fld]), af)
-                    boost *= float(p.boosts.get(t, 1.0))  # ^boost on idf
-                    qs.rows.append((ft, t_idf * boost, t, av))
-            if p.bool_tree is not None:
-                # NOT-context-only leaves: fetched for presence, idf 0
-                # so they never contribute score
-                for t in p.bool_neg_terms:
-                    for fld, ft in variants(t):
-                        av = avgdl if fld is None else fstats[fld][1]
-                        qs.rows.append((ft, 0.0, t, av))
-        # negative clauses: scoring queries resolve them IN-SHARD (doc-
-        # sharding co-locates a doc's negative postings with its positive
-        # ones), which keeps per-shard top-k cuts and block pruning on;
-        # match-all queries run the same spec as an exclusion probe
-        # (their candidates come from the documents scan, not the scorer).
-        # Negated expansions (`-te*`, `-term~1`) exclude docs matching ANY
-        # expansion term.
+                    av = avgdl if fld is None else fstats[fld][1]
+                    qs.rows.append((ft, 0.0, t, av))
+        # negative clauses resolve IN-SHARD (doc-sharding co-locates a
+        # doc's negative postings with its positive ones and with its
+        # cogrouped per-doc rows), which keeps per-shard top-k cuts and
+        # block pruning on. Negated expansions (`-te*`, `-term~1`) exclude
+        # docs matching ANY expansion term.
         qs.negs = ([ft for t in neg for _, ft in variants(t)]
                    + sorted({t for e in p.not_expansions
                              for t in exp_terms.get(e.key, [])}))
-        if not p.match_all:
-            if qs.terms() or qs.branch_b:
-                specs[qid] = qs
-        elif qs.terms():
-            excl_specs[qid] = qs
-    if not specs and not matchall_qids:
+        if qs.terms() or qs.branch_b or qs.match_all:
+            specs[qid] = qs
+    if not specs:
         return spark.createDataFrame(
             [], "query_id int, rank int, doc_id long, url string, score double")
 
-    def postings_scan(q_specs: dict) -> DataFrame:
-        """The batch's postings rows, pruned by bucket (partition
-        directories) and term (row-group stats), one per (term, shard,
-        segment), grouped by shard: every query's terms ride in the
-        scorer closure, so each posting list ships and decodes once."""
-        terms = sorted({t for s in q_specs.values() for t in s.terms()})
-        buckets = sorted({tstats[t][1] for t in terms})
-        return (sx.postings
+    # the batch's postings rows, pruned by bucket (partition directories)
+    # and term (row-group stats), one per (term, shard, segment), grouped
+    # by shard: every query's terms ride in the scorer closure, so each
+    # posting list ships and decodes once
+    terms = sorted({t for qs in specs.values() for t in qs.terms()})
+    buckets = sorted({tstats[t][1] for t in terms})
+    postings = (sx.postings
                 .filter(F.col("bucket").isin(buckets) &
                         F.col("term").isin(terms))
                 .select("shard", "term", "blocks")
                 .groupBy("shard"))
-
-    def postings_only(score):
+    score = _make_scorer(specs, k_page, prune, combine, tie_breaker)
+    cg_qids = sorted(q for q, qs in specs.items() if qs.flt or qs.branch_b)
+    if cg_qids:
+        # ONE pruned documents scan serves every query of the batch that
+        # reads per-doc rows: the OR of their predicates pushes down —
+        # conjunct filters and positive-form filter leaves, or the
+        # conjunct filters alone (`true` when none) for a default-true
+        # tree or a match-all query, every doc passing them being a
+        # possible match. Each scanned doc emits one row per query it is
+        # relevant to — allow=1 when it passes the query's conjunct
+        # filters, fbits = the bitmask of satisfied positive-form filter
+        # leaves — routed to the doc's postings shard for the cogroup.
+        every = dt_qids | matchall_qids
+        scan_preds, structs = [], []
+        for q in cg_qids:
+            conj = flt_specs.get(q)
+            if q in every:
+                scan_preds.append(conj or "true")
+            else:
+                scan_preds += ([conj] if conj else []) + \
+                    [pr for _, pr in leaf_preds.get(q, [])]
+            allow_e = (F.when(F.expr(conj), F.lit(1)).otherwise(F.lit(0))
+                       if conj else F.lit(int(q in every)))
+            fb_e = F.lit(0).cast("long")
+            for bit, pr in leaf_preds.get(q, []):
+                fb_e = fb_e + (
+                    F.when(F.expr(pr), F.lit(1 << bit).cast("long"))
+                    .otherwise(F.lit(0).cast("long")))
+            structs.append(F.struct(
+                F.lit(q).cast("int").alias("query_id"),
+                allow_e.cast("int").alias("allow"),
+                fb_e.alias("fbits")))
+        if scan_preds:
+            # the INDEXED set (status ok), like a search engine's
+            # match_all over its own index
+            base_scan = (docs.filter(F.col("status") == "ok")
+                         if "status" in docs.columns else docs)
+            rel = F.filter(
+                F.array(*structs),
+                lambda s: (s["allow"] == 1) | (s["fbits"] != 0))
+            allowed_df = (
+                base_scan.filter(F.expr(" OR ".join(
+                    f"({pr})" for pr in scan_preds)))
+                .select("doc_id", F.explode(rel).alias("s"))
+                .withColumn("shard",
+                            F.pmod(F.xxhash64("doc_id"),
+                                   F.lit(sx.n_shards)).cast("int"))
+                .select(F.col("s.query_id").alias("query_id"), "shard",
+                        F.col("doc_id").cast("long").alias("doc_id"),
+                        F.col("s.allow").alias("allow"),
+                        F.col("s.fbits").alias("fbits")))
+        else:  # every filter leaf is on a column this index lacks
+            allowed_df = spark.createDataFrame(
+                [], "query_id int, shard int, doc_id long, "
+                    "allow int, fbits long")
+        candidates = postings.cogroup(
+            allowed_df.groupBy("shard")
+        ).applyInPandas(score, CANDIDATE_SCHEMA)
+    else:
         # applyInPandas hands a two-argument function the group key first
-        return lambda postings: score(postings)
+        candidates = postings.applyInPandas(lambda pdf: score(pdf),
+                                            CANDIDATE_SCHEMA)
 
-    candidates = None
-    if specs:
-        score = _make_scorer(specs, k_page, prune, combine, tie_breaker)
-        cg_qids = sorted(q for q, qs in specs.items()
-                         if qs.flt or qs.branch_b)
-        if cg_qids:
-            # ONE pruned documents scan serves every query of the batch
-            # that reads per-doc rows: the OR of their predicates pushes
-            # down — conjunct filters and positive-form filter leaves, or
-            # the conjunct filters alone (`true` when none) for a
-            # default-true tree, every doc passing them being a possible
-            # match. Each scanned doc emits one row per query it is
-            # relevant to — allow=1 when it passes the query's conjunct
-            # filters, fbits = the bitmask of satisfied positive-form
-            # filter leaves — routed to the doc's postings shard for the
-            # cogroup.
-            scan_preds, structs = [], []
-            for q in cg_qids:
-                conj = flt_specs.get(q)
-                if q in dt_qids:
-                    scan_preds.append(conj or "true")
-                else:
-                    scan_preds += ([conj] if conj else []) + \
-                        [pr for _, pr in leaf_preds.get(q, [])]
-                allow_e = (F.when(F.expr(conj), F.lit(1)).otherwise(F.lit(0))
-                           if conj else F.lit(int(q in dt_qids)))
-                fb_e = F.lit(0).cast("long")
-                for bit, pr in leaf_preds.get(q, []):
-                    fb_e = fb_e + (
-                        F.when(F.expr(pr), F.lit(1 << bit).cast("long"))
-                        .otherwise(F.lit(0).cast("long")))
-                structs.append(F.struct(
-                    F.lit(q).cast("int").alias("query_id"),
-                    allow_e.cast("int").alias("allow"),
-                    fb_e.alias("fbits")))
-            if scan_preds:
-                base_scan = (docs.filter(F.col("status") == "ok")
-                             if "status" in docs.columns else docs)
-                rel = F.filter(
-                    F.array(*structs),
-                    lambda s: (s["allow"] == 1) | (s["fbits"] != 0))
-                allowed_df = (
-                    base_scan.filter(F.expr(" OR ".join(
-                        f"({pr})" for pr in scan_preds)))
-                    .select("doc_id", F.explode(rel).alias("s"))
-                    .withColumn("shard",
-                                F.pmod(F.xxhash64("doc_id"),
-                                       F.lit(sx.n_shards)).cast("int"))
-                    .select(F.col("s.query_id").alias("query_id"), "shard",
-                            F.col("doc_id").cast("long").alias("doc_id"),
-                            F.col("s.allow").alias("allow"),
-                            F.col("s.fbits").alias("fbits")))
-            else:  # every filter leaf is on a column this index lacks
-                allowed_df = spark.createDataFrame(
-                    [], "query_id int, shard int, doc_id long, "
-                        "allow int, fbits long")
-            candidates = postings_scan(specs).cogroup(
-                allowed_df.groupBy("shard")
-            ).applyInPandas(score, CANDIDATE_SCHEMA)
-        else:
-            candidates = postings_scan(specs).applyInPandas(
-                postings_only(score), CANDIDATE_SCHEMA)
-
-    # match-all negation probes (the excluded doc sets), through the same
-    # shard scorer, are built up front so the per-query loop below can
-    # anti-join BEFORE its top-k cut
-    neg_union = None
-    if excl_specs:
-        excl = _make_scorer(excl_specs, k, False, combine, tie_breaker)
-        neg_union = postings_scan(excl_specs).applyInPandas(
-            postings_only(excl), CANDIDATE_SCHEMA
-        ).select("query_id", "doc_id")
-
-    # match-all-then-filter queries (filter/negation-only query strings):
-    # every doc passing the filters, constant score 1.0, ranked by doc_id —
-    # the scan is pruned by the filter predicate. The per-query
-    # orderBy.limit (a TakeOrderedAndProject) applies to EVERY match-all
-    # query: negation queries anti-join their excluded doc set first, so
-    # "lang:de -spam" never ships its full filtered doc set into one rank
-    # window partition (that union was O(N) rows through one reducer).
-    for qid in matchall_qids:
-        p = parsed[qid]
-        # match-all ranges over the INDEXED set (status ok), like a search
-        # engine's match_all over its own index
-        d = (docs.filter(F.col("status") == "ok")
-             if "status" in docs.columns else docs)
-        pred = _filters_pred(p, docs.columns)
-        if pred is None:
-            continue  # filters cannot match any doc on this index
-        if pred != "true":
-            d = d.filter(F.expr(pred))
-        sel = d.select(F.lit(qid).cast("int").alias("query_id"),
-                       F.col("doc_id").cast("long").alias("doc_id"),
-                       F.lit(1.0).alias("score"))
-        if (p.not_terms or p.not_phrases or p.not_expansions) \
-                and neg_union is not None:
-            sel = sel.join(neg_union.filter(F.col("query_id") == qid),
-                           ["query_id", "doc_id"], "left_anti")
-        sel = sel.orderBy("doc_id").limit(k_page)
-        candidates = sel if candidates is None else candidates.unionByName(sel)
-
-    if candidates is None:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, doc_id long, url string, score double")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     topk = (candidates.withColumn("rank", F.row_number().over(w))
             .filter((F.col("rank") <= k_page) & (F.col("rank") > offset)))
@@ -1698,7 +1648,7 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
     # table never shuffles (at 100 TB the doc_map is bucketed by doc_id and
     # this becomes a storage-partitioned join; the projection below prunes the
     # scan to two columns either way). INNER join, deliberately: every top-k
-    # doc_id was emitted by postings/branch-B scans over THIS documents table,
+    # doc_id came from the postings or the documents scan of THIS index,
     # so inner == right-outer here — and BroadcastHashJoin cannot build the
     # right side of a right-outer join (the hint would be silently dropped and
     # the full documents table would shuffle against k rows).

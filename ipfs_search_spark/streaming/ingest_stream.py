@@ -58,9 +58,10 @@ def rate_windows(df: DataFrame, time_col: str, *,
     Accepts a batch DataFrame (windowed groupBy) or a streaming one
     (watermarked stateful aggregation, append mode: a window emits once
     the event-time watermark passes its end and its state is dropped — the
-    same bounded-state contract as the sniffer dedup above). Batch/streaming
-    parity is tested for TUMBLING windows only (the q_crawl_rate streaming
-    replay); sliding and session windows are tested in batch mode only.
+    same bounded-state contract as the sniffer dedup above). Streaming
+    output equals the batch output for tumbling, sliding and session
+    windows (tests/test_streaming.py; tumbling also through the
+    q_crawl_rate streaming replay).
     Columns out: window_start, window_end, *keys, n_events[, sum_value].
     Spark aligns tumbling/sliding windows to the 1970 epoch, so a batch
     SQL oracle is `floor(epoch(ts)/W)*W` bucketing (session windows have

@@ -123,8 +123,9 @@ def test_legacy_segment_without_stats_raises(spark):
 
 def test_segments_only_index_matches_rebuild(spark):
     """An index made of micro-batch appends alone (no base build, so no
-    index_stats) answers filtered, filter-leaf and default-true queries
-    exactly like a from-scratch build: the segments record n_shards, so
+    index_stats) answers filtered, filter-leaf, default-true and match-all
+    queries exactly like a from-scratch build (a negative term's postings
+    span several segment rows in one shard): the segments record n_shards, so
     the per-doc rows route to the right shard."""
     all_pages = pages_df(spark, n=300, seed=31).cache()
     b1 = all_pages.limit(120).cache()
@@ -140,7 +141,8 @@ def test_segments_only_index_matches_rebuild(spark):
     build_index(spark, all_pages, io_full, n_shards=4, n_buckets=16)
 
     queries = [(0, "data lang:de"), (1, "lang:de OR data"),
-               (2, "data OR NOT lang:de")]
+               (2, "data OR NOT lang:de"), (3, "lang:de -spark"),
+               (4, "-data")]
     seg = _results(Searcher(spark, io_seg), queries)
     assert seg == _results(Searcher(spark, io_full), queries)
     assert all(seg.get(q) for q, _ in queries)

@@ -5,7 +5,8 @@ The reference's index stores `term_vector: with_positions_offsets`
 OpenSearch query_string (/root/reference/docs/api.md:4) where quoted phrases
 require adjacency. Our contract (plans/parser.py): quoted phrases are
 required clauses; their terms also score; `-"a b"` excludes phrase matches;
-filter-only queries are match-all-then-filter ranked by doc_id.
+filter-only queries are match-all-then-filter ranked by doc_id, run
+through the same per-shard scorer as every other query.
 """
 
 import numpy as np

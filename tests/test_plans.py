@@ -184,7 +184,9 @@ def test_batch_rows_equal_solo_runs(spark, pos_index):
     sx = Searcher(spark, pos_index)
     batch = ["data spark", "+data spark -merge", "data spark lang:en",
              "da* merge", "(data^2 OR spark) AND merge", "data OR NOT spark",
-             '"data spark"~2 merge', "lang:en -data", "lang:de OR merge"]
+             '"data spark"~2 merge', "lang:en -data", "lang:de OR merge",
+             "-data", "lang:de -dat*", 'lang:en -"data spark"',
+             "-lang:en -lang:de"]
     qs = list(enumerate(batch))
     df = sx.search(qs, k=5)
     rows = [tuple(r) for r in df.collect()]
@@ -205,16 +207,22 @@ def test_batch_rows_equal_solo_runs(spark, pos_index):
 
 
 def test_matchall_negation_is_bounded(spark, built_index):
-    """A match-all query with a prohibited term ('lang:en -data') must cut
-    to k rows via a per-query TakeOrderedAndProject AFTER its anti-join —
-    never rank every surviving doc in one window partition."""
+    """A match-all query with a prohibited term ('lang:en -data') runs in
+    the per-shard scorer like every other query: each shard emits its k
+    lowest allowed doc_ids without the term, so no window partition ever
+    ranks every surviving doc — and no anti-join or per-query
+    TakeOrderedAndProject is planned."""
+    import numpy as np
+    import pandas as pd
     import pyspark.sql.functions as FF
 
     from ipfs_search_spark.functions.tokenize import tokens_array
-    from ipfs_search_spark.plans.query import search
+    from ipfs_search_spark.plans.query import QuerySpec, _make_scorer, search
     io, _ = built_index
     df = search(spark, io, [(0, "lang:en -data")], k=5)
-    assert "TakeOrderedAndProject" in _plan(df)
+    plan = _plan(df)
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert "LeftAnti" not in plan and "TakeOrderedAndProject" not in plan
     got = [r["doc_id"] for r in df.collect()]
     docs = io.read("documents")
     expected = [r["doc_id"] for r in docs
@@ -223,6 +231,19 @@ def test_matchall_negation_is_bounded(spark, built_index):
                                            "data"))
                 .orderBy("doc_id").limit(5).collect()]
     assert got == expected
+
+    # one shard: 300 allowed docs, t held by docs 0..99 and 200..249
+    postings = _postings(("t", [*range(100), *range(200, 250)], 1))
+    right = pd.DataFrame({"query_id": 0, "shard": 0,
+                          "doc_id": np.arange(300, dtype=np.int64)[::-1],
+                          "allow": 1, "fbits": 0})
+    spec = QuerySpec(negs=["t"], flt=True, match_all=True)
+    out = _make_scorer({0: spec}, 5, True)(postings, right)
+    assert list(out["doc_id"]) == list(range(100, 105))
+    assert set(out["score"]) == {1.0}
+    # a shard holding none of the negative terms still emits its allowed docs
+    out = _make_scorer({0: spec}, 5, True)(_postings(("u", [7], 1)), right)
+    assert list(out["doc_id"]) == list(range(5))
 
 
 def test_filtered_query_cut_stays_on_in_shard():
@@ -258,9 +279,10 @@ def test_filtered_query_cut_stays_on_in_shard():
 
 
 def test_filtered_batch_plans_one_documents_scan(spark, built_index):
-    """A batch of 10 filtered queries plans ONE documents scan for the
-    allowed sets (plus the display-field join's scan) — not one scan per
-    filtered query (r3 verdict #3)."""
+    """A batch of 10 filtered queries and 10 match-all queries plans ONE
+    documents scan for the allowed sets (plus the display-field join's
+    scan) — not one scan per filtered or match-all query, and no
+    anti-join."""
     import re
 
     from ipfs_search_spark.plans.query import search
@@ -270,16 +292,20 @@ def test_filtered_batch_plans_one_documents_scan(spark, built_index):
     langs = ["en", "de", "fr"] * 4
     batch = [(i, f"{t} lang:{lc}")
              for i, (t, lc) in enumerate(zip(terms, langs))]
+    batch += [(10 + i, f"lang:{lc} -{t}")
+              for i, (t, lc) in enumerate(zip(terms, langs))]
     df = search(spark, io, batch, k=5)
     plan = _plan(df)
     n_doc_scans = len(re.findall(r"Location.*documents", plan))
     assert n_doc_scans == 2, f"expected 2 documents scans, got {n_doc_scans}"
     assert "FlatMapCoGroupsInPandas" in plan
+    assert "LeftAnti" not in plan
     # results still exact: spot-check one query against the solo run
-    got = [tuple(r) for r in df.collect() if r["query_id"] == 3]
-    solo = [tuple(r) for r in
-            search(spark, io, [(3, "block lang:en")], k=5).collect()]
-    assert got == solo and got
+    rows = [tuple(r) for r in df.collect()]
+    for qid, q in ((3, "block lang:en"), (13, "lang:en -block")):
+        got = [r for r in rows if r[0] == qid]
+        solo = [tuple(r) for r in search(spark, io, [(qid, q)], k=5).collect()]
+        assert got == solo and got, q
 
 
 def test_fast_filter_tree_is_in_shard(spark, built_index):

@@ -87,9 +87,15 @@ def _flat_parquet(df, out_path, mtime):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_rate_windows_tumbling_stream_matches_batch(spark, stream_dirs):
-    """T7 tumbling windows: the REAL streaming rollup (watermark + append
-    mode) emits exactly the batch windowed groupBy, epoch-aligned."""
+@pytest.mark.parametrize("mode", [
+    {"window": "15 minutes"},
+    {"window": "30 minutes", "slide": "15 minutes"},
+    {"session_gap": "10 minutes"},
+], ids=["tumbling", "sliding", "session"])
+def test_rate_windows_stream_matches_batch(spark, stream_dirs, mode):
+    """T7 tumbling, sliding and session windows: the REAL streaming rollup
+    (watermark + append mode) emits exactly the batch windowed groupBy,
+    tumbling/sliding windows epoch-aligned."""
     from ipfs_search_spark.streaming.ingest_stream import rate_windows
     src, ckpt = stream_dirs
     ev = _planted_events(spark)
@@ -104,29 +110,30 @@ def test_rate_windows_tumbling_stream_matches_batch(spark, stream_dirs):
     stream = (spark.readStream
               .schema("event_type string, ts timestamp, value double")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    out = rate_windows(stream, "ts", window="15 minutes",
-                       keys=("event_type",), value_col="value")
+    out = rate_windows(stream, "ts", keys=("event_type",),
+                       value_col="value", **mode)
     q = (out.writeStream.format("memory").queryName("rates")
          .outputMode("append").option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {(str(r["window_start"]), str(r["window_end"]), r["event_type"],
             r["n_events"], r["sum_value"])
            for r in spark.table("rates").collect()
            if r["event_type"] != "sentinel"}
+    spark.catalog.dropTempView("rates")
     want = {(str(r["window_start"]), str(r["window_end"]), r["event_type"],
              r["n_events"], r["sum_value"])
-            for r in rate_windows(ev, "ts", window="15 minutes",
-                                  keys=("event_type",),
-                                  value_col="value").collect()}
-    assert got == want
-    # epoch alignment + planted contents
-    assert ("2024-01-01 10:00:00", "2024-01-01 10:15:00", "view", 2, 3.0) \
-        in got
-    assert ("2024-01-01 10:15:00", "2024-01-01 10:30:00", "view", 1, 4.0) \
-        in got
-    assert ("2024-01-01 10:00:00", "2024-01-01 10:15:00", "click", 1, 8.0) \
-        in got
+            for r in rate_windows(ev, "ts", keys=("event_type",),
+                                  value_col="value", **mode).collect()}
+    assert got == want and got
+    if "window" in mode and "slide" not in mode:
+        # epoch alignment + planted contents
+        assert ("2024-01-01 10:00:00", "2024-01-01 10:15:00", "view", 2,
+                3.0) in got
+        assert ("2024-01-01 10:15:00", "2024-01-01 10:30:00", "view", 1,
+                4.0) in got
+        assert ("2024-01-01 10:00:00", "2024-01-01 10:15:00", "click", 1,
+                8.0) in got
 
 
 def test_rate_windows_sliding(spark):
