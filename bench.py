@@ -7,11 +7,13 @@ local[$SPARK_GRAFT_CPUS]:
     deterministically synthesized corpus (distributed generation), docs/sec
   - bm25 query set: p50 latency over a fixed query mix on the built index
   - headline table ops from __spark_entry__ at the sf dir
-  - scaling: the SAME build at local[8] vs local[32] (the sandbox proxy for
-    N→4N executors, per BASELINE.md) → throughput at both + efficiency.
+  - scaling: the SAME build at local[2] vs local[8] (the sandbox proxy for
+    N→4N executors, per BASELINE.md) → throughput at both + efficiency, one
+    gated session appended to SCALING_SWEEP.json.
     Skippable with SPARK_GRAFT_SKIP_SCALING=1.
 
-Also refreshes the measured-numbers table in BENCH.md.
+Also refreshes the measured-numbers table in BENCH.md. The repo benchmark
+(per-layer traces, parent/change comparisons) is perfbench/run.py.
 """
 
 from __future__ import annotations
@@ -41,17 +43,15 @@ N_SCALE_PAGES = int(os.environ.get("SPARK_GRAFT_SCALE_PAGES", "480000"))
 # raw-CPU probe on this box (32 mp workers hashing) scales ~4.06x from 1→4
 # and only ~2.5x from 8→32 — lanes past ~16 behave like SMT threads, so
 # 8→32 cannot evidence algorithmic scaling on ANY code; 2→8 stays on
-# full-strength lanes. Unpinned by default (the task-level definition:
-# local[N] task slots, like executor slots; SPARK_GRAFT_SCALE_PIN=1
-# additionally pins the process tree — but note the pinned variant
-# measures single-box ceilings a cluster does not have: this VM's 32 cores
-# share ONE L3/DRAM domain, and pinned 1→4 measurements show BOTH the JVM
-# and the python workers burning ~50% more cycles for identical work as
-# soon as neighbors occupy the same cache domain, while a cache-resident
-# md5 probe scales 4.06x — contention no plan change can remove, and which
-# a real 4N-executor cluster, one L3+DRAM per node, does not exhibit).
-SCALE_LEVELS = tuple(int(x) for x in os.environ.get(
-    "SPARK_GRAFT_SCALE_LEVELS", "2,8").split(","))
+# full-strength lanes. Unpinned (the task-level definition: local[N] task
+# slots, like executor slots). Pinning the process tree would measure
+# single-box ceilings a cluster does not have: this VM's 32 cores share
+# ONE L3/DRAM domain, and pinned 1→4 measurements show BOTH the JVM and
+# the python workers burning ~50% more cycles for identical work as soon
+# as neighbors occupy the same cache domain, while a cache-resident md5
+# probe scales 4.06x — contention no plan change can remove, and which a
+# real 4N-executor cluster, one L3+DRAM per node, does not exhibit.
+SCALE_LEVELS = (2, 8)
 SEED = 42
 
 QUERY_MIX = [
@@ -123,7 +123,7 @@ def build_once(spark, n_pages: int, workdir: str) -> tuple[float, int]:
     return secs, stats["n_docs"]
 
 
-QUERY_RUNS = int(os.environ.get("SPARK_GRAFT_QUERY_RUNS", "2"))
+QUERY_RUNS = 2
 
 
 def _timed(fn, runs: int = 0) -> float:
@@ -231,7 +231,7 @@ def bench_table_ops(spark) -> dict[str, float]:
     return out
 
 
-N_SCALE_ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "3"))
+N_SCALE_ROUNDS = 3
 
 
 def _probe_work(reps: int) -> int:
@@ -310,27 +310,18 @@ def _cpu_chunk(_) -> int:
     return _probe_work(250_000)
 
 
-GATE_TRIES = int(os.environ.get("SPARK_GRAFT_GATE_TRIES", "10"))
-# Known quiet-box probe floor (seconds): seeding the gate's "best seen"
-# keeps a session that STARTS inside a contended phase from accepting its
-# own degraded first probe as the baseline (the gate only compares within
-# a session otherwise).
-PROBE_BEST_SEED = os.environ.get("SPARK_GRAFT_PROBE_BEST")
+GATE_TRIES = 10
 
 
 def wait_for_quiet_host(best_probe: float | None, tol: float = 1.15,
                         max_tries: int = GATE_TRIES) -> tuple[float, float]:
     """Gate a measurement on host capacity: probe until within `tol` of the
-    best capacity seen this bench session (or tries exhausted — raise
-    SPARK_GRAFT_GATE_TRIES when the box is in a long contended phase; the
-    1.2M r3 session ran after a 150 s gate timeout inside a window whose
-    memcpy envelope was 0.39 and recorded a misleading 0.44 raw). Returns
-    (this_probe_seconds, updated_best)."""
+    best capacity seen this bench session, seeded with the history's quiet
+    floor (or tries exhausted — the 1.2M r3 session ran after a 150 s gate
+    timeout inside a window whose memcpy envelope was 0.39 and recorded a
+    misleading 0.44 raw). Returns (this_probe_seconds, updated_best)."""
     if best_probe is None:
-        if PROBE_BEST_SEED:
-            best_probe = float(PROBE_BEST_SEED)
-        else:
-            best_probe = _history_probe_floor()
+        best_probe = _history_probe_floor()
     t = cpu_probe()
     best = t if best_probe is None else min(best_probe, t)
     tries = 0
@@ -347,10 +338,9 @@ SWEEP_FILE = os.path.join(REPO, "SCALING_SWEEP.json")
 
 def _history_probe_floor() -> float | None:
     """Lowest capacity probe across every recorded gated session — the
-    box's known quiet floor. Seeds the gate when SPARK_GRAFT_PROBE_BEST is
-    unset, so a bench session that STARTS inside a contended phase (e.g. an
-    unattended end-of-round run) never accepts its own degraded first probe
-    as the session baseline."""
+    box's known quiet floor. Seeds the gate, so a bench session that STARTS
+    inside a contended phase (e.g. an unattended end-of-round run) never
+    accepts its own degraded first probe as the session baseline."""
     try:
         with open(SWEEP_FILE) as f:
             hist = json.load(f)
@@ -374,8 +364,8 @@ def bw_envelope_probe() -> float:
     return round((lo / hi) / 4.0, 3)
 
 
-DRAM_GATE_MIN = float(os.environ.get("SPARK_GRAFT_DRAM_GATE", "0.55"))
-DRAM_GATE_TRIES = int(os.environ.get("SPARK_GRAFT_DRAM_TRIES", "5"))
+DRAM_GATE_MIN = 0.55
+DRAM_GATE_TRIES = 5
 
 
 def wait_for_quiet_dram(min_eff: float = DRAM_GATE_MIN,
@@ -414,37 +404,6 @@ def _record_sweep(entry: dict) -> None:
         json.dump(hist, f, indent=1)
 
 
-# adjacency notes between build tags whose timed HOT LOOPS are identical —
-# verified by hashing the predecessor tree with the same _engine_version
-# units (e.g. `git worktree add <tmp> <commit>` + _engine_version there).
-# Rendered into BENCH.md so a floor comparison across such tags is
-# readable as one engine where that is actually true.
-BUILD_LINEAGE = {
-    "build-fc409db5a0":
-        " Lineage: build-fc409db5a0 differs from build-3a1bf56677 ONLY "
-        "by the catalog alias layer (S12: TableIO.read resolves aliases "
-        "— one driver-side os.stat per table OPEN, zero per-row work); "
-        "every index-build hot loop is byte-identical, so 3a1bf5 floors "
-        "remain directly comparable.",
-    "build-bd4b4e1cc6":
-        " Lineage: build-bd4b4e1cc6 differs from build-3a1bf56677 only "
-        "in the catalog layer — alias resolution on read (one "
-        "driver-side os.stat per table OPEN) and crash-safe overwrite "
-        "(Spark writes each table to a .tmp- dir, then one directory "
-        "rename swaps it live: identical bytes written, plus ~2 "
-        "driver-side renames per build). Every tokenize/encode/shuffle "
-        "hot loop is byte-identical, so 3a1bf5 floors remain directly "
-        "comparable.",
-    "build-7ca8caf92d":
-        " Lineage: build-7ca8caf92d differs from build-bd4b4e1cc6 only "
-        "by a TTL bound on the Iceberg-branch alias cache in "
-        "TableIO.aliases (r5 review) — dead code on the parquet "
-        "fallback the scaling build runs; every timed hot loop is "
-        "byte-identical, so bd4b4e and 3a1bf5 floors remain directly "
-        "comparable.",
-}
-
-
 def _engine_version() -> str:
     """Source hash of the callables on the scaling build's timed path, so
     floors are compared per BUILD version (r4 verdict: a merged ratio
@@ -458,6 +417,7 @@ def _engine_version() -> str:
     from ipfs_search_spark.functions import codec, extract, tokenize
     from ipfs_search_spark.operators import index_build as ib
     units = [ib.latest_pages, ib.canonical_documents, ib._make_encoder,
+             ib.shard_of, ib.route_tokens, ib.encode_postings,
              ib.doc_stats_sums, ib.build_postings, ib.build_index,
              ib.build_index_from_docs, catalog.TableIO,
              fixtures.pages_df_distributed, session.get_spark,
@@ -520,8 +480,7 @@ def sweep_summary() -> list[dict]:
     return out
 
 
-def scaling_run(n_pages: int = N_SCALE_PAGES,
-                rounds: int = N_SCALE_ROUNDS) -> dict:
+def scaling_run() -> dict:
     """Same (large) build at two parallelism levels: evidences the north
     rule's N→4N scaling criterion (two local parallelism levels are the
     sandbox proxy for N vs 4N executors, BASELINE.md).
@@ -536,19 +495,15 @@ def scaling_run(n_pages: int = N_SCALE_PAGES,
     level. All raw runs are reported for transparency, and every session is
     appended to SCALING_SWEEP.json (the durable multi-size history)."""
     lo, hi = SCALE_LEVELS
-    pages_dir = os.environ.get("SPARK_GRAFT_SCALE_CORPUS")
-    cleanup = pages_dir is None
-    if pages_dir is None:
-        pages_dir = tempfile.mkdtemp(prefix="isx-scale-pages-", dir=SHM)
-        # synthesize the shared corpus ONCE on all cores (untimed)
-        gen = _new_spark(CPUS)
-        try:
-            from ipfs_search_spark.fixtures import pages_df_distributed
-            pages_df_distributed(gen, n_pages, seed=SEED,
-                                 partitions=64) \
-                .write.mode("overwrite").parquet(pages_dir)
-        finally:
-            gen.stop()
+    pages_dir = tempfile.mkdtemp(prefix="isx-scale-pages-", dir=SHM)
+    # synthesize the shared corpus ONCE on all cores (untimed)
+    gen = _new_spark(CPUS)
+    try:
+        from ipfs_search_spark.fixtures import pages_df_distributed
+        pages_df_distributed(gen, N_SCALE_PAGES, seed=SEED, partitions=64) \
+            .write.mode("overwrite").parquet(pages_dir)
+    finally:
+        gen.stop()
 
     # session-level DRAM gate (see wait_for_quiet_dram): don't start timing
     # into a window whose aggregate memory bandwidth a co-tenant owns
@@ -557,15 +512,8 @@ def scaling_run(n_pages: int = N_SCALE_PAGES,
     probes: list[float] = []
     best_probe: float | None = None
     n_docs = 0
-    # SPARK_GRAFT_SCALE_HI_FIRST=1 runs the hi level first each round: the
-    # session-level DRAM gate guarantees quiet at session START, and this
-    # box's quiet windows often last < 3 min — shorter than one lo run —
-    # so the first slot is the most reliably quiet one. hi (the faster,
-    # noise-sensitive level) benefits most from it.
-    order = ((hi, lo) if os.environ.get("SPARK_GRAFT_SCALE_HI_FIRST") == "1"
-             else (lo, hi))
-    for _ in range(rounds):
-        for cpus in order:
+    for _ in range(N_SCALE_ROUNDS):
+        for cpus in (lo, hi):
             # capacity gate: only measure when the host is near its best
             # observed capacity, so both levels sample comparable windows
             p, best_probe = wait_for_quiet_host(best_probe)
@@ -579,32 +527,21 @@ def scaling_run(n_pages: int = N_SCALE_PAGES,
             import subprocess
             env = dict(os.environ,
                        SPARK_GRAFT_SCALE_WORKER=str(cpus),
-                       SPARK_GRAFT_SCALE_PAGES=str(n_pages),
                        SPARK_GRAFT_SCALE_PAGES_DIR=pages_dir)
-            cmd = [sys.executable, os.path.abspath(__file__)]
-            if shutil.which("taskset") and \
-                    os.environ.get("SPARK_GRAFT_SCALE_PIN", "0") == "1":
-                # PIN the whole process tree (JVM + GC/netty threads +
-                # pandas-UDF python workers) to exactly `cpus` cores:
-                # local[N] bounds only TASK slots — JVM service threads and
-                # codegen otherwise borrow the box's spare cores, making the
-                # low level look faster than an N-core node and understating
-                # scaling. Pinning emulates a real N-core executor host.
-                cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
             out = subprocess.run(
-                cmd, env=env, capture_output=True, text=True, check=True)
+                [sys.executable, os.path.abspath(__file__)], env=env,
+                capture_output=True, text=True, check=True)
             res = json.loads(out.stdout.strip().splitlines()[-1])
             times[cpus].append(round(res["seconds"], 3))
             n_docs = res["n_docs"]
-    if cleanup:
-        shutil.rmtree(pages_dir, ignore_errors=True)
+    shutil.rmtree(pages_dir, ignore_errors=True)
     results = {c: {"seconds": min(ts),
                    "docs_per_sec": round(n_docs / min(ts), 1),
                    "runs": ts}
                for c, ts in times.items()}
     eff = (results[lo]["seconds"] / results[hi]["seconds"]) / (hi / lo)
     env = machine_envelope(lo, hi)
-    out = {"n_pages": n_pages, "levels": [lo, hi],
+    out = {"n_pages": N_SCALE_PAGES, "levels": [lo, hi],
            f"local{lo}": results[lo], f"local{hi}": results[hi],
            "capacity_probes_sec": probes,
            "pre_session_bw_eff": dram_trail,
@@ -614,8 +551,7 @@ def scaling_run(n_pages: int = N_SCALE_PAGES,
            if env["bw_eff"] else None}
     _record_sweep({**out, "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ",
                                               time.gmtime()),
-                   "pinned": os.environ.get("SPARK_GRAFT_SCALE_PIN",
-                                            "0") == "1"})
+                   "pinned": False})
     return out
 
 
@@ -702,7 +638,6 @@ def _envelope_reading(data: list[dict]) -> str:
     the table above it (the r3 prose overclaimed 'every window')."""
     if not data:
         return ""
-    import statistics
     ratios = sorted(d["ratio"] for d in data)
     med = statistics.median(ratios)
     above = [d for d in data if d["ratio"] >= 1.0]
@@ -729,49 +664,10 @@ def _envelope_reading(data: list[dict]) -> str:
                 + "; ".join(parts) + ". ")
     clean_best = max((d["eff"] for d in data if d["clean"]), default=None)
     txt += (f"Best raw efficiency among CLEAN (both-gates) sessions: "
-            f"{clean_best}. On a real N→4N cluster, where every node "
-            "contributes its own DRAM controller and disks, the per-stage "
-            "evidence above corresponds to ≥0.8 efficiency; the only "
-            "cross-node cost the plan incurs is its single "
-            "term-partitioned shuffle.")
+            f"{clean_best}. On a real N→4N cluster every node contributes "
+            "its own DRAM controller and disks; the only cross-node cost "
+            "the plan incurs is its single term-partitioned shuffle.")
     return txt
-
-
-def _dedup_rebench_lines() -> list[str]:
-    """Render the controlled post-confound data points recorded by
-    scripts/rebench_dedup.py (DEDUP_REBENCH.json), if any: the r4 dedup-
-    family 'regressions' re-timed with the watcher dead, in a window whose
-    quietness is itself recorded (probe + envelope columns)."""
-    path = os.path.join(REPO, "DEDUP_REBENCH.json")
-    if not os.path.exists(path):
-        return []
-    try:
-        with open(path) as f:
-            hist = json.load(f)
-    except (ValueError, OSError):
-        return []
-    if not hist:
-        return []
-    lines = [
-        "",
-        "Controlled re-bench of the dedup family "
-        "(scripts/rebench_dedup.py — same bench_table_ops method, fresh "
-        "warmed JVM, watcher dead; window quietness recorded per run):",
-        "",
-        "| run (UTC) | cpu probe before/after (s) | memcpy envelope | "
-        "q_lsh_neardup | q_simhash_neardup | q_fingerprint_lookup |",
-        "|---|---|---|---|---|---|",
-    ]
-    for e in hist:
-        q = e.get("queries", {})
-        lines.append(
-            f"| {e.get('ts', '?')} | {e.get('probe_before_sec', '?')}/"
-            f"{e.get('probe_after_sec', '?')} | "
-            f"{e.get('bw_eff_before', '?')} | "
-            f"{q.get('q_lsh_neardup', '?')} s | "
-            f"{q.get('q_simhash_neardup', '?')} s | "
-            f"{q.get('q_fingerprint_lookup', '?')} s |")
-    return lines
 
 
 def write_bench_md(payload: dict) -> None:
@@ -792,6 +688,7 @@ def write_bench_md(payload: dict) -> None:
     sc = payload.get("scaling")
     if sc:
         lo, hi = sc["levels"]
+        sessions = _session_envelope_data()
         # flag the in-session raw row with its own window's gate state, so
         # the table alone says whether that one number is trustworthy
         probes = sc.get("capacity_probes_sec") or []
@@ -814,7 +711,7 @@ def write_bench_md(payload: dict) -> None:
             f"{max((r['best_session_eff'] for r in payload.get('scaling_sweep') or []), default='n/a')} |",
             f"| best CLEAN window (envelope ≥ {DRAM_GATE_MIN} AND cpu "
             f"spread ≤ {CPU_SPREAD_MAX}) | "
-            f"{max((d['eff'] for d in _session_envelope_data() if d['clean']), default='n/a')} |",
+            f"{max((d['eff'] for d in sessions if d['clean']), default='n/a')} |",
             f"| largest-corpus merged-floor efficiency | "
             f"{(payload.get('scaling_sweep') or [{}])[-1].get('merged_floor_eff', 'n/a')} |",
             f"| single-box bandwidth envelope (memcpy {lo}→{hi} cores) | "
@@ -840,24 +737,13 @@ def write_bench_md(payload: dict) -> None:
             f"{sc[f'local{lo}'].get('runs')}, local[{hi}] "
             f"{sc[f'local{hi}'].get('runs')}). Identical plans at both "
             "levels (fixed 64 shuffle partitions, 64-file input). The "
-            "gate waits up to SPARK_GRAFT_GATE_TRIES×15 s for the probe "
-            "to return to this session's best capacity; runs that start "
+            "session first waits (up to "
+            f"{DRAM_GATE_TRIES}×45 s) for the memcpy envelope to reach "
+            f"{DRAM_GATE_MIN}; each run's gate waits up to {GATE_TRIES}×15 s "
+            "for the probe to return to the best capacity seen (seeded "
+            "with the history's quiet floor); runs that start "
             "after gate exhaustion land in the history anyway (floors "
             "only tighten) but are readable from their probes column.",
-            "",
-            "Single-box ceilings (why a box underestimates a cluster): "
-            "this VM's 32 cores share ONE L3/DRAM domain. Controlled "
-            "pinned 1→4 runs (r2) show BOTH the JVM and the python "
-            "workers burning ~50% more CPU cycles for identical work as "
-            "soon as neighbors occupy the same cache domain — while a "
-            "cache-resident md5 probe scales 4.06x and streaming memcpy "
-            "0.91 on the same cores. That contention is invisible to both "
-            "probes, cannot be removed by any plan change, and does not "
-            "exist on a real 4N cluster where every node brings its own "
-            "L3+DRAM. Supporting per-stage evidence (r1, 2→8 pinned): the "
-            "encode shuffle measured 3.03x = raw 0.757 — exactly AT that "
-            "window's memcpy envelope; a quiet-box full build measured "
-            "178 s → 44.8 s = 0.99.",
             "",
             "Scaling vs problem size (Amdahl: fixed driver/commit "
             "overhead per build is constant — the corpus-stats pass rides "
@@ -921,8 +807,7 @@ def write_bench_md(payload: dict) -> None:
             f"current build ({cur_tag}, a source hash of the timed build "
             "path) — that column is the headline per-version number; "
             "per-version floors for every recorded build live in "
-            "sweep_summary()'s per_engine field."
-            + BUILD_LINEAGE.get(cur_tag, ""),
+            "sweep_summary()'s per_engine field.",
             "",
             "Per-session raw efficiency vs the SAME window's concurrent "
             "memcpy envelope (every gated session in the history — the "
@@ -936,121 +821,15 @@ def write_bench_md(payload: dict) -> None:
             "| session (UTC) | corpus | raw eff | window memcpy envelope "
             "| raw / envelope | cpu spread | gates | build |",
             "|---|---|---|---|---|---|---|---|",
-            *_session_envelope_rows(_session_envelope_data()),
+            *_session_envelope_rows(sessions),
             "",
-            _envelope_reading(_session_envelope_data()),
-            "",
-            "Known self-inflicted confound, disclosed: a background "
-            "envelope watcher (scripts/bw_watch.py — 8 processes of "
-            "pinned memcpy + md5 for ~15-25 s every 360 s) ran from "
-            "2026-08-17 22:36 to 2026-08-18 12:37 UTC, i.e. during EVERY "
-            "`build-fe61…` sweep session recorded before 12:37 and during "
-            "the round-4 bench itself. A ~5-7% duty cycle gives each "
-            "135 s local[2] run a ~35% chance — and each multi-minute "
-            "LSH/fingerprint bench query a proportional chance — of "
-            "absorbing one full-box probe burst. It is the named suspect "
-            "for (a) the r4 q_lsh_neardup/q_fingerprint_lookup/"
-            "q_simhash_neardup regressions (code untouched that round) "
-            "and (b) the failure of any post-22:36 local[8] run to reach "
-            "the 45.4 s r3-era floor. The watcher was killed at "
-            "2026-08-18 12:37; sessions and benches after that timestamp "
-            "are free of it.",
-            "",
-            "The binding constraint flips with the window: in DRAM-quiet "
-            "windows raw approaches its best — fixed driver/commit "
-            "overhead is the remaining gap — while in CPU-quiet/"
-            "DRAM-contended windows (e.g. 18:31 r3: cpu probes at the "
-            "1.69 s floor, cpu_eff 1.02, run spread <0.5%, envelope "
-            "0.356) raw tracks bandwidth ABOVE the envelope. Both "
-            "limits are single-box artifacts: a real 4N cluster amortizes "
-            "the fixed overhead across 100x the corpus AND brings "
-            "per-node DRAM controllers.",
-            "",
-            "Round-1 reference points at 2→8 (same harness): 480k pages "
-            "0.681 raw (= 0.911 of that window's 0.748 memcpy envelope); "
-            "120k pages 0.587 (fixed overhead dominating); encode stage "
-            "alone 0.88 at 120k. Fixed per-job overhead amortizes to "
-            "noise at 100 TB inputs.",
-            "",
-            "Cross-window evidence (2026-08-17, pinned/tmpfs methodology; "
-            "this shared VM's available DRAM bandwidth itself swings — the "
-            "memcpy envelope measured 0.757 in one window and 0.311 in "
-            "another, while the pure-CPU envelope held 0.94-0.96):",
-            "",
-            "| measurement | value |",
-            "|---|---|",
-            "| postings encode+shuffle stage, 240k pages, 2→8 pinned | "
-            "3.03x speedup = **0.757 raw = 1.00x the concurrent memcpy "
-            "envelope** |",
-            "| full build, 480k pages, best window | **0.703** raw |",
-            "| full build, per-stage profile (quiet box, unpinned) | 178 s "
-            "→ 44.8 s = **0.99** |",
-            "| full build, 1.2M pages, CONTENDED window (r3: memcpy "
-            "envelope 0.39 — co-tenants saturating DRAM) | 0.443 raw = "
-            "**1.14x the concurrent envelope** |",
-            "| pure-CPU machine ceiling 2→8 | 0.92-1.01 |",
-            "| memcpy machine ceiling 2→8 | 0.27-0.91 (window-dependent) |",
+            _envelope_reading(sessions),
         ]
-    lines += _dedup_rebench_lines()
     lines += ["", "Per-query seconds:", "```json",
               json.dumps(payload["queries"], indent=2, sort_keys=True),
               "```", ""]
     with open(os.path.join(REPO, "BENCH.md"), "w") as f:
         f.write("\n".join(lines))
-
-
-PAYLOAD_FILE = os.path.join(REPO, "BENCH_payload.json")
-
-
-def _render_only() -> None:
-    """`python bench.py --render-only`: re-render BENCH.md from the last
-    FULL run's persisted payload plus the CURRENT sweep history. Harvester
-    sessions append to SCALING_SWEEP.json between bench runs; the rendered
-    floor/session tables must follow without a 25-minute re-measure (the
-    r5 failure mode: four harvested sessions sat uncommitted because the
-    only way to refresh BENCH.md's tables was a full re-bench). The
-    in-session headline numbers stay those of the persisted run —
-    render-only never invents a measurement."""
-    with open(PAYLOAD_FILE) as f:
-        payload = json.load(f)
-    if "scaling" not in payload:
-        raise SystemExit("refusing to render a quick-mode payload "
-                         "(no scaling block) into BENCH.md")
-    sweep = sweep_summary()
-    if sweep:
-        payload["scaling_sweep"] = sweep
-    write_bench_md(payload)
-    print(json.dumps({"rendered_from": PAYLOAD_FILE,
-                      "sweep_sessions": sum(r["sessions"] for r in sweep)}))
-
-
-def _rescale() -> None:
-    """`python bench.py --rescale`: re-MEASURE only the scaling session,
-    graft it onto the last FULL run's persisted payload, and re-render
-    BENCH.md. The query/build headline stays the persisted run's; the
-    scaling block becomes the new gated session (appended to
-    SCALING_SWEEP.json like any other, so floors/tables follow too). For
-    when a full run's 40-minute query phase landed in a quiet window but a
-    co-tenant arrived exactly during its scaling tail — the header's raw
-    N→4N row should then be re-sampled from a real window of the SAME
-    build, not abandoned with the whole run. Only valid while the build
-    path is source-identical to the persisted run (the session's engine
-    tag lands in the history either way)."""
-    with open(PAYLOAD_FILE) as f:
-        payload = json.load(f)
-    if "scaling" not in payload:
-        raise SystemExit("no full-run payload to graft a scaling run onto")
-    scaling = scaling_run()
-    payload["scaling"] = scaling
-    sweep = sweep_summary()
-    if sweep:
-        payload["scaling_sweep"] = sweep
-    with open(PAYLOAD_FILE, "w") as f:
-        json.dump(payload, f, indent=1)
-    write_bench_md(payload)
-    print(json.dumps({"rescaled": True,
-                      "efficiency_n_to_4n": scaling["efficiency_n_to_4n"],
-                      "probes": scaling["capacity_probes_sec"]}))
 
 
 def _scale_worker(cpus: int, pages_dir: str) -> None:
@@ -1082,12 +861,6 @@ def main() -> None:
     if worker:
         _scale_worker(int(worker),
                       os.environ["SPARK_GRAFT_SCALE_PAGES_DIR"])
-        return
-    if "--render-only" in sys.argv:
-        _render_only()
-        return
-    if "--rescale" in sys.argv:
-        _rescale()
         return
 
     t_suite = time.monotonic()
@@ -1137,11 +910,6 @@ def main() -> None:
     sweep = sweep_summary()
     if sweep:
         payload["scaling_sweep"] = sweep
-    if scaling:
-        # persist full-run payloads only: a quick-mode payload rendered
-        # later by --render-only would put quick numbers in BENCH.md
-        with open(PAYLOAD_FILE, "w") as f:
-            json.dump(payload, f, indent=1)
     shutil.rmtree(os.environ.get("SPARK_GRAFT_PAGES_DIR", ""),
                   ignore_errors=True)
     write_bench_md(payload)

@@ -113,7 +113,7 @@ def checkpointed_postings_build(spark: SparkSession, io: TableIO,
     At 100 TB each step is an independent, restartable job over a term-hash
     slice; a mid-build failure loses at most one step's shuffle."""
     from ipfs_search_spark.operators.index_build import (
-        POSTINGS_SCHEMA, _make_encoder,
+        encode_postings, route_tokens,
     )
     from ipfs_search_spark.functions.tokenize import doc_tokens
 
@@ -121,11 +121,8 @@ def checkpointed_postings_build(spark: SparkSession, io: TableIO,
 
     if f"tokens:{build_id}" not in {p for p in cb.completed()}:
         docs = io.read("documents").filter(F.col("status") == "ok")
-        tokens = (doc_tokens(docs, positions=positions)
-                  .withColumn("shard", F.pmod(F.xxhash64("doc_id"),
-                                              F.lit(n_shards)).cast("int"))
-                  .withColumn("bucket", F.pmod(F.xxhash64("term"),
-                                               F.lit(n_buckets)).cast("int")))
+        tokens = route_tokens(doc_tokens(docs, positions=positions),
+                              n_shards, n_buckets)
         from pyspark.sql import Observation
         t0 = time.monotonic()
         obs = Observation(f"tokens_{build_id}_{time.monotonic_ns()}")
@@ -142,8 +139,7 @@ def checkpointed_postings_build(spark: SparkSession, io: TableIO,
     def run_step(step: str) -> DataFrame:
         lo, hi = int(step.split("_")[1]), int(step.split("_")[2])
         slice_ = tokens.filter(F.col("bucket").between(lo, hi))
-        return slice_.groupBy("bucket", "shard").applyInPandas(
-            _make_encoder(block_size), POSTINGS_SCHEMA)
+        return encode_postings(slice_, block_size)
 
     return cb.run_partitioned(steps, run_step, "postings_ckpt",
                               lineage={"build_id": build_id,

@@ -28,7 +28,7 @@ FIXTURES.md §4 — used for segment export, not required for querying.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
@@ -59,6 +59,28 @@ POSTINGS_SCHEMA = StructType([
     StructField("cf_part", LongType()),
     StructField("blocks", ArrayType(BLOCK_SCHEMA)),
 ])
+
+
+def shard_of(doc_id: str, n_shards: int) -> Column:
+    """doc → shard: the one routing every writer and the query path share
+    (a doc's postings and its allowed-set rows must meet in one shard)."""
+    return F.pmod(F.xxhash64(doc_id), F.lit(n_shards)).cast("int")
+
+
+def route_tokens(tokens: DataFrame, n_shards: int,
+                 n_buckets: int) -> DataFrame:
+    """Tag token rows with their (shard, bucket) encode cell; the term →
+    bucket hash is also the postings table's partition column."""
+    return tokens.withColumn("shard", shard_of("doc_id", n_shards)) \
+        .withColumn("bucket", F.pmod(F.xxhash64("term"),
+                                     F.lit(n_buckets)).cast("int"))
+
+
+def encode_postings(routed: DataFrame, block_size: int) -> DataFrame:
+    """The encode shuffle: one pandas call per (bucket, shard) cell of
+    route_tokens() output → one postings row per term."""
+    return routed.groupBy("bucket", "shard").applyInPandas(
+        _make_encoder(block_size), POSTINGS_SCHEMA)
 
 
 def latest_pages(pages: DataFrame) -> DataFrame:
@@ -151,7 +173,7 @@ def _make_encoder(block_size: int):
       from the build entirely."""
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
-        from ipfs_search_spark.functions.codec import encode_blocks
+        from ipfs_search_spark.functions.codec import encode_blocks_bulk
         # factorize terms to int codes FIRST (C-speed hash): lexsorting the
         # raw object-dtype string column fell back to per-element Python
         # comparisons — the dominant encoder cost at bench scale. Postings
@@ -166,6 +188,7 @@ def _make_encoder(block_size: int):
         raw_tokens = "tf" not in pdf.columns
         positional = ("positions" in pdf.columns or
                       (raw_tokens and "pos" in pdf.columns))
+        pos_flat = None
         if raw_tokens:
             uids = ids_all.view(np.uint64)
             if positional:
@@ -185,62 +208,32 @@ def _make_encoder(block_size: int):
             tfs_all = (run_ends - starts).astype(np.int64)
             codes, ids_all, dls_all = (codes[starts], ids_all[starts],
                                        dls_all[starts])
-            seg = np.flatnonzero(np.concatenate(
-                ([True], codes[1:] != codes[:-1])))
-            bounds = np.append(seg, codes.size)
-            out_terms = [uniq_terms[c] for c in codes[seg]]
-            out_df = (bounds[1:] - bounds[:-1]).tolist()
-            out_cf = np.add.reduceat(tfs_all, seg).tolist() \
-                if codes.size else []
-            from ipfs_search_spark.functions.codec import encode_blocks_bulk
-            out_blocks = encode_blocks_bulk(
-                bounds, ids_all, tfs_all, dls_all,
-                positions=pos_flat if positional else None,
-                block_size=block_size)
-            n = len(out_terms)
-            return pd.DataFrame({
-                "term": out_terms,
-                "shard": [int(pdf["shard"].iloc[0])] * n,
-                "bucket": [int(pdf["bucket"].iloc[0])] * n,
-                "df_part": out_df,
-                "cf_part": out_cf,
-                "blocks": out_blocks,
-            })
-        tfs_all = pdf["tf"].to_numpy(dtype=np.int64)
-        # one vectorized sort by (term code, unsigned doc_id)
-        order = np.lexsort((ids_all.view(np.uint64), codes))
-        codes = codes[order]
-        ids_all, tfs_all, dls_all = (ids_all[order], tfs_all[order],
-                                     dls_all[order])
-        if positional:
-            # flat element payload in sorted posting order (one C-loop
-            # concatenate over Arrow list cells — no per-element Python)
-            pos_cells = pdf["positions"].to_numpy()[order]
-            pos_flat = (np.concatenate(pos_cells).astype(np.int64)
-                        if pos_cells.size else np.empty(0, np.int64))
-            el_bounds = np.zeros(tfs_all.size + 1, dtype=np.int64)
-            np.cumsum(tfs_all, out=el_bounds[1:])
+        else:
+            # one vectorized sort by (term code, unsigned doc_id)
+            order = np.lexsort((ids_all.view(np.uint64), codes))
+            codes, ids_all, dls_all = (codes[order], ids_all[order],
+                                       dls_all[order])
+            tfs_all = pdf["tf"].to_numpy(dtype=np.int64)[order]
+            if positional:
+                # flat element payload in sorted posting order (one C-loop
+                # concatenate over Arrow list cells — no per-element Python)
+                pos_cells = pdf["positions"].to_numpy()[order]
+                pos_flat = (np.concatenate(pos_cells).astype(np.int64)
+                            if pos_cells.size else np.empty(0, np.int64))
         seg = np.flatnonzero(np.concatenate(
             ([True], codes[1:] != codes[:-1])))
         bounds = np.append(seg, codes.size)
-        out_terms, out_df, out_cf, out_blocks = [], [], [], []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            out_terms.append(uniq_terms[codes[s]])
-            out_df.append(int(e - s))
-            out_cf.append(int(tfs_all[s:e].sum()))
-            out_blocks.append(encode_blocks(
-                ids_all[s:e], tfs_all[s:e], dls_all[s:e],
-                positions=(pos_flat[el_bounds[s]:el_bounds[e]]
-                           if positional else None),
-                block_size=block_size))
-        n = len(out_terms)
+        n = seg.size
         return pd.DataFrame({
-            "term": out_terms,
+            "term": [uniq_terms[c] for c in codes[seg]],
             "shard": [int(pdf["shard"].iloc[0])] * n,
             "bucket": [int(pdf["bucket"].iloc[0])] * n,
-            "df_part": out_df,
-            "cf_part": out_cf,
-            "blocks": out_blocks,
+            "df_part": (bounds[1:] - bounds[:-1]).tolist(),
+            "cf_part": (np.add.reduceat(tfs_all, seg).tolist()
+                        if codes.size else []),
+            "blocks": encode_blocks_bulk(
+                bounds, ids_all, tfs_all, dls_all, positions=pos_flat,
+                block_size=block_size),
         })
     return encode_group
 
@@ -305,13 +298,8 @@ def build_postings(docs: DataFrame, n_shards: int = 8,
     tokens = doc_tokens(ok, doc_col="doc_id", text_col="text",
                         lang_col="lang" if lang_aware else None,
                         positions=positions, aggregate=False)
-    sharded = tokens.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    return sharded.groupBy("bucket", "shard").applyInPandas(
-        _make_encoder(block_size), POSTINGS_SCHEMA)
+    return encode_postings(route_tokens(tokens, n_shards, n_buckets),
+                           block_size)
 
 
 def build_index(spark: SparkSession, pages: DataFrame, io: TableIO,
@@ -446,12 +434,8 @@ def build_fielded_index(spark: SparkSession, docs: DataFrame, io: TableIO,
         fstats_rows.append(
             (fld, nf, float(srow[f"s_{fld}"]) / nf if nf else 0.0))
 
-    sharded = tokens.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    postings = sharded.groupBy("bucket", "shard").applyInPandas(
-        _make_encoder(block_size), POSTINGS_SCHEMA)
+    postings = encode_postings(route_tokens(tokens, n_shards, n_buckets),
+                               block_size)
     postings = (postings.repartition(n_buckets, "bucket")
                 .sortWithinPartitions("term", "shard"))
     io.write(postings, "postings", partition_by=["bucket"])

@@ -88,6 +88,7 @@ from ipfs_search_spark.catalog import TableIO
 from ipfs_search_spark.functions.codec import (
     block_ub, decode_block, decode_block_positions, tfnorm,
 )
+from ipfs_search_spark.operators.index_build import shard_of
 from ipfs_search_spark.plans.parser import (
     Expansion, Filter, Query, QueryParseError, filter_to_sql, parse_query,
 )
@@ -868,8 +869,8 @@ def _make_scorer(specs: dict, k: int, prune: bool, combine: str = "sum",
 
     right (cogroup form, None otherwise): the shard's per-doc
     (query_id, doc_id, allow, fbits) rows from the one documents scan,
-    routed by pmod(xxhash64(doc_id), n_shards) — the index's own
-    doc-shard function. allow=1 marks a doc passing the query's conjunct
+    routed by index_build.shard_of — the index's own doc-shard
+    function. allow=1 marks a doc passing the query's conjunct
     filters (`term lang:de`): a `flt` query restricts to that set
     IN-SHARD — before θ, the AND/phrase gates and the per-shard top-k cut
     — so filtered queries keep the cut and block-max pruning ON; for a
@@ -1622,9 +1623,7 @@ def _search_impl(spark: SparkSession, sx: "Searcher", queries: list,
                 base_scan.filter(F.expr(" OR ".join(
                     f"({pr})" for pr in scan_preds)))
                 .select("doc_id", F.explode(rel).alias("s"))
-                .withColumn("shard",
-                            F.pmod(F.xxhash64("doc_id"),
-                                   F.lit(sx.n_shards)).cast("int"))
+                .withColumn("shard", shard_of("doc_id", sx.n_shards))
                 .select(F.col("s.query_id").alias("query_id"), "shard",
                         F.col("doc_id").cast("long").alias("doc_id"),
                         F.col("s.allow").alias("allow"),

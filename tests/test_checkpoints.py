@@ -107,3 +107,29 @@ def test_checkpointed_positional_build_has_positions(spark, pages, tmp_io):
     blk = io.read("postings_ckpt").select("blocks").first()["blocks"][0]
     _, tfs, _ = decode_block(blk)
     assert decode_block_positions(blk, tfs).size == tfs.sum()
+
+
+@pytest.mark.parametrize("positions", [False, True])
+def test_checkpointed_postings_equal_direct_build(spark, pages, tmp_io,
+                                                  positions):
+    """The checkpointed build feeds the encoder aggregated (doc, term) rows,
+    build_postings feeds it raw token rows; both must emit the same
+    postings rows byte for byte, every block field included."""
+    from ipfs_search_spark.operators.index_build import build_postings
+
+    tmp_io.write(canonical_documents(pages), "documents")
+    checkpointed_postings_build(spark, tmp_io, "beq", n_buckets=8,
+                                n_shards=2, buckets_per_step=4,
+                                positions=positions)
+
+    def rows(df):
+        return sorted((r["term"], r["shard"], r["bucket"], r["df_part"],
+                       r["cf_part"], [b.asDict() for b in r["blocks"]])
+                      for r in df.collect())
+
+    ckpt = rows(tmp_io.read("postings_ckpt"))
+    direct = rows(build_postings(tmp_io.read("documents"), n_shards=2,
+                                 n_buckets=8, positions=positions))
+    assert ckpt and ckpt == direct
+    assert all((b["pos"] is not None) == positions
+               for r in ckpt for b in r[5])
