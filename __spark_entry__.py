@@ -273,6 +273,19 @@ def _bm25_brute(spark: SparkSession, sf_dir: str, terms: list[str], k: int
               .select("doc_id", "score", "rank")
 
 
+def _ranked(raw: DataFrame, k: int = FLAGSHIP_K, offset: int = 0
+            ) -> DataFrame:
+    """Oracle-comparable tail of an over-fetched engine result: scores
+    rounded to 6 places, re-ranked by (score desc, doc_id asc) so rounding
+    ties resolve identically to the SQL oracle, ranks (offset, offset + k]
+    kept."""
+    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
+            .filter((F.col("rank") > offset) & (F.col("rank") <= offset + k))
+            .select("doc_id", "score", "rank"))
+
+
 def _bm25_engine(spark: SparkSession, sf_dir: str, terms: list[str], k: int
                  ) -> DataFrame:
     """BM25 through the full engine: compressed sharded postings + block-max
@@ -281,11 +294,7 @@ def _bm25_engine(spark: SparkSession, sf_dir: str, terms: list[str], k: int
     from ipfs_search_spark.plans.query import search
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, " ".join(terms))], k=k + 50, prune=True)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw, k)
 
 
 def q_snapshot_search(spark, sf_dir):
@@ -311,11 +320,7 @@ def q_snapshot_search(spark, sf_dir):
         _ENGINE_CACHE[key] = rio
     raw = search(spark, rio, [(0, " ".join(FLAGSHIP_TERMS))],
                  k=FLAGSHIP_K + 50, prune=True)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_compacted_search(spark, sf_dir):
@@ -362,12 +367,8 @@ def q_compacted_search(spark, sf_dir):
                  k=FLAGSHIP_K + 50, prune=True)
     # search() already carries url, and url IS the original doc_id string
     # (engine doc_ids here are the streaming path's xxhash64(url))
-    mapped = raw.select(F.col("url").cast("long").alias("doc_id"),
-                        F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (mapped.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw.select(F.col("url").cast("long").alias("doc_id"),
+                              "score"))
 
 
 _POS_ENGINE_CACHE: dict[str, object] = {}
@@ -692,11 +693,7 @@ def q_bm25_fields(spark, sf_dir):
     sx = Searcher(spark, io)
     raw = sx.search([(0, " ".join(FIELDS_QUERY_TERMS))], k=FLAGSHIP_K + 50,
                     fields=FIELD_BOOSTS, combine="max")
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_bm25_dismax_tb(spark, sf_dir):
@@ -710,11 +707,7 @@ def q_bm25_dismax_tb(spark, sf_dir):
     sx = Searcher(spark, io)
     raw = sx.search([(0, " ".join(FIELDS_QUERY_TERMS))], k=FLAGSHIP_K + 50,
                     fields=FIELD_BOOSTS, combine="max", tie_breaker=0.3)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_phrase_search(spark, sf_dir):
@@ -724,11 +717,7 @@ def q_phrase_search(spark, sf_dir):
     io = _pos_engine_io(spark, sf_dir)
     qs = f'{PHRASE_FREE_TERM} "{" ".join(PHRASE_TERMS)}"'
     raw = search(spark, io, [(0, qs)], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 PHRASE_SLOP = 2
@@ -744,11 +733,7 @@ def q_phrase_slop(spark, sf_dir):
     qs = (f'{PHRASE_FREE_TERM} '
           f'"{" ".join(PHRASE_TERMS)}"~{PHRASE_SLOP}')
     raw = search(spark, io, [(0, qs)], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_paging(spark, sf_dir):
@@ -758,13 +743,7 @@ def q_paging(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, " ".join(FLAGSHIP_TERMS))],
                  k=FLAGSHIP_K + 60)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = rounded.withColumn("rank",
-                                F.row_number().over(w).cast("int"))
-    return (ranked.filter((F.col("rank") > FLAGSHIP_K) &
-                          (F.col("rank") <= 2 * FLAGSHIP_K))
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw, offset=FLAGSHIP_K)
 
 
 def q_match_all_filter(spark, sf_dir):
@@ -791,11 +770,7 @@ def q_min_should_match(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, " ".join(FLAGSHIP_TERMS))],
                  k=FLAGSHIP_K + 50, minimum_should_match=2)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_required_term(spark, sf_dir):
@@ -808,11 +783,7 @@ def q_required_term(spark, sf_dir):
     from ipfs_search_spark.plans.query import search
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, "+merge window")], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_field_group(spark, sf_dir):
@@ -826,11 +797,7 @@ def q_field_group(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, "lang:(de OR en) AND merge")],
                  k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_range_filter(spark, sf_dir):
@@ -846,11 +813,7 @@ def q_range_filter(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, "merge size:[500 TO 2500]")],
                  k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_exists_filter(spark, sf_dir):
@@ -862,11 +825,7 @@ def q_exists_filter(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, "merge -_exists_:size")],
                  k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 # html constructed deterministically from doc_id for the outlink-extraction
@@ -1093,11 +1052,7 @@ def q_bm25_and(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, " ".join(FLAGSHIP_TERMS))],
                  k=FLAGSHIP_K + 50, mode="and")
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 PREFIX_QUERY = "s"  # `s*` → scan/slow/small/sort/spark/stream at every sf
@@ -1119,11 +1074,7 @@ def q_prefix_search(spark, sf_dir):
     from ipfs_search_spark.plans.query import search
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, f"{PREFIX_QUERY}*")], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 FUZZY_BASE, FUZZY_DIST = "part", 2   # expands to fast/part/sort/spark
@@ -1140,11 +1091,7 @@ def q_fuzzy_search(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, f"{FUZZY_BASE}~{FUZZY_DIST}")],
                  k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_fuzzy_prefix_len(spark, sf_dir):
@@ -1159,11 +1106,7 @@ def q_fuzzy_prefix_len(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     sx = Searcher(spark, io, fuzzy_prefix_length=2)
     raw = sx.search([(0, f"{FUZZY_BASE}~{FUZZY_DIST}")], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_regex_search(spark, sf_dir):
@@ -1177,11 +1120,7 @@ def q_regex_search(spark, sf_dir):
     from ipfs_search_spark.plans.query import search
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, "/mer[a-z]+/")], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_fuzzy_transpose(spark, sf_dir):
@@ -1197,11 +1136,7 @@ def q_fuzzy_transpose(spark, sf_dir):
     io = _engine_io(spark, sf_dir)
     sx = Searcher(spark, io, fuzzy_transpositions=True)
     raw = sx.search([(0, f"{FUZZY_BASE}~{FUZZY_DIST}")], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_wildcard_search(spark, sf_dir):
@@ -1213,11 +1148,7 @@ def q_wildcard_search(spark, sf_dir):
     from ipfs_search_spark.plans.query import search
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, WILDCARD_PATTERN)], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def _expansion_oracle_sql(exp_cte: str, k: int) -> str:
@@ -1305,11 +1236,7 @@ def q_filter_tree(spark, sf_dir):
     from ipfs_search_spark.plans.query import search
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, "lang:de OR merge")], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 _FILTER_TREE_ORACLE = f"""
@@ -1440,11 +1367,7 @@ def q_mlt_search(spark, sf_dir):
     qtext = base.filter(F.col("id") == 10).select("text").collect()[0][0]
     raw = search(spark, io, [(0, more_like_this_query(qtext))],
                  k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 _MLT_ORACLE = f"""
@@ -1584,11 +1507,7 @@ def q_boolean(spark, sf_dir):
     from ipfs_search_spark.plans.query import search
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, BOOLEAN_QUERY)], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 MIME_TYPES = ["image/jpeg", "image/png", "image/webp", "text/html",
@@ -1652,11 +1571,7 @@ def q_or_not(spark, sf_dir):
     from ipfs_search_spark.plans.query import search
     io = _engine_io(spark, sf_dir)
     raw = search(spark, io, [(0, OR_NOT_QUERY)], k=FLAGSHIP_K + 50)
-    rounded = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (rounded.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= FLAGSHIP_K)
-            .select("doc_id", "score", "rank"))
+    return _ranked(raw)
 
 
 def q_quality(spark, sf_dir):

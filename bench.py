@@ -416,10 +416,12 @@ def _engine_version() -> str:
     from ipfs_search_spark import catalog, fixtures, session
     from ipfs_search_spark.functions import codec, extract, tokenize
     from ipfs_search_spark.operators import index_build as ib
-    units = [ib.latest_pages, ib.canonical_documents, ib._make_encoder,
+    units = [ib.canonical_documents, ib._make_encoder,
              ib.shard_of, ib.route_tokens, ib.encode_postings,
              ib.doc_stats_sums, ib.build_postings, ib.build_index,
-             ib.build_index_from_docs, catalog.TableIO,
+             ib.build_index_from_docs, ib.avg_dl, ib.index_stats_row,
+             ib.write_postings, ib.term_stats_of, ib._write_base_tables,
+             catalog.TableIO,
              fixtures.pages_df_distributed, session.get_spark,
              tokenize, extract, codec]
     h = hashlib.sha1()

@@ -309,16 +309,3 @@ def decode_block(block) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     tfs = varbyte_decode(bytes(block["tfs"]), n).astype(np.int64)
     dls = varbyte_decode(bytes(block["dls"]), n).astype(np.int64)
     return ids.view(np.int64), tfs, dls
-
-
-def merge_sorted_runs(runs: list[tuple[np.ndarray, np.ndarray, np.ndarray]]
-                      ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """K-way merge of docid-sorted runs (ids int64 in unsigned order) into one
-    sorted list — the second level of the salted posting build (SURVEY.md §7
-    milestone 2). Concatenate + stable argsort on the unsigned view: numpy's
-    sort is a single vectorized pass and runs are disjoint doc sets."""
-    ids = np.concatenate([r[0] for r in runs])
-    tfs = np.concatenate([r[1] for r in runs])
-    dls = np.concatenate([r[2] for r in runs])
-    order = np.argsort(ids.view(np.uint64), kind="stable")
-    return ids[order], tfs[order], dls[order]

@@ -20,12 +20,16 @@ Why doc-sharding instead of one global posting list per term:
   with the salt chosen so correctness needs no second-level merge;
 - AQE skew-join/partition-split covers the residual long tail.
 
-A compaction path (merge_term_shards) k-way-merges per-shard runs into one
-global docid-sorted list per term for the single-segment layout of
-FIXTURES.md §4 — used for segment export, not required for querying.
+Every read and write of the index tables is in this module: one reader
+(open_index: base ∪ micro-batch segments, shared by Searcher and
+compact_segments) and one set of writers. compact_segments folds segments
+back by a per-(term, shard) merge; merge_term_shards k-way-merges per-shard
+runs into one list per term (shard = -1, FIXTURES.md §4) for export.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -81,22 +85,6 @@ def encode_postings(routed: DataFrame, block_size: int) -> DataFrame:
     route_tokens() output → one postings row per term."""
     return routed.groupBy("bucket", "shard").applyInPandas(
         _make_encoder(block_size), POSTINGS_SCHEMA)
-
-
-def latest_pages(pages: DataFrame) -> DataFrame:
-    """W2 latest-observation-wins per url (reference sniffer dedup,
-    /root/reference/components/sniffer/providerfilters/lastseenfilter.go:55-90
-    — batch form). One shuffle on url; ties broken deterministically by the
-    html payload hash so reruns are stable. Hash aggregate (max_by), not a
-    row_number window: no sort of the payload, map-side partial combine."""
-    others = [c for c in pages.columns if c != "url"]
-    win_key = F.struct(F.col("warc_ts").alias("ts"),
-                       F.xxhash64("html").alias("h"))
-    return (pages.groupBy("url")
-            .agg(F.max_by(F.struct(*[F.col(c).alias(c) for c in others]),
-                          win_key).alias("_w"))
-            .select(*[F.col("url") if c == "url" else F.col(f"_w.{c}")
-                      for c in pages.columns]))
 
 
 def canonical_documents(pages: DataFrame, max_bytes: int = MAX_EXTRACT_BYTES,
@@ -238,6 +226,15 @@ def _make_encoder(block_size: int):
     return encode_group
 
 
+def _stored_dl(docs: DataFrame) -> Column:
+    """BM25 doc length: the `dl` column canonical_documents stores, or the
+    canonical analyzer's token count when the corpus carries none."""
+    if "dl" in docs.columns:
+        return F.col("dl")
+    from ipfs_search_spark.functions.tokenize import tokens_array
+    return F.size(tokens_array(F.col("text")))
+
+
 def doc_stats_sums(docs: DataFrame,
                    lang_aware: bool = False) -> tuple[int, int]:
     """Exact (N, total_dl) over indexable docs (dl > 0) — the integer sums
@@ -251,27 +248,14 @@ def doc_stats_sums(docs: DataFrame,
     if lang_aware:
         from ipfs_search_spark.functions.tokenize import tokenize_udf
         dl = F.size(tokenize_udf(F.col("text"), F.col("lang")))
-    elif "dl" in docs.columns:
-        dl = F.col("dl")
     else:
-        from ipfs_search_spark.functions.tokenize import tokens_array
-        dl = F.size(tokens_array(F.col("text")))
+        dl = _stored_dl(docs)
     row = (docs.filter(F.col("status") == "ok")
            .select(dl.alias("dl"))
            .filter(F.col("dl") > 0)
            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"))
            .collect()[0])
     return int(row["n"]), int(row["sdl"] or 0)
-
-
-def compute_doc_stats(docs: DataFrame,
-                      lang_aware: bool = False) -> tuple[int, float]:
-    """Exact N and avgdl over indexable docs (dl > 0). When the documents
-    table carries the stored `dl` column (canonical_documents writes it),
-    this is a trivial column agg — no re-tokenize pass. Identity-path
-    exactness — no sketches (SURVEY.md §7 hard part 2)."""
-    n, sdl = doc_stats_sums(docs, lang_aware=lang_aware)
-    return n, (float(sdl) / n if n else 0.0)
 
 
 def build_postings(docs: DataFrame, n_shards: int = 8,
@@ -300,6 +284,80 @@ def build_postings(docs: DataFrame, n_shards: int = 8,
                         positions=positions, aggregate=False)
     return encode_postings(route_tokens(tokens, n_shards, n_buckets),
                            block_size)
+
+
+INDEX_STATS_DDL = ("n_docs long, avgdl double, n_shards int, n_buckets int, "
+                   "block_size int, positional boolean, total_dl long")
+
+
+def avg_dl(total_dl: int, n_docs: int) -> float:
+    """The one avgdl formula, over exact integer sums: builds, compaction
+    and base∪segments reads all agree bit for bit."""
+    return float(total_dl) / n_docs if n_docs else 0.0
+
+
+def index_stats_row(n_docs: int, total_dl: int, n_shards: int,
+                    n_buckets: int, block_size: int,
+                    positional: bool) -> tuple:
+    """One index_stats row. total_dl rides along so segment appends can ADD
+    their sums instead of re-scanning documents."""
+    return (n_docs, avg_dl(total_dl, n_docs), n_shards, n_buckets,
+            block_size, bool(positional), total_dl)
+
+
+def write_postings(io: TableIO, postings: DataFrame, name: str,
+                   n_buckets: int) -> None:
+    """Partitioned postings write. Each bucket is co-located into one task
+    first: one output file per bucket instead of (tasks × buckets)
+    fragments — the commit protocol's file-listing/rename cost is serial on
+    the driver. sortWithinPartitions(term): parquet row-group min/max stats
+    on the sorted term column let the query-time `term IN (...)` scan skip
+    row groups inside a bucket — at web scale a bucket holds millions of
+    terms and the probe reads only the groups containing query terms."""
+    io.write(postings.repartition(n_buckets, "bucket")
+             .sortWithinPartitions("term", "shard"),
+             name, partition_by=["bucket"])
+
+
+def term_stats_of(postings: DataFrame) -> DataFrame:
+    """Per-term (bucket, df, cf) of a postings table: integer sums over its
+    per-shard rows."""
+    return postings.groupBy("term").agg(
+        F.first("bucket").alias("bucket"),
+        F.sum("df_part").alias("df"),
+        F.sum("cf_part").alias("cf"))
+
+
+def _write_base_tables(io: TableIO, postings: DataFrame, n_buckets: int,
+                       stats_row: tuple) -> None:
+    """postings, their term_stats (term-sorted for row-group skipping),
+    then index_stats: the base's commit marker, written driver-side."""
+    write_postings(io, postings, "postings", n_buckets)
+    io.write(term_stats_of(io.read("postings")).sortWithinPartitions("term"),
+             "term_stats")
+    io.write_rows("index_stats", [stats_row], INDEX_STATS_DDL)
+
+
+def append_segment(io: TableIO, postings: DataFrame, segment_id: int,
+                   n_docs: int, total_dl: int, n_shards: int) -> None:
+    """Append one micro-batch's postings as a segment, with its own stats
+    rows: `segment_term_stats` (df/cf per term) and `segment_doc_stats`
+    (doc count, exact dl sum, and n_shards, which an index of segments
+    alone records nowhere else). The stats land BEFORE posting_segments
+    (the three appends are not atomic together): a crash mid-batch leaves
+    a stats-only orphan, never a segment whose df/n_docs open_index would
+    undercount. The orphan's docs are in `documents` without postings, and
+    a retry of the batch skips them as known urls."""
+    io.append_atomic(term_stats_of(postings)
+                     .withColumn("segment_id", F.lit(segment_id)),
+                     "segment_term_stats")
+    io.append_atomic(
+        postings.sparkSession.createDataFrame(
+            [(int(segment_id), n_docs, total_dl, int(n_shards))],
+            "segment_id long, n_docs long, total_dl long, n_shards int"),
+        "segment_doc_stats")
+    io.append_atomic(postings.withColumn("segment_id", F.lit(segment_id)),
+                     "posting_segments")
 
 
 def build_index(spark: SparkSession, pages: DataFrame, io: TableIO,
@@ -333,14 +391,9 @@ def build_index_from_docs(spark: SparkSession, docs: DataFrame, io: TableIO,
         io.write(docs, "documents")
         docs = io.read("documents")
         n_docs, total_dl = doc_stats_sums(docs, lang_aware=True)
-        avgdl = float(total_dl) / n_docs if n_docs else 0.0
     else:
         from pyspark.sql import Observation
-        if "dl" in docs.columns:
-            dl_col = F.col("dl")
-        else:
-            from ipfs_search_spark.functions.tokenize import tokens_array
-            dl_col = F.size(tokens_array(F.col("text")))
+        dl_col = _stored_dl(docs)
         ok = (F.col("status") == "ok") & (dl_col > 0)
         obs = Observation("doc_stats")
         io.write(docs.observe(obs,
@@ -350,41 +403,14 @@ def build_index_from_docs(spark: SparkSession, docs: DataFrame, io: TableIO,
         row = obs.get
         n_docs = int(row["n"] or 0)
         total_dl = int(row["sdl"] or 0)
-        avgdl = (float(total_dl) / n_docs) if n_docs else 0.0
         docs = io.read("documents")
     postings = build_postings(docs, n_shards=n_shards,
                               n_buckets=n_buckets, block_size=block_size,
                               positions=positions, lang_aware=lang_aware)
-    # co-locate each bucket into one task before the partitioned write: one
-    # output file per bucket instead of (tasks × buckets) fragments — the
-    # commit protocol's file-listing/rename cost is serial on the driver.
-    # sortWithinPartitions(term): parquet row-group min/max stats on the
-    # sorted term column let the query-time `term IN (...)` scan skip row
-    # groups inside a bucket — at web scale a bucket holds millions of
-    # terms and the probe reads only the groups containing query terms.
-    postings = (postings.repartition(n_buckets, "bucket")
-                .sortWithinPartitions("term", "shard"))
-    io.write(postings, "postings", partition_by=["bucket"])
-    postings = io.read("postings")
-    term_stats = postings.groupBy("term").agg(
-        F.first("bucket").alias("bucket"),
-        F.sum("df_part").alias("df"),
-        F.sum("cf_part").alias("cf"),
-    )
-    # sorted by term for the same row-group-skipping on stats lookups
-    io.write(term_stats.sortWithinPartitions("term"), "term_stats")
-    # total_dl (exact integer) rides along so incremental segment appends
-    # can derive the merged avgdl by ADDING per-segment sums — the Searcher
-    # then never re-aggregates postings or re-scans documents at init.
-    # write_rows: one row of scalars — written driver-side, no Spark job
-    io.write_rows(
-        "index_stats",
-        [(n_docs, avgdl, n_shards, n_buckets, block_size,
-          bool(positions), total_dl)],
-        "n_docs long, avgdl double, n_shards int, n_buckets int, "
-        "block_size int, positional boolean, total_dl long",
-    )
-    return {"n_docs": n_docs, "avgdl": avgdl, "n_shards": n_shards,
+    stats_row = index_stats_row(n_docs, total_dl, n_shards, n_buckets,
+                                block_size, positions)
+    _write_base_tables(io, postings, n_buckets, stats_row)
+    return {"n_docs": n_docs, "avgdl": stats_row[1], "n_shards": n_shards,
             "n_buckets": n_buckets, "positional": bool(positions)}
 
 
@@ -434,26 +460,15 @@ def build_fielded_index(spark: SparkSession, docs: DataFrame, io: TableIO,
         fstats_rows.append(
             (fld, nf, float(srow[f"s_{fld}"]) / nf if nf else 0.0))
 
-    postings = encode_postings(route_tokens(tokens, n_shards, n_buckets),
-                               block_size)
-    postings = (postings.repartition(n_buckets, "bucket")
-                .sortWithinPartitions("term", "shard"))
-    io.write(postings, "postings", partition_by=["bucket"])
-    postings = io.read("postings")
-    io.write(postings.groupBy("term").agg(
-        F.first("bucket").alias("bucket"),
-        F.sum("df_part").alias("df"),
-        F.sum("cf_part").alias("cf")).sortWithinPartitions("term"),
-        "term_stats")
-    io.write_rows("field_stats", [tuple(r) for r in fstats_rows],
+    io.write_rows("field_stats", fstats_rows,
                   "field string, n_docs long, avgdl double")
-    n_docs = int(srow["n_all"])
-    io.write_rows(
-        "index_stats",
-        [(n_docs, 0.0, n_shards, n_buckets, block_size, bool(positions), 0)],
-        "n_docs long, avgdl double, n_shards int, n_buckets int, "
-        "block_size int, positional boolean, total_dl long")
-    return {"n_docs": n_docs,
+    # no index-wide dl sum: BM25 runs on the per-field stats above
+    _write_base_tables(
+        io, encode_postings(route_tokens(tokens, n_shards, n_buckets),
+                            block_size), n_buckets,
+        index_stats_row(int(srow["n_all"]), 0, n_shards, n_buckets,
+                        block_size, positions))
+    return {"n_docs": int(srow["n_all"]),
             "fields": {f: (n, a) for f, n, a in fstats_rows}}
 
 
@@ -476,42 +491,16 @@ def _make_run_merger(block_size: int, per_shard: bool):
         import numpy as np
         from ipfs_search_spark.functions.codec import (
             decode_block, decode_block_positions, encode_blocks,
-            merge_sorted_runs,
         )
-        runs, pos_l = [], []
-        positional = True
-        for blocks in pdf["blocks"]:
-            ids_l, tfs_l, dls_l = [], [], []
-            for blk in blocks:
-                i, t, d = decode_block(blk)
-                ids_l.append(i); tfs_l.append(t); dls_l.append(d)
-                # blocks persisted by pre-positional builds lack the `pos`
-                # struct field entirely — degrade to a non-positional merge
-                # (blk is a dict under Arrow conversion, a Row otherwise)
-                fields = getattr(blk, "__fields__", blk)
-                pos_val = blk["pos"] if "pos" in fields else None
-                if pos_val is None:
-                    positional = False
-                elif positional:
-                    pos_l.append(decode_block_positions(blk, t))
-            if ids_l:
-                runs.append((np.concatenate(ids_l), np.concatenate(tfs_l),
-                             np.concatenate(dls_l)))
-        ids, tfs, dls = merge_sorted_runs(runs)
-        # positions payload: encode_blocks re-sorts by unsigned doc_id and
-        # permutes the flat payload with it, so pre-merge run order is fine
-        pos_flat = (np.concatenate(pos_l).astype(np.int64)
-                    if positional and pos_l else None)
-        if pos_flat is not None:
-            # align the flat payload to the POST-merge posting order: runs
-            # were concatenated unsorted; rebuild the unsorted posting order
-            # (same concatenation) and let encode_blocks permute
-            unsorted_tfs = np.concatenate([r[1] for r in runs])
-            unsorted_ids = np.concatenate([r[0] for r in runs])
-            from ipfs_search_spark.functions.codec import _element_permutation
-            order = np.argsort(unsorted_ids.view(np.uint64), kind="stable")
-            pos_flat = pos_flat[_element_permutation(
-                unsorted_tfs.astype(np.int64), order)]
+        blks = [blk for blocks in pdf["blocks"] for blk in blocks]
+        runs = [decode_block(blk) for blk in blks]
+        ids, tfs, dls = (np.concatenate(x) for x in zip(*runs))
+        # the runs are disjoint doc sets concatenated unsorted: the merge IS
+        # encode_blocks' stable sort by unsigned doc_id, which permutes the
+        # flat positions payload with it
+        pos_flat = (np.concatenate([decode_block_positions(blk, r[1])
+                                    for blk, r in zip(blks, runs)])
+                    if all(blk["pos"] is not None for blk in blks) else None)
         blocks = encode_blocks(ids, tfs, dls, positions=pos_flat,
                                block_size=block_size)
         return pd.DataFrame({
@@ -526,43 +515,117 @@ def _make_run_merger(block_size: int, per_shard: bool):
     return merge_group
 
 
+@dataclass(frozen=True)
+class IndexView:
+    """One read of an index: the base tables plus every appended posting
+    segment, with the statistics merged by integer addition."""
+    base: DataFrame | None      # base postings (None: segments only)
+    segments: DataFrame | None  # segment postings, segment_id dropped
+    postings: DataFrame         # base ∪ segments
+    term_stats: DataFrame       # merged term → (bucket, df, cf)
+    n_docs: int
+    total_dl: int
+    n_shards: int
+    stats: dict                 # base index_stats row ({} without a base)
+    field_stats: dict           # field → (n_docs, avgdl); {} if not fielded
+    segment_ids: frozenset
+
+    @property
+    def avgdl(self) -> float:
+        return avg_dl(self.total_dl, self.n_docs)
+
+    @property
+    def positional(self) -> bool:
+        return bool(self.stats.get("positional", False))
+
+
+def read_index_stats(io: TableIO) -> dict:
+    """The base index_stats row as a dict; {} when no base is committed."""
+    if not io.exists("index_stats"):
+        return {}
+    return io.read("index_stats").collect()[0].asDict()
+
+
+def open_index(io: TableIO) -> IndexView:
+    """Open base∪segments, reading each index table once. Segments hold
+    only NEW docs (anti-joined at append), so the global statistics are
+    exact integer sums of the small base and per-segment stats tables —
+    bit-identical to a from-scratch build, with no postings scan.
+
+    Raises ValueError on an index_stats row without total_dl, on a segment
+    without its per-segment stats rows (a legacy append, or a batch torn
+    after its posting_segments append, would be silently undercounted), and
+    on an index without one n_shards (the query side's doc→shard route)."""
+    stats = read_index_stats(io)
+    if stats and stats.get("total_dl") is None:
+        raise ValueError(
+            "index_stats records no total_dl (written before the exact dl "
+            "sum was stored): rebuild the index")
+    n_docs = int(stats.get("n_docs", 0))
+    total_dl = int(stats.get("total_dl", 0))
+    n_shards = stats.get("n_shards")
+    base = io.read("postings") if stats else None
+    term_stats = io.read("term_stats") if stats else None
+    postings, segments, seg_ids = base, None, frozenset()
+    if io.exists("posting_segments"):
+        def ids(df):
+            return frozenset(r[0] for r in df.select("segment_id")
+                             .distinct().collect())
+        seg = io.read("posting_segments")
+        seg_ts = (io.read("segment_term_stats")
+                  if io.exists("segment_term_stats") else None)
+        seg_docs = ([r.asDict() for r in io.read("segment_doc_stats")
+                     .collect()] if io.exists("segment_doc_stats") else [])
+        seg_ids = ids(seg)
+        if seg_ts is None or not (
+                seg_ids <= ids(seg_ts)
+                and seg_ids <= {r["segment_id"] for r in seg_docs}):
+            raise ValueError(
+                "a postings segment lacks its per-segment stats rows (legacy "
+                "append?) — merged statistics would silently undercount; "
+                "rebuild instead")
+        segments = seg.drop("segment_id")
+        seg_ts = seg_ts.drop("segment_id")
+        postings = segments if base is None else base.unionByName(segments)
+        term_stats = (seg_ts if base is None
+                      else term_stats.unionByName(seg_ts)).groupBy("term") \
+            .agg(F.first("bucket").alias("bucket"), F.sum("df").alias("df"),
+                 F.sum("cf").alias("cf"))
+        n_docs += sum(int(r["n_docs"]) for r in seg_docs)
+        total_dl += sum(int(r["total_dl"]) for r in seg_docs)
+        if not stats:
+            shard_params = {r.get("n_shards") for r in seg_docs}
+            if len(shard_params) > 1:
+                raise ValueError("posting segments disagree on n_shards")
+            n_shards = shard_params.pop()
+    if postings is None:
+        raise ValueError("no index here: build one or append a segment")
+    if n_shards is None:
+        raise ValueError(
+            "index records no n_shards (written before the doc→shard "
+            "parameter was stored): rebuild it")
+    field_stats = ({r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
+                    for r in io.read("field_stats").collect()}
+                   if io.exists("field_stats") else {})
+    return IndexView(base=base, segments=segments, postings=postings,
+                     term_stats=term_stats, n_docs=n_docs, total_dl=total_dl,
+                     n_shards=int(n_shards), stats=stats,
+                     field_stats=field_stats, segment_ids=seg_ids)
+
+
 COMPACTION_MANIFEST = "_compaction_manifest"
 _STAGING_POSTINGS = "_compacting_postings"
 _STAGING_TERM_STATS = "_compacting_term_stats"
-
-
-def covered_segment_ids(io: TableIO) -> set:
-    """The ids of the posting segments, after checking that every one has
-    its per-segment stats rows in segment_term_stats and segment_doc_stats.
-    Merged statistics are sums over those rows, so an uncovered segment (a
-    legacy append, or a batch torn after its posting_segments append) would
-    be silently undercounted: raise instead. A stats-only orphan (torn
-    before that append) is harmless: its docs are in `documents` and have
-    no postings yet. Three column-pruned segment_id scans."""
-    def ids(table):
-        if not io.exists(table):
-            return set()
-        return {r[0] for r in io.read(table)
-                .select("segment_id").distinct().collect()}
-    seg_ids = ids("posting_segments")
-    if not (seg_ids <= ids("segment_term_stats")
-            and seg_ids <= ids("segment_doc_stats")):
-        raise ValueError(
-            "a postings segment lacks its per-segment stats rows (legacy "
-            "append?) — merged statistics would silently undercount; "
-            "rebuild instead")
-    return seg_ids
 
 
 def compact_segments(io: TableIO) -> dict:
     """Fold streaming posting segments back into the base tables — the
     Lucene merge-down the reference gets from its OpenSearch backend's
     segment merges. posting_segments grows one segment per micro-batch
-    (streaming/ingest_stream.py); compaction restores the from-scratch
-    layout: ONE docid-sorted posting row per (term, shard), exact merged
-    term_stats/index_stats by INTEGER ADDITION of the per-segment stats
-    (the same math Searcher init proves at query time), and the segment
-    tables dropped — a subsequent Searcher reads base tables only.
+    (append_segment); compaction restores the from-scratch layout: ONE
+    docid-sorted posting row per (term, shard), the merged term_stats and
+    index_stats of open_index (the same view a Searcher reads), and the
+    segment tables dropped — a subsequent Searcher reads base tables only.
 
     Only (term, shard) cells that actually appear in a segment are
     re-encoded; untouched base rows pass through unchanged — at web scale
@@ -580,9 +643,8 @@ def compact_segments(io: TableIO) -> dict:
     Like Lucene's merges, compaction must not run concurrently with
     ingest appends or Searcher construction.
 
-    Requires per-segment stats coverage (covered_segment_ids, the same
-    gate Searcher init applies); raises ValueError on an uncovered segment
-    rather than silently undercounting df/n_docs."""
+    Raises open_index's ValueErrors (an uncovered segment, a base without
+    total_dl) rather than silently undercounting df/n_docs."""
     if io.exists(COMPACTION_MANIFEST):
         return _install_compaction(io)
     if not io.exists("posting_segments"):
@@ -591,63 +653,31 @@ def compact_segments(io: TableIO) -> dict:
         raise ValueError(
             "compact_segments needs index_stats for the base layout "
             "parameters (n_shards/n_buckets/positional)")
-    st = io.read("index_stats").collect()[0].asDict()
-    if st.get("total_dl") is None:
-        raise ValueError(
-            "compact_segments needs the base total_dl (rebuild the base "
-            "index, or compact via a full rebuild)")
-    seg = io.read("posting_segments")
-    seg_ids = covered_segment_ids(io)
+    view = open_index(io)
+    st = view.stats
 
     # phase 1 — stage merged postings: only segment-touched (term, shard)
     # cells re-encode, at the BASE index's block size (a divergent merge
     # block size would silently mix layouts while index_stats claims one)
     n_buckets = int(st["n_buckets"])
     block_size = int(st["block_size"])
-    segp = seg.drop("segment_id")
-    has_base = io.exists("postings")
-    if has_base:
-        base = io.read("postings")
-        keys = segp.select("term", "shard").distinct()
-        untouched = base.join(keys, ["term", "shard"], "left_anti")
-        to_merge = base.join(keys, ["term", "shard"], "left_semi") \
-            .unionByName(segp)
-    else:
-        untouched, to_merge = None, segp
+    keys = view.segments.select("term", "shard").distinct()
+    to_merge = view.base.join(keys, ["term", "shard"], "left_semi") \
+        .unionByName(view.segments)
     merged = to_merge.groupBy("term", "shard").applyInPandas(
         _make_run_merger(block_size, per_shard=True), POSTINGS_SCHEMA)
-    newp = (untouched.unionByName(merged) if untouched is not None
-            else merged)
-    io.write(newp.repartition(n_buckets, "bucket")
-             .sortWithinPartitions("term", "shard"),
-             _STAGING_POSTINGS, partition_by=["bucket"])
-
-    # stage merged term_stats (integer df/cf addition — bit-identical to
-    # a from-scratch re-aggregation, same as Searcher's incremental path)
-    seg_ts = io.read("segment_term_stats").drop("segment_id")
-    ts = (io.read("term_stats").unionByName(seg_ts) if has_base
-          else seg_ts)
-    io.write(ts.groupBy("term").agg(
-        F.first("bucket").alias("bucket"),
-        F.sum("df").alias("df"),
-        F.sum("cf").alias("cf")).sortWithinPartitions("term"),
-        _STAGING_TERM_STATS)
-
-    srow = io.read("segment_doc_stats").agg(
-        F.sum("n_docs").alias("n"), F.sum("total_dl").alias("dl")
-    ).collect()[0]
-    n_docs = int(st["n_docs"]) + int(srow["n"] or 0)
-    total_dl = int(st["total_dl"]) + int(srow["dl"] or 0)
+    write_postings(io, view.base.join(keys, ["term", "shard"], "left_anti")
+                   .unionByName(merged), _STAGING_POSTINGS, n_buckets)
+    io.write(view.term_stats.sortWithinPartitions("term"),
+             _STAGING_TERM_STATS)
     # commit point: the manifest carries the full post-compaction
     # index_stats row
     io.write_rows(
         COMPACTION_MANIFEST,
-        [(n_docs, float(total_dl) / n_docs if n_docs else 0.0,
-          int(st["n_shards"]), n_buckets, int(st["block_size"]),
-          bool(st["positional"]), total_dl, len(seg_ids))],
-        "n_docs long, avgdl double, n_shards int, n_buckets int, "
-        "block_size int, positional boolean, total_dl long, "
-        "segments_folded long")
+        [index_stats_row(view.n_docs, view.total_dl, view.n_shards,
+                         n_buckets, block_size, view.positional)
+         + (len(view.segment_ids),)],
+        INDEX_STATS_DDL + ", segments_folded long")
     return _install_compaction(io)
 
 
@@ -655,7 +685,7 @@ def _install_compaction(io: TableIO) -> dict:
     """Phase 2 of compact_segments: every step is an idempotent
     swap/overwrite/drop keyed off the manifest, so this completes a
     partially-installed compaction regardless of where a crash hit."""
-    m = io.read(COMPACTION_MANIFEST).collect()[0].asDict()
+    m = io.read(COMPACTION_MANIFEST).collect()[0]
     for staging, live, parts in ((_STAGING_POSTINGS, "postings",
                                   ["bucket"]),
                                  (_STAGING_TERM_STATS, "term_stats",
@@ -667,13 +697,7 @@ def _install_compaction(io: TableIO) -> dict:
             io.drop(staging)
         else:
             io._swap_dir(io._path(staging), io._path(live))
-    io.write_rows(
-        "index_stats",
-        [(int(m["n_docs"]), float(m["avgdl"]), int(m["n_shards"]),
-          int(m["n_buckets"]), int(m["block_size"]),
-          bool(m["positional"]), int(m["total_dl"]))],
-        "n_docs long, avgdl double, n_shards int, n_buckets int, "
-        "block_size int, positional boolean, total_dl long")
+    io.write_rows("index_stats", [tuple(m)[:-1]], INDEX_STATS_DDL)
     for t in ("posting_segments", "segment_term_stats",
               "segment_doc_stats"):
         io.drop(t)

@@ -88,7 +88,7 @@ from ipfs_search_spark.catalog import TableIO
 from ipfs_search_spark.functions.codec import (
     block_ub, decode_block, decode_block_positions, tfnorm,
 )
-from ipfs_search_spark.operators.index_build import shard_of
+from ipfs_search_spark.operators.index_build import open_index, shard_of
 from ipfs_search_spark.plans.parser import (
     Expansion, Filter, Query, QueryParseError, filter_to_sql, parse_query,
 )
@@ -938,6 +938,11 @@ def _make_scorer(specs: dict, k: int, prune: bool, combine: str = "sum",
     return score
 
 
+def _term_map(rows) -> dict:
+    """term_stats rows → {term: (df, bucket)}."""
+    return {r["term"]: (int(r["df"]), int(r["bucket"])) for r in rows}
+
+
 class Searcher:
     """Reusable query handle: caches the (tiny, static) index_stats and the
     postings/term_stats/documents DataFrames so repeated queries skip the
@@ -954,8 +959,6 @@ class Searcher:
     MAX_PREFIX_EXPANSIONS = 50
 
     def __init__(self, spark: SparkSession, io: TableIO,
-                 cache_terms: bool | None = None,
-                 include_segments: bool | None = None,
                  fuzzy_transpositions: bool = False,
                  fuzzy_prefix_length: int = 0):
         """fuzzy_transpositions: OpenSearch query_string's
@@ -973,88 +976,32 @@ class Searcher:
         over the term-sorted vocabulary (the at-scale configuration; 0 =
         Lucene default, whole-vocabulary automaton analogue).
 
-        include_segments: also search `posting_segments` (incremental
-        micro-batch appends, streaming/ingest_stream.py). Segments hold only
-        NEW docs (anti-joined at ingest), so the union's doc sets are
-        disjoint and exact global stats are recomputed over the union —
-        scores match a from-scratch rebuild bit-for-bit. Default: on when
-        the segments table exists. Raises ValueError on a segment without
-        its per-segment stats rows (the check compact_segments applies)
-        and on an index that records no n_shards."""
+        The index opens through index_build.open_index: the base tables
+        plus any micro-batch posting segments (streaming/ingest_stream.py),
+        with exact summed statistics, so scores match a from-scratch
+        rebuild bit for bit. Raises its ValueErrors (a segment without its
+        per-segment stats rows, an index that records no n_shards or no
+        total_dl)."""
         self.spark, self.io = spark, io
         self.fuzzy_transpositions = bool(fuzzy_transpositions)
         self.fuzzy_prefix_length = int(fuzzy_prefix_length)
         if self.fuzzy_prefix_length < 0:
             raise ValueError("fuzzy_prefix_length must be >= 0")
+        view = open_index(io)
         self.documents = io.read("documents")
-        has_base = io.exists("postings")
-        stats = (io.read("index_stats").collect()[0].asDict()
-                 if has_base else {})
-        if include_segments is None:
-            include_segments = io.exists("posting_segments")
-        if include_segments and io.exists("posting_segments"):
-            from ipfs_search_spark.operators.index_build import (
-                covered_segment_ids,
-            )
-            covered_segment_ids(io)
-            if has_base and stats.get("total_dl") is None:
-                raise ValueError(
-                    "segmented index: the base index_stats lacks total_dl "
-                    "(rebuild the base index)")
-            seg = io.read("posting_segments").drop("segment_id")
-            self.postings = (io.read("postings").unionByName(seg)
-                             if has_base else seg)
-            # exact global stats by SUMMING the small per-segment stats
-            # tables (written at append time) with the base tables —
-            # init touches no postings data files (plan-asserted).
-            # Integer df/cf/total_dl sums make the merged stats
-            # bit-identical to a from-scratch re-aggregation.
-            seg_ts = io.read("segment_term_stats").drop("segment_id")
-            ts = (io.read("term_stats").unionByName(seg_ts) if has_base
-                  else seg_ts)
-            self.term_stats = ts.groupBy("term").agg(
-                F.first("bucket").alias("bucket"),
-                F.sum("df").alias("df"),
-                F.sum("cf").alias("cf"))
-            sds = io.read("segment_doc_stats")
-            aggs = [F.sum("n_docs").alias("n"), F.sum("total_dl").alias("dl")]
-            if "n_shards" in sds.columns:
-                # segments-only indexes (no base build) record the
-                # doc→shard parameter per segment; min == max checks the
-                # segments agree, in the same aggregate
-                aggs += [F.min("n_shards").alias("s0"),
-                         F.max("n_shards").alias("s1")]
-            srow = sds.agg(*aggs).collect()[0].asDict()
-            if not has_base and srow.get("s0") != srow.get("s1"):
-                raise ValueError("posting segments disagree on n_shards")
-            self.n_docs = int(stats.get("n_docs", 0)) + int(srow["n"] or 0)
-            total = int(stats.get("total_dl", 0)) + int(srow["dl"] or 0)
-            self.avgdl = float(total) / self.n_docs if self.n_docs else 0.0
-            ns = stats["n_shards"] if has_base else srow.get("s0")
-        else:
-            self.n_docs = int(stats["n_docs"])
-            self.avgdl = float(stats["avgdl"])
-            self.term_stats = io.read("term_stats")
-            self.postings = io.read("postings")
-            ns = stats.get("n_shards")
-        # positional flag (phrase-query capability) from index_stats
-        self.positional = bool(stats.get("positional", False))
+        self.postings, self.term_stats = view.postings, view.term_stats
+        self.n_docs, self.avgdl = view.n_docs, view.avgdl
+        # positional flag: phrase-query capability
+        self.positional = view.positional
         # the index's doc→shard function parameter: the query side routes
         # per-doc rows (filter-allowed sets, filter-leaf bits) to the
         # shard that holds the doc's postings
-        if ns is None:
-            raise ValueError(
-                "index records no n_shards (written before the doc→shard "
-                "parameter was stored): rebuild it")
-        self.n_shards = int(ns)
-        self._term_cache: dict | None = None
-        if cache_terms is None:
-            cache_terms = self.term_stats.count() <= self.TERM_CACHE_MAX
-        if cache_terms:
-            self._term_cache = {
-                r["term"]: (int(r["df"]), int(r["bucket"]))
-                for r in self.term_stats.collect()
-            }
+        self.n_shards = view.n_shards
+        self._field_stats = view.field_stats
+        # one bounded collect: a vocabulary past the cap stays uncached
+        rows = self.term_stats.limit(self.TERM_CACHE_MAX + 1).collect()
+        self._term_cache: dict | None = (
+            _term_map(rows) if len(rows) <= self.TERM_CACHE_MAX else None)
 
     def lookup_terms(self, terms: list) -> dict:
         """term → (df, bucket) for the given terms (cache or filtered scan).
@@ -1063,8 +1010,7 @@ class Searcher:
         if self._term_cache is not None:
             return {t: self._term_cache[t] for t in terms
                     if t in self._term_cache}
-        return {r["term"]: (int(r["df"]), int(r["bucket"]))
-                for r in self._lookup_scan(terms).collect()}
+        return _term_map(self._lookup_scan(terms).collect())
 
     # --- uncached vocabulary scans ------------------------------------
     # Exposed un-collected so tests can assert the parquet pushdown
@@ -1150,8 +1096,7 @@ class Searcher:
             terms = sorted(t for t in self._term_cache
                            if t.startswith(prefix))[:cap]
             return {t: self._term_cache[t] for t in terms}
-        rows = self._prefix_scan(prefix, cap).collect()
-        return {r["term"]: (int(r["df"]), int(r["bucket"])) for r in rows}
+        return _term_map(self._prefix_scan(prefix, cap).collect())
 
     def expand(self, exp: Expansion, field: str | None = None,
                max_expansions: int | None = None) -> dict:
@@ -1175,35 +1120,27 @@ class Searcher:
         pre = f"{field}:" if field else ""
         if exp.kind == "prefix":
             return self.expand_prefix(pre + exp.value, cap)
-        if exp.kind == "wildcard":
-            lit = _WILD_LIT_RE.match(exp.value).group(0)
-            rx = re.compile("^" + re.escape(pre)
-                            + _wildcard_regex(exp.value)[1:])
+        if exp.kind in ("wildcard", "regex"):
+            if exp.kind == "wildcard":
+                lit = _WILD_LIT_RE.match(exp.value).group(0)
+                rx = re.compile("^" + re.escape(pre)
+                                + _wildcard_regex(exp.value)[1:])
+            else:
+                # anchored full-term match (Lucene regexp semantics); the
+                # leading literal run prunes the term-sorted scan like a
+                # wildcard head, conservatively disabled when the pattern
+                # could match terms not carrying it (top-level alternation,
+                # or a quantifier that can erase the run's last char)
+                lit = _regex_literal_head(exp.value)
+                rx = re.compile("^" + re.escape(pre)
+                                + f"(?:{exp.value})$")
             if self._term_cache is not None:
                 terms = sorted(t for t in self._term_cache
                                if t.startswith(pre + lit) and rx.match(t)
                                )[:cap]
                 return {t: self._term_cache[t] for t in terms}
-            rows = self._wildcard_scan(pre + lit, rx.pattern, cap).collect()
-            return {r["term"]: (int(r["df"]), int(r["bucket"]))
-                    for r in rows}
-        if exp.kind == "regex":
-            # anchored full-term match (Lucene regexp semantics); the
-            # leading literal run prunes the term-sorted scan like a
-            # wildcard head, conservatively disabled when the pattern
-            # could match terms not carrying it (top-level alternation,
-            # or a quantifier that can erase the run's last char)
-            lit = _regex_literal_head(exp.value)
-            rx = re.compile("^" + re.escape(pre)
-                            + f"(?:{exp.value})$")
-            if self._term_cache is not None:
-                terms = sorted(t for t in self._term_cache
-                               if t.startswith(pre + lit) and rx.match(t)
-                               )[:cap]
-                return {t: self._term_cache[t] for t in terms}
-            rows = self._wildcard_scan(pre + lit, rx.pattern, cap).collect()
-            return {r["term"]: (int(r["df"]), int(r["bucket"]))
-                    for r in rows}
+            return _term_map(
+                self._wildcard_scan(pre + lit, rx.pattern, cap).collect())
         # fuzzy: candidates within the length band, ranked (distance, term)
         base, dist = exp.value, exp.dist
         lo, hi = len(base) - dist, len(base) + dist
@@ -1225,16 +1162,12 @@ class Searcher:
                     cand.append((d, t))
             cand.sort()
             return {t: self._term_cache[t] for _, t in cand[:cap]}
-        rows = self._fuzzy_scan(pre, base, dist, cap).collect()
-        return {r["term"]: (int(r["df"]), int(r["bucket"])) for r in rows}
+        return _term_map(self._fuzzy_scan(pre, base, dist, cap).collect())
 
     def field_stats(self) -> dict:
         """Per-field (n_docs, avgdl) for fielded indexes (field_stats table
         written by build_fielded_index); {} for single-field indexes."""
-        if not self.io.exists("field_stats"):
-            return {}
-        return {r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
-                for r in self.io.read("field_stats").collect()}
+        return self._field_stats
 
     def search(self, queries: list, k: int = 10, mode: str = "or",
                prune: bool = True, fields: dict | None = None,

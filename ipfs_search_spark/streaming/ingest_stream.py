@@ -89,43 +89,36 @@ def rate_windows(df: DataFrame, time_col: str, *,
 def incremental_index_microbatch(io, n_shards: int = 8, n_buckets: int = 64,
                                  positions: bool = False):
     """foreachBatch hook: each micro-batch of new pages is appended to the
-    documents table and its postings are built and appended as a new segment
-    (Lucene-style segment-per-flush; compaction = merge_term_shards). Returns
-    a function suitable for writeStream.foreachBatch.
+    documents table and its postings are built and appended as a new
+    segment with its own stats rows (Lucene-style segment-per-flush;
+    index_build.append_segment). compact_segments folds the segments back
+    into the base tables. Returns a function suitable for
+    writeStream.foreachBatch.
 
     `positions` must match the base index's positional flag: phrase queries
     decode positions across the base∪segments union, so a positional base
     needs positional segments (a mismatch raises a clear codec error at
-    query time, never a wrong result).
-
-    Each segment append also records its OWN statistics —
-    `segment_term_stats` (per-term df/cf of this segment) and
-    `segment_doc_stats` (doc count + exact integer dl sum, plus the
-    doc→shard parameter `n_shards`, which an index of segments alone has
-    nowhere else to record) — so a Searcher
-    over base∪segments derives exact global stats by SUMMING the small
-    stats tables instead of re-aggregating every postings row at init
-    (which is a full postings scan per session at web scale)."""
+    query time, never a wrong result)."""
     from ipfs_search_spark.operators.index_build import (
-        build_postings, canonical_documents, doc_stats_sums,
+        append_segment, build_postings, canonical_documents, doc_stats_sums,
+        read_index_stats,
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if io.exists("index_stats"):
-            # segments MUST share the base index's layout parameters: the
-            # query side routes per-doc rows (filter-allowed sets) by
-            # pmod(xxhash64(doc_id), n_shards), which is only exact when
-            # every postings row — base or segment — used the same S
-            st = io.read("index_stats").collect()[0].asDict()
-            if (int(st["n_shards"]) != int(n_shards)
-                    or int(st["n_buckets"]) != int(n_buckets)):
-                raise ValueError(
-                    f"segment layout mismatch: base index has "
-                    f"n_shards={st['n_shards']}, n_buckets="
-                    f"{st['n_buckets']}; microbatch configured "
-                    f"({n_shards}, {n_buckets})")
+        st = read_index_stats(io)
+        # segments MUST share the base index's layout parameters: the query
+        # side routes per-doc rows (filter-allowed sets) by
+        # pmod(xxhash64(doc_id), n_shards), which is only exact when every
+        # postings row — base or segment — used the same S
+        if st and (int(st["n_shards"]) != int(n_shards)
+                   or int(st["n_buckets"]) != int(n_buckets)):
+            raise ValueError(
+                f"segment layout mismatch: base index has "
+                f"n_shards={st['n_shards']}, n_buckets="
+                f"{st['n_buckets']}; microbatch configured "
+                f"({n_shards}, {n_buckets})")
         docs = canonical_documents(batch_df, extract=False)
         # new-item path (J2): only urls absent from the state enter the
         # segment — re-sightings of known docs are updates, not re-indexes
@@ -142,30 +135,10 @@ def incremental_index_microbatch(io, n_shards: int = 8, n_buckets: int = 64,
         io.append_atomic(docs, "documents")
         # materialize the (small) micro-batch postings once so the segment
         # append and its stats aggregation share one tokenize+encode pass
-        postings = (build_postings(docs, n_shards=n_shards,
-                                   n_buckets=n_buckets, positions=positions)
-                    .withColumn("segment_id", F.lit(batch_id))
-                    .localCheckpoint(eager=True))
-        # Append ORDER matters (the three appends are not atomic together):
-        # stats tables land BEFORE posting_segments, so a crash mid-batch
-        # degrades to a stats-only orphan — consistent with the documents
-        # append above (the orphan docs ARE in `documents`, they just have
-        # no postings yet) — instead of a postings segment whose df/n_docs
-        # the incremental Searcher would silently undercount. The Searcher
-        # additionally verifies segment coverage before trusting the
-        # incremental path (plans/query.py Searcher.__init__).
-        io.append_atomic(
-            postings.groupBy("term").agg(
-                F.first("bucket").alias("bucket"),
-                F.sum("df_part").alias("df"),
-                F.sum("cf_part").alias("cf"))
-            .withColumn("segment_id", F.lit(batch_id)),
-            "segment_term_stats")
-        io.append_atomic(
-            docs.sparkSession.createDataFrame(
-                [(int(batch_id), n_docs, total_dl, int(n_shards))],
-                "segment_id long, n_docs long, total_dl long, n_shards int"),
-            "segment_doc_stats")
-        io.append_atomic(postings, "posting_segments")
+        postings = build_postings(docs, n_shards=n_shards,
+                                  n_buckets=n_buckets,
+                                  positions=positions).localCheckpoint(
+                                      eager=True)
+        append_segment(io, postings, batch_id, n_docs, total_dl, n_shards)
 
     return handle

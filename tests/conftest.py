@@ -38,3 +38,20 @@ def built_index(spark, pages, index_dir):
     stats = build_index(spark, pages, io, n_shards=4, n_buckets=16,
                         max_bytes=1 << 15)
     return io, stats
+
+
+@pytest.fixture(scope="session")
+def cold_searcher():
+    """Searcher factory for the uncached vocabulary path — the route a
+    vocabulary larger than Searcher.TERM_CACHE_MAX takes at web scale —
+    on the small fixture indexes: the cap is 0 while the Searcher opens."""
+    from ipfs_search_spark.plans.query import Searcher
+
+    def make(spark, io, **kwargs):
+        cap = Searcher.TERM_CACHE_MAX
+        Searcher.TERM_CACHE_MAX = 0
+        try:
+            return Searcher(spark, io, **kwargs)
+        finally:
+            Searcher.TERM_CACHE_MAX = cap
+    return make

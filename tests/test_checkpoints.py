@@ -4,7 +4,6 @@ and rank-identity of an index assembled from checkpointed steps."""
 import shutil
 import tempfile
 
-import pyspark.sql.functions as F
 import pytest
 
 from ipfs_search_spark.catalog import TableIO
@@ -12,7 +11,7 @@ from ipfs_search_spark.checkpoints import (
     CheckpointedBuild, checkpointed_postings_build,
 )
 from ipfs_search_spark.operators.index_build import (
-    canonical_documents, compute_doc_stats,
+    INDEX_STATS_DDL, canonical_documents, doc_stats_sums, term_stats_of,
 )
 
 
@@ -52,7 +51,7 @@ def test_checkpointed_index_matches_direct(spark, pages, tmp_io, built_index):
 
     docs = canonical_documents(pages, max_bytes=1 << 15)
     tmp_io.write(docs, "documents")
-    n_docs, avgdl = compute_doc_stats(tmp_io.read("documents"))
+    n_docs, total_dl = doc_stats_sums(tmp_io.read("documents"))
     report = checkpointed_postings_build(
         spark, tmp_io, "bx", n_buckets=16, n_shards=4,
         buckets_per_step=4)
@@ -66,14 +65,10 @@ def test_checkpointed_index_matches_direct(spark, pages, tmp_io, built_index):
     # expose checkpointed output under the standard table names + stats
     pc = tmp_io.read("postings_ckpt")
     tmp_io.write(pc, "postings", partition_by=["bucket"])
-    ts = pc.groupBy("term").agg(F.first("bucket").alias("bucket"),
-                                F.sum("df_part").alias("df"),
-                                F.sum("cf_part").alias("cf"))
-    tmp_io.write(ts, "term_stats")
+    tmp_io.write(term_stats_of(pc), "term_stats")
     tmp_io.write(spark.createDataFrame(
-        [(n_docs, avgdl, 4, 16, 128)],
-        "n_docs long, avgdl double, n_shards int, n_buckets int, "
-        "block_size int"), "index_stats")
+        [(n_docs, total_dl / n_docs, 4, 16, 128, False, total_dl)],
+        INDEX_STATS_DDL), "index_stats")
 
     io_direct, _ = built_index
     queries = [(0, "data spark"), (1, "index merge block")]

@@ -7,8 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ipfs_search_spark.functions.codec import (
-    decode_block, encode_blocks, merge_sorted_runs, varbyte_decode,
-    varbyte_encode,
+    decode_block, encode_blocks, varbyte_decode, varbyte_encode,
 )
 
 
@@ -60,18 +59,6 @@ def test_blockmax_metadata():
     from ipfs_search_spark.functions.codec import block_ub
     assert block_ub(blocks[0]["max_tf"], blocks[0]["min_dl"], 100.0) > \
         block_ub(blocks[1]["max_tf"], blocks[1]["min_dl"], 100.0)
-
-
-def test_merge_runs_interleaved():
-    rng = np.random.default_rng(0)
-    ids = np.unique(rng.integers(-2**62, 2**62, size=2000, dtype=np.int64))
-    order = np.argsort(ids.view(np.uint64))
-    ids = ids[order]
-    tfs = rng.integers(1, 9, ids.size, dtype=np.int64)
-    dls = rng.integers(1, 99, ids.size, dtype=np.int64)
-    runs = [(ids[i::3], tfs[i::3], dls[i::3]) for i in range(3)]
-    mi, mt, md = merge_sorted_runs(runs)
-    assert (mi == ids).all() and (mt == tfs).all() and (md == dls).all()
 
 
 @given(st.lists(st.lists(st.integers(min_value=0, max_value=2**31 - 1),

@@ -73,7 +73,7 @@ def test_lang_aware_build_path(spark, tmp_path):
     UDF; CJK doc must be retrievable by single Han character."""
     from ipfs_search_spark.catalog import TableIO
     from ipfs_search_spark.operators.index_build import (
-        build_postings, compute_doc_stats,
+        INDEX_STATS_DDL, build_postings, term_stats_of,
     )
     from ipfs_search_spark.plans.query import search
 
@@ -86,15 +86,10 @@ def test_lang_aware_build_path(spark, tmp_path):
     docs = io.read("documents")
     postings = build_postings(docs, n_shards=2, n_buckets=4, lang_aware=True)
     io.write(postings, "postings", partition_by=["bucket"])
-    from pyspark.sql import functions as F
-    p = io.read("postings")
-    io.write(p.groupBy("term").agg(F.first("bucket").alias("bucket"),
-                                   F.sum("df_part").alias("df"),
-                                   F.sum("cf_part").alias("cf")), "term_stats")
-    # lang-aware dl for the zh doc is 3 tokens (搜,索,engine)
-    io.write(spark.createDataFrame([(2, 3.0, 2, 4, 128)],
-             "n_docs long, avgdl double, n_shards int, n_buckets int, "
-             "block_size int"), "index_stats")
+    io.write(term_stats_of(io.read("postings")), "term_stats")
+    # lang-aware dl is 3 tokens for each doc (搜,索,engine / plain,engine,text)
+    io.write(spark.createDataFrame([(2, 3.0, 2, 4, 128, False, 6)],
+                                   INDEX_STATS_DDL), "index_stats")
     hits = search(spark, io, [(0, "搜")], k=5).collect()
     assert [r["doc_id"] for r in hits] == [1]
 

@@ -96,14 +96,13 @@ def test_transposition_widens_the_match_set(spark, env):
     assert got_c <= got_d  # DL ball contains the classic ball
 
 
-def test_expansion_identity_cached_vs_scan(spark, env):
+def test_expansion_identity_cached_vs_scan(spark, env, cold_searcher):
     """The cached driver-dict path and the distributed scan path (JVM
     lev≤2d prefilter + Arrow-batched exact DL) must pick the identical
     expansion set in the identical order."""
     io, _ = env
     hot = Searcher(spark, io, fuzzy_transpositions=True)
-    cold = Searcher(spark, io, cache_terms=False,
-                    fuzzy_transpositions=True)
+    cold = cold_searcher(spark, io, fuzzy_transpositions=True)
     for base, dist in (("tarce", 1), ("tarce", 2), ("carte", 2),
                        ("grace", 1)):
         e = Expansion("fuzzy", base, dist)
@@ -142,7 +141,7 @@ def test_default_stays_classic(spark, env):
     assert "trace" not in got
 
 
-def test_fuzzy_prefix_length(spark, env):
+def test_fuzzy_prefix_length(spark, env, cold_searcher):
     """fuzzy_prefix_length=N (Lucene FuzzyQuery prefixLength): candidates
     carry the base's first N chars verbatim — the expansion set is exactly
     the unconstrained set filtered to the shared prefix, and the uncached
@@ -152,7 +151,7 @@ def test_fuzzy_prefix_length(spark, env):
     e = Expansion("fuzzy", "tract", 2)
     free = Searcher(spark, io)
     pinned = Searcher(spark, io, fuzzy_prefix_length=2)
-    cold = Searcher(spark, io, cache_terms=False, fuzzy_prefix_length=2)
+    cold = cold_searcher(spark, io, fuzzy_prefix_length=2)
     exp_free = free.expand(e)
     exp_pin = pinned.expand(e)
     assert exp_pin == {t: v for t, v in exp_free.items()

@@ -78,9 +78,9 @@ def test_segmented_searcher_init_reads_no_postings(spark):
               .collect()}
     got = {r["term"]: (r["df"], r["cf"]) for r in sx.term_stats.collect()}
     assert got == legacy
-    from ipfs_search_spark.operators.index_build import compute_doc_stats
-    n_exact, avgdl_exact = compute_doc_stats(io.read("documents"))
-    assert (sx.n_docs, sx.avgdl) == (n_exact, avgdl_exact)
+    from ipfs_search_spark.operators.index_build import doc_stats_sums
+    n_exact, total_exact = doc_stats_sums(io.read("documents"))
+    assert (sx.n_docs, sx.avgdl) == (n_exact, total_exact / n_exact)
 
 
 def test_legacy_segment_without_stats_raises(spark):
@@ -190,7 +190,7 @@ def test_compact_segments_matches_rebuild(spark):
               "_compacting_postings", "_compacting_term_stats"):
         assert not io.exists(t), t
 
-    sx = Searcher(spark, io)  # include_segments auto-detects: none left
+    sx = Searcher(spark, io)  # no segments left
     after = _results(sx)
     assert after == before
     io_full = TableIO(spark, tempfile.mkdtemp(prefix="isx-compactfull-"))

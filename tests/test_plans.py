@@ -338,15 +338,15 @@ def test_extract_is_arrow_batched(spark, pages):
     assert "BatchEvalPython" not in plan
 
 
-def test_uncached_vocab_scans_push_down(spark, built_index):
-    """The at-scale vocabulary path (cache_terms=False — web-scale vocab
-    exceeds TERM_CACHE_MAX): every expansion/lookup scan over the
+def test_uncached_vocab_scans_push_down(spark, built_index, cold_searcher):
+    """The at-scale vocabulary path (the uncached one a web-scale vocab
+    exceeding TERM_CACHE_MAX takes): every expansion/lookup scan over the
     term-sorted term_stats table must push its pruning predicate into the
     parquet source (r4 verdict next #6). Row-group min/max stats on the
     sorted term column then skip everything outside the probed range."""
     from ipfs_search_spark.plans.query import Searcher
     io, _ = built_index
-    sx = Searcher(spark, io, cache_terms=False)
+    sx = cold_searcher(spark, io)
     assert sx._term_cache is None
 
     def pushed(df) -> str:
@@ -385,15 +385,14 @@ def test_uncached_vocab_scans_push_down(spark, built_index):
     assert a == b and a
 
 
-def test_transpositions_scan_stays_arrow_and_prefiltered(spark,
-                                                         built_index):
+def test_transpositions_scan_stays_arrow_and_prefiltered(spark, built_index,
+                                                         cold_searcher):
     """The Damerau fuzzy scan (fuzzy_transpositions=True, uncached) must
     keep the JVM-side levenshtein prefilter in the scan stage (the exact
     DL re-check sees only band survivors) and evaluate the re-check as an
     Arrow-batched python UDF, never row-at-a-time pickling."""
-    from ipfs_search_spark.plans.query import Searcher
     io, _ = built_index
-    sx = Searcher(spark, io, cache_terms=False, fuzzy_transpositions=True)
+    sx = cold_searcher(spark, io, fuzzy_transpositions=True)
     plan = _plan(sx._fuzzy_scan("", "data", 1, 50))
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan

@@ -115,10 +115,11 @@ def test_expand_prefix_lexicographic_cap(sx, prefix_and_exp):
     assert sx.expand_prefix("zzzznope") == {}
 
 
-def test_expand_prefix_uncached_matches_cached(spark, built_index):
+def test_expand_prefix_uncached_matches_cached(spark, built_index,
+                                               cold_searcher):
     io, _ = built_index
-    hot = Searcher(spark, io, cache_terms=True)
-    cold = Searcher(spark, io, cache_terms=False)
+    hot = Searcher(spark, io)
+    cold = cold_searcher(spark, io)
     assert sorted(hot.expand_prefix("data")) == \
         sorted(cold.expand_prefix("data"))
     assert hot.expand_prefix("data") == cold.expand_prefix("data")
@@ -197,10 +198,11 @@ def test_expand_fuzzy_distance_ranked(sx):
     assert sorted(sx.expand(Expansion("fuzzy", "merge", 0))) == ["merge"]
 
 
-def test_expand_uncached_matches_cached_wildcard_fuzzy(spark, built_index):
+def test_expand_uncached_matches_cached_wildcard_fuzzy(spark, built_index,
+                                                      cold_searcher):
     io, _ = built_index
-    hot = Searcher(spark, io, cache_terms=True)
-    cold = Searcher(spark, io, cache_terms=False)
+    hot = Searcher(spark, io)
+    cold = cold_searcher(spark, io)
     for e in [Expansion("wildcard", "dat?"), Expansion("wildcard", "*ta1"),
               Expansion("fuzzy", "merge", 1),
               Expansion("fuzzy", "spark", 2)]:

@@ -50,9 +50,9 @@ def test_literal_head_conservatism():
 
 
 @pytest.fixture(scope="module")
-def env(spark, built_index):
+def env(spark, built_index, cold_searcher):
     io, _ = built_index
-    return io, Searcher(spark, io), Searcher(spark, io, cache_terms=False)
+    return io, Searcher(spark, io), cold_searcher(spark, io)
 
 
 def _vocab(io):
