@@ -298,6 +298,44 @@ def decode_block_positions(block, tfs: np.ndarray) -> np.ndarray:
     return decode_positions(bytes(block["pos"]), tfs)
 
 
+def decode_blocks(blocks, positions: bool = False):
+    """Decode MANY blocks (dicts or Rows, any mix of terms) in one
+    vectorized pass → flat (doc_ids, tfs, dls, positions) int64 arrays in
+    block order; positions is None unless requested. Equal to concatenating
+    decode_block / decode_block_positions per block, but each payload is
+    ONE varbyte_decode over the concatenated bytes: the doc_id gaps then
+    take one segmented cumsum seeded by each block's first_doc_id, and the
+    position deltas one cumsum restarting at each posting."""
+    ns = np.fromiter((b["n"] for b in blocks), np.int64, len(blocks))
+    firsts = np.fromiter((b["first_doc_id"] for b in blocks), np.int64,
+                         len(blocks))
+    total = int(ns.sum())
+
+    def field(name):
+        return varbyte_decode(b"".join(b[name] for b in blocks), total)
+
+    gaps = field("doc_ids")
+    starts = np.zeros(ns.size, dtype=np.int64)
+    np.cumsum(ns[:-1], out=starts[1:])
+    # uint64 arithmetic wraps mod 2**64, so seeding each block's first gap
+    # (0 on disk) with its first_doc_id and subtracting the running sum
+    # before the block restores unsigned ids exactly
+    gaps[starts] += firsts.view(np.uint64)
+    cs = np.cumsum(gaps, dtype=np.uint64)
+    before = np.zeros(ns.size, dtype=np.uint64)
+    before[1:] = cs[starts[1:] - 1]
+    ids = (cs - np.repeat(before, ns)).view(np.int64)
+    tfs = field("tfs").astype(np.int64)
+    dls = field("dls").astype(np.int64)
+    pos = None
+    if positions:
+        if any(b["pos"] is None for b in blocks):
+            raise ValueError("block has no positional payload "
+                             "(index built with positions=False)")
+        pos = decode_positions(b"".join(b["pos"] for b in blocks), tfs)
+    return ids, tfs, dls, pos
+
+
 def decode_block(block) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """block (dict or Row) → (doc_ids int64, tfs int64, dls int64)."""
     first = np.uint64(np.int64(block["first_doc_id"]).view(np.uint64)

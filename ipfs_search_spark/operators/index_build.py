@@ -23,8 +23,9 @@ Why doc-sharding instead of one global posting list per term:
 Every read and write of the index tables is in this module: one reader
 (open_index: base ∪ micro-batch segments, shared by Searcher and
 compact_segments) and one set of writers. compact_segments folds segments
-back by a per-(term, shard) merge; merge_term_shards k-way-merges per-shard
-runs into one list per term (shard = -1, FIXTURES.md §4) for export.
+back by a per-(bucket, shard) cell merge; merge_term_shards runs the same
+cell merger per bucket to make one list per term (shard = -1, FIXTURES.md
+§4) for export.
 """
 
 from __future__ import annotations
@@ -161,7 +162,6 @@ def _make_encoder(block_size: int):
       from the build entirely."""
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
-        from ipfs_search_spark.functions.codec import encode_blocks_bulk
         # factorize terms to int codes FIRST (C-speed hash): lexsorting the
         # raw object-dtype string column fell back to per-element Python
         # comparisons — the dominant encoder cost at bench scale. Postings
@@ -208,22 +208,34 @@ def _make_encoder(block_size: int):
                 pos_cells = pdf["positions"].to_numpy()[order]
                 pos_flat = (np.concatenate(pos_cells).astype(np.int64)
                             if pos_cells.size else np.empty(0, np.int64))
-        seg = np.flatnonzero(np.concatenate(
-            ([True], codes[1:] != codes[:-1])))
-        bounds = np.append(seg, codes.size)
-        n = seg.size
-        return pd.DataFrame({
-            "term": [uniq_terms[c] for c in codes[seg]],
-            "shard": [int(pdf["shard"].iloc[0])] * n,
-            "bucket": [int(pdf["bucket"].iloc[0])] * n,
-            "df_part": (bounds[1:] - bounds[:-1]).tolist(),
-            "cf_part": (np.add.reduceat(tfs_all, seg).tolist()
-                        if codes.size else []),
-            "blocks": encode_blocks_bulk(
-                bounds, ids_all, tfs_all, dls_all, positions=pos_flat,
-                block_size=block_size),
-        })
+        return _sorted_cell_rows(
+            codes, uniq_terms, ids_all, tfs_all, dls_all, pos_flat,
+            int(pdf["shard"].iloc[0]), int(pdf["bucket"].iloc[0]),
+            block_size)
     return encode_group
+
+
+def _sorted_cell_rows(codes, terms, ids, tfs, dls, positions, shard: int,
+                      bucket: int, block_size: int) -> pd.DataFrame:
+    """The tail the cell encoder and the cell merger share: one cell's
+    postings, sorted by (term code, unsigned doc_id) with `positions` the
+    flat payload in that order, → one postings row per term, every block
+    encoded by one encode_blocks_bulk pass."""
+    import numpy as np
+    from ipfs_search_spark.functions.codec import encode_blocks_bulk
+    seg = np.flatnonzero(np.concatenate(([True], codes[1:] != codes[:-1])))
+    bounds = np.append(seg, codes.size)
+    n = seg.size
+    return pd.DataFrame({
+        "term": [terms[c] for c in codes[seg]],
+        "shard": [shard] * n,
+        "bucket": [bucket] * n,
+        "df_part": (bounds[1:] - bounds[:-1]).tolist(),
+        "cf_part": np.add.reduceat(tfs, seg).tolist() if codes.size else [],
+        "blocks": encode_blocks_bulk(bounds, ids, tfs, dls,
+                                     positions=positions,
+                                     block_size=block_size),
+    })
 
 
 def _stored_dl(docs: DataFrame) -> Column:
@@ -474,45 +486,48 @@ def build_fielded_index(spark: SparkSession, docs: DataFrame, io: TableIO,
 
 def merge_term_shards(postings: DataFrame,
                       block_size: int = BLOCK_SIZE) -> DataFrame:
-    """Compaction: k-way merge per-shard runs → one global docid-sorted
-    posting list per term (single-segment layout, FIXTURES.md §4). Second
-    groupBy level of the salted build (SURVEY.md §7 milestone 2)."""
-    return postings.groupBy("term").applyInPandas(
-        _make_run_merger(block_size, per_shard=False), POSTINGS_SCHEMA)
+    """Export: merge every term's per-shard runs into one global
+    docid-sorted posting list (shard = -1, the single-segment layout of
+    FIXTURES.md §4), one cell merger call per bucket."""
+    return postings.groupBy("bucket").applyInPandas(
+        _make_cell_merger(block_size, shard=-1), POSTINGS_SCHEMA)
 
 
-def _make_run_merger(block_size: int, per_shard: bool):
-    """Merger for one pandas group of posting rows (runs of the same term):
-    k-way merges the runs into one docid-sorted posting row. per_shard=True
-    groups by (term, shard) and PRESERVES the doc-sharded layout (segment
-    compaction); per_shard=False collapses across shards into shard=-1
-    (the single-segment export layout)."""
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def _make_cell_merger(block_size: int, shard: int | None = None):
+    """Merger for one cell of posting rows: every run of every term in it,
+    in ONE pandas call (compaction: a (bucket, shard) cell, keeping its
+    shard; shard=-1: a whole bucket collapsed across shards). The runs of
+    a term are disjoint doc sets, so one decode_blocks pass and one sort
+    by (term code, unsigned doc_id) merge them all; the rows then take the
+    encoder's own tail, so a merged cell is byte-identical to a rebuilt
+    one. A cell mixing positional and non-positional blocks raises: the
+    merge would drop positions the index claims to have."""
+    def merge_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
         from ipfs_search_spark.functions.codec import (
-            decode_block, decode_block_positions, encode_blocks,
+            _element_permutation, decode_blocks,
         )
         blks = [blk for blocks in pdf["blocks"] for blk in blocks]
-        runs = [decode_block(blk) for blk in blks]
-        ids, tfs, dls = (np.concatenate(x) for x in zip(*runs))
-        # the runs are disjoint doc sets concatenated unsorted: the merge IS
-        # encode_blocks' stable sort by unsigned doc_id, which permutes the
-        # flat positions payload with it
-        pos_flat = (np.concatenate([decode_block_positions(blk, r[1])
-                                    for blk, r in zip(blks, runs)])
-                    if all(blk["pos"] is not None for blk in blks) else None)
-        blocks = encode_blocks(ids, tfs, dls, positions=pos_flat,
-                               block_size=block_size)
-        return pd.DataFrame({
-            "term": [pdf["term"].iloc[0]],
-            "shard": [int(pdf["shard"].iloc[0]) if per_shard else -1],
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "df_part": [int(ids.size)],
-            "cf_part": [int(tfs.sum())],
-            "blocks": [blocks],
-        })
+        has_pos = [blk["pos"] is not None for blk in blks]
+        positional = all(has_pos)
+        if any(has_pos) and not positional:
+            raise ValueError(
+                "cell mixes positional and non-positional blocks: merging "
+                "it would drop positions")
+        ids, tfs, dls, pos = decode_blocks(blks, positions=positional)
+        row_codes, terms = pd.factorize(pdf["term"], sort=False)
+        # a row's df_part is its posting count: each decoded posting's term
+        codes = np.repeat(row_codes.astype(np.int64),
+                          pdf["df_part"].to_numpy(dtype=np.int64))
+        order = np.lexsort((ids.view(np.uint64), codes))
+        if pos is not None:
+            pos = pos[_element_permutation(tfs, order)]
+        return _sorted_cell_rows(
+            codes[order], terms, ids[order], tfs[order], dls[order], pos,
+            int(pdf["shard"].iloc[0]) if shard is None else shard,
+            int(pdf["bucket"].iloc[0]), block_size)
 
-    return merge_group
+    return merge_cell
 
 
 @dataclass(frozen=True)
@@ -627,10 +642,10 @@ def compact_segments(io: TableIO) -> dict:
     index_stats of open_index (the same view a Searcher reads), and the
     segment tables dropped — a subsequent Searcher reads base tables only.
 
-    Only (term, shard) cells that actually appear in a segment are
-    re-encoded; untouched base rows pass through unchanged — at web scale
-    segments are micro-batch-sized, so compaction cost tracks the NEW
-    data, not the index size.
+    Only the (term, shard) rows a segment touches are re-encoded, by one
+    cell merger call per (bucket, shard); untouched base rows pass through
+    unchanged — at web scale segments are micro-batch-sized, so compaction
+    cost tracks the NEW data, not the index size.
 
     Crash story (two-phase, resumable): phase 1 stages the merged
     postings/term_stats under staging names invisible to Searcher — a
@@ -657,15 +672,15 @@ def compact_segments(io: TableIO) -> dict:
     st = view.stats
 
     # phase 1 — stage merged postings: only segment-touched (term, shard)
-    # cells re-encode, at the BASE index's block size (a divergent merge
+    # rows re-encode, at the BASE index's block size (a divergent merge
     # block size would silently mix layouts while index_stats claims one)
     n_buckets = int(st["n_buckets"])
     block_size = int(st["block_size"])
     keys = view.segments.select("term", "shard").distinct()
     to_merge = view.base.join(keys, ["term", "shard"], "left_semi") \
         .unionByName(view.segments)
-    merged = to_merge.groupBy("term", "shard").applyInPandas(
-        _make_run_merger(block_size, per_shard=True), POSTINGS_SCHEMA)
+    merged = to_merge.groupBy("bucket", "shard").applyInPandas(
+        _make_cell_merger(block_size), POSTINGS_SCHEMA)
     write_postings(io, view.base.join(keys, ["term", "shard"], "left_anti")
                    .unionByName(merged), _STAGING_POSTINGS, n_buckets)
     io.write(view.term_stats.sortWithinPartitions("term"),

@@ -96,9 +96,9 @@ def incremental_index_microbatch(io, n_shards: int = 8, n_buckets: int = 64,
     writeStream.foreachBatch.
 
     `positions` must match the base index's positional flag: phrase queries
-    decode positions across the base∪segments union, so a positional base
-    needs positional segments (a mismatch raises a clear codec error at
-    query time, never a wrong result)."""
+    decode positions across the base∪segments union and compaction merges
+    the two, so a batch whose flag differs raises before anything is
+    written."""
     from ipfs_search_spark.operators.index_build import (
         append_segment, build_postings, canonical_documents, doc_stats_sums,
         read_index_stats,
@@ -111,14 +111,17 @@ def incremental_index_microbatch(io, n_shards: int = 8, n_buckets: int = 64,
         # segments MUST share the base index's layout parameters: the query
         # side routes per-doc rows (filter-allowed sets) by
         # pmod(xxhash64(doc_id), n_shards), which is only exact when every
-        # postings row — base or segment — used the same S
+        # postings row — base or segment — used the same S; and a posting
+        # list is positional in every block or in none
         if st and (int(st["n_shards"]) != int(n_shards)
-                   or int(st["n_buckets"]) != int(n_buckets)):
+                   or int(st["n_buckets"]) != int(n_buckets)
+                   or bool(st["positional"]) != bool(positions)):
             raise ValueError(
                 f"segment layout mismatch: base index has "
                 f"n_shards={st['n_shards']}, n_buckets="
-                f"{st['n_buckets']}; microbatch configured "
-                f"({n_shards}, {n_buckets})")
+                f"{st['n_buckets']}, positional={bool(st['positional'])}; "
+                f"microbatch configured ({n_shards}, {n_buckets}, "
+                f"positions={bool(positions)})")
         docs = canonical_documents(batch_df, extract=False)
         # new-item path (J2): only urls absent from the state enter the
         # segment — re-sightings of known docs are updates, not re-indexes

@@ -177,3 +177,58 @@ def test_encode_blocks_bulk_positional_bit_identical(n_terms, block_size,
                              block_size=block_size)
     for rb, gb in zip(ref, got):
         assert rb == gb
+
+
+@given(st.lists(st.integers(min_value=1, max_value=300), min_size=1,
+                max_size=12),
+       st.sampled_from([1, 4, 16, 128]),
+       st.booleans(),
+       st.integers(min_value=0, max_value=10_000))
+@settings(max_examples=60, deadline=None)
+def test_decode_blocks_equals_per_block_decode(term_sizes, block_size,
+                                               positions, seed):
+    """decode_blocks over the blocks of several terms in one call (ids
+    across the whole signed range, so unsigned order puts negatives last;
+    block_size 1 makes every block a 1-posting block) equals the
+    concatenated per-block decode_block / decode_block_positions output."""
+    from ipfs_search_spark.functions.codec import (
+        decode_block_positions, decode_blocks,
+    )
+    rng = np.random.default_rng(seed)
+    blocks = []
+    for n in term_sizes:
+        ids = np.unique(rng.integers(-2**63, 2**63 - 1, size=n,
+                                     dtype=np.int64))
+        ids = ids[np.argsort(ids.view(np.uint64))]
+        tfs = rng.integers(1, 6, size=ids.size, dtype=np.int64)
+        dls = rng.integers(1, 5000, size=ids.size, dtype=np.int64)
+        pos = (np.concatenate([np.sort(rng.choice(3000, size=t,
+                                                  replace=False))
+                               for t in tfs]).astype(np.int64)
+               if positions else None)
+        blocks += encode_blocks(ids, tfs, dls, positions=pos,
+                                block_size=block_size)
+    want = [decode_block(b) for b in blocks]
+    ids, tfs, dls, pos = decode_blocks(blocks, positions=positions)
+    for got, col in zip((ids, tfs, dls), zip(*want)):
+        assert got.dtype == np.int64
+        assert (got == np.concatenate(col)).all()
+    if positions:
+        assert (pos == np.concatenate(
+            [decode_block_positions(b, w[1])
+             for b, w in zip(blocks, want)])).all()
+    else:
+        assert pos is None
+
+
+def test_decode_blocks_edges():
+    """No blocks decodes to empty arrays; asking for positions of a
+    block written without them raises, as decode_block_positions does."""
+    from ipfs_search_spark.functions.codec import decode_blocks
+    ids, tfs, dls, pos = decode_blocks([])
+    assert ids.size == tfs.size == dls.size == 0 and pos is None
+    blocks = encode_blocks(np.array([-5, 7], dtype=np.int64),
+                           np.array([1, 2], dtype=np.int64),
+                           np.array([3, 4], dtype=np.int64))
+    with pytest.raises(ValueError, match="no positional payload"):
+        decode_blocks(blocks, positions=True)
