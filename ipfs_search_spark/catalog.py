@@ -321,10 +321,11 @@ class TableIO:
         multi-file batches: a crash mid-loop leaves a prefix of the batch
         appended and the rest in a .staging- dir (excluded from tables()
         and snapshots). The engine tolerates this by ORDERING its append
-        chains so a torn tail is detectable and harmless (segment stats
-        land before their segment and segments carry their batch_id —
-        see ingest_stream/checkpoints); exactly-once at this layer is
-        Iceberg's job, not the fallback's."""
+        chains so a torn tail is detectable and harmless (a segment's
+        one-file commit row lands last, after its postings, and segments
+        carry their batch_id — see index_build.append_segment and
+        checkpoints); exactly-once at this layer is Iceberg's job, not
+        the fallback's."""
         self._check_writable(name)
         if self.iceberg:
             self.write(df, name, mode="append")

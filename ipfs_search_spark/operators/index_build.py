@@ -22,10 +22,13 @@ Why doc-sharding instead of one global posting list per term:
 
 Every read and write of the index tables is in this module: one reader
 (open_index: base ∪ micro-batch segments, shared by Searcher and
-compact_segments) and one set of writers. compact_segments folds segments
-back by a per-(bucket, shard) cell merge; merge_term_shards runs the same
-cell merger per bucket to make one list per term (shard = -1, FIXTURES.md
-§4) for export.
+compact_segments) and one set of writers. A micro-batch segment is its
+rows in `posting_segments` plus one `segment_doc_stats` row, its commit
+point, written last (append_segment); readers see committed segments only
+and derive their df/cf from the postings' per-shard parts. compact_segments
+folds segments back by a per-(bucket, shard) cell merge; merge_term_shards
+runs the same cell merger per bucket to make one list per term (shard =
+-1, FIXTURES.md §4) for export.
 """
 
 from __future__ import annotations
@@ -325,9 +328,12 @@ def write_postings(io: TableIO, postings: DataFrame, name: str,
     the driver. sortWithinPartitions(term): parquet row-group min/max stats
     on the sorted term column let the query-time `term IN (...)` scan skip
     row groups inside a bucket — at web scale a bucket holds millions of
-    terms and the probe reads only the groups containing query terms."""
+    terms and the probe reads only the groups containing query terms. The
+    sort leads with the partition column: Spark's planned write requires
+    rows ordered by `bucket` and would otherwise add a sort on it alone,
+    replacing the term order."""
     io.write(postings.repartition(n_buckets, "bucket")
-             .sortWithinPartitions("term", "shard"),
+             .sortWithinPartitions("bucket", "term", "shard"),
              name, partition_by=["bucket"])
 
 
@@ -352,24 +358,23 @@ def _write_base_tables(io: TableIO, postings: DataFrame, n_buckets: int,
 
 def append_segment(io: TableIO, postings: DataFrame, segment_id: int,
                    n_docs: int, total_dl: int, n_shards: int) -> None:
-    """Append one micro-batch's postings as a segment, with its own stats
-    rows: `segment_term_stats` (df/cf per term) and `segment_doc_stats`
+    """Append one micro-batch's postings as a segment, then its commit row.
+    `posting_segments` lands first; the one-row `segment_doc_stats` record
     (doc count, exact dl sum, and n_shards, which an index of segments
-    alone records nowhere else). The stats land BEFORE posting_segments
-    (the three appends are not atomic together): a crash mid-batch leaves
-    a stats-only orphan, never a segment whose df/n_docs open_index would
-    undercount. The orphan's docs are in `documents` without postings, and
-    a retry of the batch skips them as known urls."""
-    io.append_atomic(term_stats_of(postings)
-                     .withColumn("segment_id", F.lit(segment_id)),
-                     "segment_term_stats")
+    alone records nowhere else) lands last, as a single file, so one
+    rename commits the segment on the parquet fallback. open_index reads
+    only committed segments and derives their df/cf from the postings, so
+    a crash mid-batch leaves uncommitted rows no reader counts. What it
+    does not undo: the batch's docs are in `documents` without postings,
+    and a retry of the batch skips them as known urls."""
+    io.append_atomic(postings.withColumn("segment_id", F.lit(segment_id)),
+                     "posting_segments")
     io.append_atomic(
         postings.sparkSession.createDataFrame(
             [(int(segment_id), n_docs, total_dl, int(n_shards))],
-            "segment_id long, n_docs long, total_dl long, n_shards int"),
+            "segment_id long, n_docs long, total_dl long, n_shards int")
+        .coalesce(1),
         "segment_doc_stats")
-    io.append_atomic(postings.withColumn("segment_id", F.lit(segment_id)),
-                     "posting_segments")
 
 
 def build_index(spark: SparkSession, pages: DataFrame, io: TableIO,
@@ -532,10 +537,10 @@ def _make_cell_merger(block_size: int, shard: int | None = None):
 
 @dataclass(frozen=True)
 class IndexView:
-    """One read of an index: the base tables plus every appended posting
+    """One read of an index: the base tables plus every committed posting
     segment, with the statistics merged by integer addition."""
     base: DataFrame | None      # base postings (None: segments only)
-    segments: DataFrame | None  # segment postings, segment_id dropped
+    segments: DataFrame | None  # committed segment postings, no segment_id
     postings: DataFrame         # base ∪ segments
     term_stats: DataFrame       # merged term → (bucket, df, cf)
     n_docs: int
@@ -562,15 +567,17 @@ def read_index_stats(io: TableIO) -> dict:
 
 
 def open_index(io: TableIO) -> IndexView:
-    """Open base∪segments, reading each index table once. Segments hold
-    only NEW docs (anti-joined at append), so the global statistics are
-    exact integer sums of the small base and per-segment stats tables —
-    bit-identical to a from-scratch build, with no postings scan.
+    """Open base∪segments, reading each index table once. A segment is
+    committed by its `segment_doc_stats` row; posting_segments is read
+    filtered to the committed ids, so rows of a batch torn before its
+    commit row are never read. Segments hold only NEW docs (anti-joined at
+    append), so the global statistics are exact integer sums: n_docs and
+    the dl sum over the base and commit rows, df/cf over the base
+    term_stats and the segments' per-shard df_part/cf_part columns (never
+    their blocks) — bit-identical to a from-scratch build.
 
-    Raises ValueError on an index_stats row without total_dl, on a segment
-    without its per-segment stats rows (a legacy append, or a batch torn
-    after its posting_segments append, would be silently undercounted), and
-    on an index without one n_shards (the query side's doc→shard route)."""
+    Raises ValueError on an index_stats row without total_dl and on an
+    index without one n_shards (the query side's doc→shard route)."""
     stats = read_index_stats(io)
     if stats and stats.get("total_dl") is None:
         raise ValueError(
@@ -582,30 +589,20 @@ def open_index(io: TableIO) -> IndexView:
     base = io.read("postings") if stats else None
     term_stats = io.read("term_stats") if stats else None
     postings, segments, seg_ids = base, None, frozenset()
-    if io.exists("posting_segments"):
-        def ids(df):
-            return frozenset(r[0] for r in df.select("segment_id")
-                             .distinct().collect())
-        seg = io.read("posting_segments")
-        seg_ts = (io.read("segment_term_stats")
-                  if io.exists("segment_term_stats") else None)
-        seg_docs = ([r.asDict() for r in io.read("segment_doc_stats")
-                     .collect()] if io.exists("segment_doc_stats") else [])
-        seg_ids = ids(seg)
-        if seg_ts is None or not (
-                seg_ids <= ids(seg_ts)
-                and seg_ids <= {r["segment_id"] for r in seg_docs}):
-            raise ValueError(
-                "a postings segment lacks its per-segment stats rows (legacy "
-                "append?) — merged statistics would silently undercount; "
-                "rebuild instead")
-        segments = seg.drop("segment_id")
-        seg_ts = seg_ts.drop("segment_id")
+    seg_docs = ([r.asDict() for r in io.read("segment_doc_stats").collect()]
+                if io.exists("segment_doc_stats") else [])
+    if seg_docs:
+        seg_ids = frozenset(int(r["segment_id"]) for r in seg_docs)
+        segments = io.read("posting_segments") \
+            .filter(F.col("segment_id").isin(sorted(seg_ids))) \
+            .drop("segment_id")
         postings = segments if base is None else base.unionByName(segments)
-        term_stats = (seg_ts if base is None
-                      else term_stats.unionByName(seg_ts)).groupBy("term") \
-            .agg(F.first("bucket").alias("bucket"), F.sum("df").alias("df"),
-                 F.sum("cf").alias("cf"))
+        parts = segments.select("term", "bucket", "df_part", "cf_part")
+        if base is not None:
+            parts = term_stats.select(
+                "term", "bucket", F.col("df").alias("df_part"),
+                F.col("cf").alias("cf_part")).unionByName(parts)
+        term_stats = term_stats_of(parts)
         n_docs += sum(int(r["n_docs"]) for r in seg_docs)
         total_dl += sum(int(r["total_dl"]) for r in seg_docs)
         if not stats:
@@ -658,11 +655,13 @@ def compact_segments(io: TableIO) -> dict:
     Like Lucene's merges, compaction must not run concurrently with
     ingest appends or Searcher construction.
 
-    Raises open_index's ValueErrors (an uncovered segment, a base without
-    total_dl) rather than silently undercounting df/n_docs."""
+    Folds the segments open_index sees: committed ones only. Rows of a
+    batch torn before its commit row are never read, and the install's
+    drop of posting_segments removes them. Raises open_index's ValueErrors
+    (e.g. a base without total_dl) rather than undercounting df/n_docs."""
     if io.exists(COMPACTION_MANIFEST):
         return _install_compaction(io)
-    if not io.exists("posting_segments"):
+    if not io.exists("segment_doc_stats"):
         return {"segments_folded": 0}
     if not io.exists("index_stats"):
         raise ValueError(
@@ -713,8 +712,7 @@ def _install_compaction(io: TableIO) -> dict:
         else:
             io._swap_dir(io._path(staging), io._path(live))
     io.write_rows("index_stats", [tuple(m)[:-1]], INDEX_STATS_DDL)
-    for t in ("posting_segments", "segment_term_stats",
-              "segment_doc_stats"):
+    for t in ("posting_segments", "segment_doc_stats"):
         io.drop(t)
     io.drop(COMPACTION_MANIFEST)
     return {"segments_folded": int(m["segments_folded"]),

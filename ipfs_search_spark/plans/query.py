@@ -979,9 +979,8 @@ class Searcher:
         The index opens through index_build.open_index: the base tables
         plus any micro-batch posting segments (streaming/ingest_stream.py),
         with exact summed statistics, so scores match a from-scratch
-        rebuild bit for bit. Raises its ValueErrors (a segment without its
-        per-segment stats rows, an index that records no n_shards or no
-        total_dl)."""
+        rebuild bit for bit. Raises its ValueErrors (an index that records
+        no n_shards or no total_dl)."""
         self.spark, self.io = spark, io
         self.fuzzy_transpositions = bool(fuzzy_transpositions)
         self.fuzzy_prefix_length = int(fuzzy_prefix_length)

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ipfs_search_spark import DEDUP_WINDOW
+from ipfs_search_spark import BLOCK_SIZE, DEDUP_WINDOW
 
 URL_VALID_RE = r"^https?://[^\s]+$"
 
@@ -90,10 +90,10 @@ def incremental_index_microbatch(io, n_shards: int = 8, n_buckets: int = 64,
                                  positions: bool = False):
     """foreachBatch hook: each micro-batch of new pages is appended to the
     documents table and its postings are built and appended as a new
-    segment with its own stats rows (Lucene-style segment-per-flush;
-    index_build.append_segment). compact_segments folds the segments back
-    into the base tables. Returns a function suitable for
-    writeStream.foreachBatch.
+    segment, encoded at the base's block size and committed by its stats
+    row (Lucene-style segment-per-flush; index_build.append_segment).
+    compact_segments folds the segments back into the base tables. Returns
+    a function suitable for writeStream.foreachBatch.
 
     `positions` must match the base index's positional flag: phrase queries
     decode positions across the base∪segments union and compaction merges
@@ -136,12 +136,12 @@ def incremental_index_microbatch(io, n_shards: int = 8, n_buckets: int = 64,
         if n_docs == 0:
             return
         io.append_atomic(docs, "documents")
-        # materialize the (small) micro-batch postings once so the segment
-        # append and its stats aggregation share one tokenize+encode pass
+        # the base's block size: block-max bounds stay as tight as
+        # index_stats says before compaction re-encodes the segment
+        block_size = int(st["block_size"]) if st else BLOCK_SIZE
         postings = build_postings(docs, n_shards=n_shards,
-                                  n_buckets=n_buckets,
-                                  positions=positions).localCheckpoint(
-                                      eager=True)
+                                  n_buckets=n_buckets, block_size=block_size,
+                                  positions=positions)
         append_segment(io, postings, batch_id, n_docs, total_dl, n_shards)
 
     return handle

@@ -49,12 +49,23 @@ def test_segment_union_matches_rebuild(spark):
     assert inc == full
 
 
+def _scan_read_schemas(df, table):
+    """ReadSchema of every parquet scan of `table` in df's formatted plan."""
+    import re
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    scan = (r"Location: [^\n]*/" + table +
+            r"\b[^\n]*\n(?:.*\n)*?ReadSchema: ([^\n]*)")
+    return plan, [m.group(1) for m in re.finditer(scan, plan)]
+
+
 def test_segmented_searcher_init_reads_no_postings(spark):
-    """Searcher init on a segmented index must derive global stats from the
-    small base/segment stats tables — never by re-aggregating the postings
-    union (a full postings scan per session at web scale). Plan-asserted:
-    the term_stats plan reads term_stats + segment_term_stats only, and the
-    derived stats equal a from-scratch aggregation."""
+    """Searcher init on a segmented index derives global stats from the base
+    stats tables and the segments' per-shard df/cf parts — never from the
+    base postings (a full postings scan per session at web scale) and never
+    from a segment's encoded blocks. Plan-asserted: no base postings scan,
+    and the posting_segments scan reads no `blocks` column; the derived
+    stats equal a from-scratch aggregation."""
     pages = pages_df(spark, n=300, seed=44).cache()
     base = pages.limit(200).cache()
     rest = pages.subtract(base)
@@ -65,12 +76,13 @@ def test_segmented_searcher_init_reads_no_postings(spark):
     handle(rest, batch_id=1)
 
     sx = Searcher(spark, io)
-    plan = sx.term_stats._sc._jvm.PythonSQLUtils.explainString(
-        sx.term_stats._jdf.queryExecution(), "formatted")
+    plan, seg_schemas = _scan_read_schemas(sx.term_stats,
+                                           "posting_segments")
     # "/postings" never matches ".../posting_segments" (the char after
     # "posting" there is "_"), so this asserts no postings-table scan
     assert "/postings" not in plan
-    assert "segment_term_stats" in plan
+    assert seg_schemas and all("blocks" not in rs for rs in seg_schemas), \
+        seg_schemas
     # stats parity vs the legacy full-aggregation path
     legacy = {r["term"]: (r["df"], r["cf"])
               for r in sx.postings.groupBy("term")
@@ -83,42 +95,60 @@ def test_segmented_searcher_init_reads_no_postings(spark):
     assert (sx.n_docs, sx.avgdl) == (n_exact, total_exact / n_exact)
 
 
-def test_legacy_segment_without_stats_raises(spark):
-    """A postings segment with NO per-segment stats rows (written by code
-    predating segment stats, or a batch torn after the posting_segments
-    append) would make summed df/n_docs silently miss it: Searcher init
-    raises, with the same message as compact_segments."""
-    import shutil
-
+def test_torn_batch_before_commit_row_is_invisible(spark, monkeypatch):
+    """A micro-batch torn at its last append (the segment_doc_stats commit
+    row) leaves uncommitted posting_segments rows that no reader counts:
+    n_docs, the merged term_stats and every result equal those of the
+    index holding only the committed segment, compaction folds exactly
+    that segment, and an index whose only segment rows are uncommitted
+    has nothing to fold."""
     from ipfs_search_spark.operators.index_build import compact_segments
     all_pages = pages_df(spark, n=300, seed=77).cache()
     base = all_pages.limit(200).cache()
     rest = all_pages.subtract(base).cache()
+    b1 = rest.limit(50).cache()
+    b2 = rest.subtract(b1).cache()
+    real_append = TableIO.append_atomic
 
-    io_inc = TableIO(spark, tempfile.mkdtemp(prefix="isx-legacyseg-"))
-    build_index(spark, base, io_inc, n_shards=4, n_buckets=16)
-    handle = incremental_index_microbatch(io_inc, n_shards=4, n_buckets=16)
-    handle(rest, batch_id=1)
+    def torn(self, df, name):
+        if name == "segment_doc_stats":
+            raise RuntimeError("torn before the commit row")
+        real_append(self, df, name)
 
-    def assert_both_raise():
-        with pytest.raises(ValueError) as compact_err:
-            compact_segments(io_inc)
-        with pytest.raises(ValueError) as searcher_err:
-            Searcher(spark, io_inc)
-        assert "lacks its per-segment stats" in str(searcher_err.value)
-        assert str(searcher_err.value) == str(compact_err.value)
+    def tear(handle, batch, batch_id):
+        with monkeypatch.context() as m:
+            m.setattr(TableIO, "append_atomic", torn)
+            with pytest.raises(RuntimeError, match="commit row"):
+                handle(batch, batch_id=batch_id)
 
-    # the legacy layout: no per-segment stats table at all
-    shutil.rmtree(io_inc._path("segment_term_stats"))
-    assert_both_raise()
-    # partial coverage (stats tables exist but miss a segment): re-add
-    # segment stats for a NEW batch only, leaving batch 1 uncovered
-    more = (all_pages.limit(40)
-            .withColumn("url", F.concat(F.col("url"), F.lit("?v2")))
-            .cache())
-    handle(more, batch_id=2)
-    assert io_inc.exists("segment_term_stats")
-    assert_both_raise()
+    io = TableIO(spark, tempfile.mkdtemp(prefix="isx-torn-"))
+    build_index(spark, base, io, n_shards=4, n_buckets=16)
+    handle = incremental_index_microbatch(io, n_shards=4, n_buckets=16)
+    handle(b1, batch_id=1)
+    tear(handle, b2, 2)
+    assert io.exists("posting_segments")
+
+    io_ref = TableIO(spark, tempfile.mkdtemp(prefix="isx-torn-ref-"))
+    build_index(spark, base, io_ref, n_shards=4, n_buckets=16)
+    incremental_index_microbatch(io_ref, n_shards=4, n_buckets=16)(
+        b1, batch_id=1)
+
+    def view(sx):
+        return (sx.n_docs, sorted(tuple(r) for r in sx.term_stats.collect()),
+                _results(sx))
+
+    want = view(Searcher(spark, io_ref))
+    assert view(Searcher(spark, io)) == want
+    assert compact_segments(io)["segments_folded"] == 1
+    assert view(Searcher(spark, io)) == want
+
+    # segment rows without any commit row: nothing to fold
+    io_seg = TableIO(spark, tempfile.mkdtemp(prefix="isx-torn-only-"))
+    build_index(spark, base, io_seg, n_shards=4, n_buckets=16)
+    tear(incremental_index_microbatch(io_seg, n_shards=4, n_buckets=16),
+         b1, 1)
+    assert io_seg.exists("posting_segments")
+    assert compact_segments(io_seg)["segments_folded"] == 0
 
 
 def test_segments_only_index_matches_rebuild(spark):
@@ -185,8 +215,8 @@ def test_compact_segments_matches_rebuild(spark):
 
     out = compact_segments(io)
     assert out["segments_folded"] == 2
-    for t in ("posting_segments", "segment_term_stats",
-              "segment_doc_stats", "_compaction_manifest",
+    for t in ("posting_segments", "segment_doc_stats",
+              "_compaction_manifest",
               "_compacting_postings", "_compacting_term_stats"):
         assert not io.exists(t), t
 
@@ -262,25 +292,6 @@ def test_compact_segments_positional(spark):
     assert sx.positional
     assert _results(sx, queries=phrase_qs) == before
     assert any(before.values())
-
-
-def test_compact_segments_refuses_uncovered_segment(spark):
-    """A postings segment lacking its per-segment stats rows must make
-    compaction raise (merged stats would silently undercount) — same gate
-    as the incremental Searcher, but hard instead of a fallback."""
-    from ipfs_search_spark.operators.index_build import compact_segments
-    all_pages = pages_df(spark, n=200, seed=94).cache()
-    base = all_pages.limit(150).cache()
-    rest = all_pages.subtract(base).cache()
-
-    io = TableIO(spark, tempfile.mkdtemp(prefix="isx-compactlegacy-"))
-    build_index(spark, base, io, n_shards=4, n_buckets=16)
-    handle = incremental_index_microbatch(io, n_shards=4, n_buckets=16)
-    handle(rest, batch_id=1)
-    import shutil
-    shutil.rmtree(io._path("segment_doc_stats"))
-    with pytest.raises(ValueError, match="per-segment stats"):
-        compact_segments(io)
 
 
 def test_resighted_urls_not_reindexed(spark):
