@@ -99,9 +99,8 @@ def test_torn_batch_before_commit_row_is_invisible(spark, monkeypatch):
     """A micro-batch torn at its last append (the segment_doc_stats commit
     row) leaves uncommitted posting_segments rows that no reader counts:
     n_docs, the merged term_stats and every result equal those of the
-    index holding only the committed segment, compaction folds exactly
-    that segment, and an index whose only segment rows are uncommitted
-    has nothing to fold."""
+    index holding only the committed segment, and compaction folds
+    exactly that segment."""
     from ipfs_search_spark.operators.index_build import compact_segments
     all_pages = pages_df(spark, n=300, seed=77).cache()
     base = all_pages.limit(200).cache()
@@ -133,22 +132,46 @@ def test_torn_batch_before_commit_row_is_invisible(spark, monkeypatch):
     incremental_index_microbatch(io_ref, n_shards=4, n_buckets=16)(
         b1, batch_id=1)
 
-    def view(sx):
-        return (sx.n_docs, sorted(tuple(r) for r in sx.term_stats.collect()),
-                _results(sx))
-
-    want = view(Searcher(spark, io_ref))
-    assert view(Searcher(spark, io)) == want
+    want = _index_view(Searcher(spark, io_ref))
+    assert _index_view(Searcher(spark, io)) == want
     assert compact_segments(io)["segments_folded"] == 1
-    assert view(Searcher(spark, io)) == want
+    assert _index_view(Searcher(spark, io)) == want
 
-    # segment rows without any commit row: nothing to fold
-    io_seg = TableIO(spark, tempfile.mkdtemp(prefix="isx-torn-only-"))
-    build_index(spark, base, io_seg, n_shards=4, n_buckets=16)
-    tear(incremental_index_microbatch(io_seg, n_shards=4, n_buckets=16),
-         b1, 1)
+
+def _index_view(sx):
+    return (sx.n_docs, sorted(tuple(r) for r in sx.term_stats.collect()),
+            _results(sx))
+
+
+def test_legacy_segment_without_stats_raises(spark):
+    """A postings segment with no segment_doc_stats row (written by code
+    predating the commit row, or a batch torn before it) is never counted:
+    on a base index the Searcher equals the base-only index, and with no
+    base Searcher init raises instead of serving postings that no n_docs
+    covers."""
+    all_pages = pages_df(spark, n=300, seed=77).cache()
+    base = all_pages.limit(200).cache()
+    rest = all_pages.subtract(base).cache()
+
+    io_inc = TableIO(spark, tempfile.mkdtemp(prefix="isx-legacyseg-"))
+    build_index(spark, base, io_inc, n_shards=4, n_buckets=16)
+    incremental_index_microbatch(io_inc, n_shards=4, n_buckets=16)(
+        rest, batch_id=1)
+    io_inc.drop("segment_doc_stats")
+    assert io_inc.exists("posting_segments")
+
+    io_base = TableIO(spark, tempfile.mkdtemp(prefix="isx-legacyseg-base-"))
+    build_index(spark, base, io_base, n_shards=4, n_buckets=16)
+    assert _index_view(Searcher(spark, io_inc)) == \
+        _index_view(Searcher(spark, io_base))
+
+    io_seg = TableIO(spark, tempfile.mkdtemp(prefix="isx-legacyseg-only-"))
+    incremental_index_microbatch(io_seg, n_shards=4, n_buckets=16)(
+        rest, batch_id=1)
+    io_seg.drop("segment_doc_stats")
     assert io_seg.exists("posting_segments")
-    assert compact_segments(io_seg)["segments_folded"] == 0
+    with pytest.raises(ValueError, match="no index here"):
+        Searcher(spark, io_seg)
 
 
 def test_segments_only_index_matches_rebuild(spark):
@@ -292,6 +315,27 @@ def test_compact_segments_positional(spark):
     assert sx.positional
     assert _results(sx, queries=phrase_qs) == before
     assert any(before.values())
+
+
+def test_compact_segments_refuses_uncovered_segment(spark):
+    """A postings segment without its segment_doc_stats commit row is not
+    folded (its df/n_docs would be counted without a record of them):
+    compaction folds nothing and leaves the base tables as they were."""
+    from ipfs_search_spark.operators.index_build import compact_segments
+    all_pages = pages_df(spark, n=200, seed=94).cache()
+    base = all_pages.limit(150).cache()
+    rest = all_pages.subtract(base).cache()
+
+    io = TableIO(spark, tempfile.mkdtemp(prefix="isx-compactlegacy-"))
+    build_index(spark, base, io, n_shards=4, n_buckets=16)
+    incremental_index_microbatch(io, n_shards=4, n_buckets=16)(
+        rest, batch_id=1)
+    io.drop("segment_doc_stats")
+    before = _index_view(Searcher(spark, io))
+    stats = io.read("index_stats").collect()
+    assert compact_segments(io) == {"segments_folded": 0}
+    assert io.read("index_stats").collect() == stats
+    assert _index_view(Searcher(spark, io)) == before
 
 
 def test_resighted_urls_not_reindexed(spark):
