@@ -87,23 +87,15 @@ def varbyte_decode(buf: bytes, n: int | None = None) -> np.ndarray:
     return vals
 
 
-def tfnorm(tf: np.ndarray, dl: np.ndarray, avgdl: float,
-           k1: float = BM25_K1, b: float = BM25_B) -> np.ndarray:
+def tfnorm(tf, dl, avgdl: float,
+           k1: float = BM25_K1, b: float = BM25_B):
     """BM25 tf normalization, float64, same op order as the oracle
-    (oracle.py): tf / (tf + k1*(1 - b + b*dl/avgdl))."""
-    tf64 = tf.astype(np.float64)
-    denom = k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl)
-    return tf64 / (tf64 + denom)
-
-
-def block_ub(max_tf, min_dl, avgdl: float,
-             k1: float = BM25_K1, b: float = BM25_B):
-    """Upper bound of tfnorm over a block given its (max_tf, min_dl) — valid
-    because tfnorm is monotone ↑ in tf and ↓ in dl. Works elementwise on
-    numpy arrays or python scalars."""
-    import numpy as _np
-    tf64 = _np.asarray(max_tf, dtype=_np.float64)
-    denom = k1 * (1.0 - b + b * _np.asarray(min_dl, dtype=_np.float64) / avgdl)
+    (oracle.py): tf / (tf + k1*(1 - b + b*dl/avgdl)). Elementwise on numpy
+    arrays or python scalars. tfnorm is increasing in tf and decreasing in
+    dl, so tfnorm(max_tf, min_dl, avgdl) is a block's upper bound (block-max)
+    — the same float expression as its postings' scores."""
+    tf64 = np.asarray(tf, dtype=np.float64)
+    denom = k1 * (1.0 - b + b * np.asarray(dl, dtype=np.float64) / avgdl)
     return tf64 / (tf64 + denom)
 
 
@@ -292,10 +284,16 @@ def decode_block_positions(block, tfs: np.ndarray) -> np.ndarray:
     """Positional payload of a block (requires its decoded tfs) → flat int64
     positions, per-posting lengths = tfs. Raises if the block was built
     without positions (non-positional index)."""
-    if block["pos"] is None:
+    return decode_blocks_positions([block], tfs)
+
+
+def decode_blocks_positions(blocks, tfs: np.ndarray) -> np.ndarray:
+    """decode_block_positions over many blocks in one varbyte pass: tfs are
+    the blocks' decoded tfs, concatenated in block order."""
+    if any(b["pos"] is None for b in blocks):
         raise ValueError("block has no positional payload "
                          "(index built with positions=False)")
-    return decode_positions(bytes(block["pos"]), tfs)
+    return decode_positions(b"".join(b["pos"] for b in blocks), tfs)
 
 
 def decode_blocks(blocks, positions: bool = False):
@@ -327,12 +325,7 @@ def decode_blocks(blocks, positions: bool = False):
     ids = (cs - np.repeat(before, ns)).view(np.int64)
     tfs = field("tfs").astype(np.int64)
     dls = field("dls").astype(np.int64)
-    pos = None
-    if positions:
-        if any(b["pos"] is None for b in blocks):
-            raise ValueError("block has no positional payload "
-                             "(index built with positions=False)")
-        pos = decode_positions(b"".join(b["pos"] for b in blocks), tfs)
+    pos = decode_blocks_positions(blocks, tfs) if positions else None
     return ids, tfs, dls, pos
 
 

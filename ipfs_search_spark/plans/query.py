@@ -11,7 +11,8 @@ Plan shape (SURVEY.md §3.3 Spark restatement):
                   pruning, no full scan; every term of the batch, read once
   groupBy(shard).applyInPandas(score)  ← ONE Python call per shard scores
        the whole batch; the specs ride in the scorer closure (no query-term
-       join). Each posting block ships and decodes once and is shared by
+       join). Each posting block ships once; ONE vectorized decode pass
+       per call decodes every block, and each row's slice is shared by
        every query that reads it; per query: numpy BM25, block-max pruning,
        per-shard top-k (docs are disjoint across shards so the per-shard
        top-k merge is EXACT — same as Lucene's 20-shard search).
@@ -26,11 +27,15 @@ stable argsort + np.add.reduceat — the identical operation order to
 oracle.py, so scores are bit-comparable (SURVEY.md §7 hard part 2).
 
 Block-max pruning (sound, never changes results — test-asserted):
-  θ = k-th best single-term score of the highest-idf term within the shard
-  (a valid lower bound on the shard's k-th best total). A block B of term t
-  is skipped iff idf_t·ub(B) + Σ_{t'≠t} idf_{t'}·ub(t') < θ, where
+  θ = k-th best single-term score of the highest-bound term h within the
+  shard (a valid lower bound on the shard's k-th best total). A block B of
+  term t is not scored iff no surviving doc of h lies in B's doc range and
+  idf_t·ub(B) + Σ_{t'≠t,h} idf_{t'}·ub(t') < θ, where
   ub = tfnorm(max_tf, min_dl, avgdl) is the avgdl-at-query-time block bound:
-  every doc in B then has total score < θ and cannot reach the top-k.
+  every doc in B then has total score < θ and cannot reach the top-k. (A
+  bound that counts h never falls below θ, so the blocks holding h's docs
+  are always scored.) Pruning skips scoring, not decoding: the shard call
+  decodes every block it receives in one pass.
 
 Phrase queries (positional index, the reference's `term_vector:
 with_positions_offsets` — /root/reference/docs/indices/files.json:93):
@@ -86,7 +91,7 @@ from pyspark.sql.types import (
 
 from ipfs_search_spark.catalog import TableIO
 from ipfs_search_spark.functions.codec import (
-    block_ub, decode_block, decode_block_positions, tfnorm,
+    decode_blocks, decode_blocks_positions, tfnorm,
 )
 from ipfs_search_spark.operators.index_build import open_index, shard_of
 from ipfs_search_spark.plans.parser import (
@@ -219,8 +224,6 @@ def _match_phrase(pos_data: dict, phrase: list, slop: int = 0):
     versa. Phrases with REPEATED terms additionally verify that distinct
     token positions can be assigned (tiny per-doc bipartite matching —
     distinct terms can never collide since a position holds one token)."""
-    import numpy as np
-
     empty = np.empty(0, dtype=np.int64)
     arrs = []
     for t in phrase:
@@ -234,7 +237,7 @@ def _match_phrase(pos_data: dict, phrase: list, slop: int = 0):
     # accepts arbitrary int slop; semantics are identical under the clamp.
     s = np.int64(min(int(slop), 1 << 30))
     if s > 0:
-        return _match_phrase_sloppy(np, all_docs, arrs, phrase, int(s))
+        return _match_phrase_sloppy(all_docs, arrs, phrase, int(s))
     keys = []
     for el_ids, el_pos in arrs:
         dense = np.searchsorted(all_docs, el_ids).astype(np.int64)
@@ -261,7 +264,7 @@ def _match_phrase(pos_data: dict, phrase: list, slop: int = 0):
     return np.unique(all_docs[start >> np.int64(32)])
 
 
-def _match_phrase_sloppy(np, all_docs, arrs, phrase: list, slop: int):
+def _match_phrase_sloppy(all_docs, arrs, phrase: list, slop: int):
     """slop>0 body of _match_phrase (see its docstring for semantics)."""
     m = len(phrase)
     off = np.int64(slop + m)  # adjusted >= slop+1: windows stay in-doc
@@ -289,14 +292,14 @@ def _match_phrase_sloppy(np, all_docs, arrs, phrase: list, slop: int):
     # exists per candidate doc (Hall via augmenting paths, sizes ~m).
     ok_docs = [d for d in hit.tolist()
                if _sloppy_repeats_doc_ok(
-                   np, [arr[1][arr[0] == all_docs[d]] for arr in arrs],
+                   [arr[1][arr[0] == all_docs[d]] for arr in arrs],
                    slop)]
     if not ok_docs:
         return np.empty(0, dtype=np.int64)
     return np.unique(all_docs[np.asarray(ok_docs, dtype=np.int64)])
 
 
-def _sloppy_repeats_doc_ok(np, pos_by_leaf: list, slop: int) -> bool:
+def _sloppy_repeats_doc_ok(pos_by_leaf: list, slop: int) -> bool:
     """One doc, repeated-term phrase: does a distinct-position selection
     with adjusted range <= slop exist? Scans maximal windows of the merged
     adjusted positions; each window that contains every leaf is checked
@@ -440,68 +443,72 @@ class QuerySpec:
 
 
 class _ShardPostings:
-    """One shard's postings rows for a query batch. Each (row, block) is
-    decoded at most once — positions likewise, tf-normalisations once per
-    avgdl — and shared by every query of the batch that reads it; blocks
-    no query reads are never decoded. The caches live for one call, so its
-    peak memory is the decoded size of the blocks the batch reads in this
-    shard (32 bytes per posting, plus positions for phrase terms)."""
+    """One shard's postings rows for a query batch, decoded when built: ONE
+    codec.decode_blocks pass over every block the call received, and the
+    block metadata into arrays, so each row is a slice shared by every
+    query of the batch. tf-normalisations (postings and block-max bounds)
+    are computed once per avgdl, positions once per row and only for the
+    rows a phrase reads. Block-max pruning therefore skips scoring, not
+    decoding. Peak memory of one call: 24 bytes per shipped posting, 8 more
+    per distinct avgdl, plus 16 bytes per term occurrence of the
+    phrase-term rows."""
 
     def __init__(self, pdf: pd.DataFrame):
         self.blocks = [list(b) for b in pdf["blocks"]]
         self.rows_of: dict = {}
         for i, t in enumerate(pdf["term"]):
             self.rows_of.setdefault(t, []).append(i)
-        self._dec: dict = {}
-        self._pos: dict = {}
+        flat = [b for blks in self.blocks for b in blks]
+
+        def meta(name):
+            return np.fromiter((b[name] for b in flat), np.int64, len(flat))
+
+        self.ids, self.tfs, self.dls, _ = decode_blocks(flat)
+        self.n, self.max_tf, self.min_dl = (meta("n"), meta("max_tf"),
+                                            meta("min_dl"))
+        self.first_u = meta("first_doc_id").view(np.uint64)
+        # row i holds blocks [row_b[i], row_b[i+1]); block j holds
+        # postings [blk_p[j], blk_p[j+1])
+        self.row_b = np.concatenate(([0], np.cumsum(
+            [len(b) for b in self.blocks], dtype=np.int64)))
+        self.blk_p = np.concatenate(([0], np.cumsum(self.n)))
         self._norm: dict = {}
-        self._ub: dict = {}
+        self._pos: dict = {}
 
-    def decode(self, i: int, bi: int):
-        v = self._dec.get((i, bi))
+    def blocks_of(self, i: int) -> slice:
+        return slice(self.row_b[i], self.row_b[i + 1])
+
+    def postings_of(self, i: int) -> slice:
+        return slice(self.blk_p[self.row_b[i]], self.blk_p[self.row_b[i + 1]])
+
+    def norms(self, avgdl: float):
+        """(tfnorm of every posting, tfnorm bound of every block) at avgdl."""
+        v = self._norm.get(avgdl)
         if v is None:
-            v = self._dec[(i, bi)] = decode_block(self.blocks[i][bi])
+            v = self._norm[avgdl] = (tfnorm(self.tfs, self.dls, avgdl),
+                                     tfnorm(self.max_tf, self.min_dl, avgdl))
         return v
 
-    def norm(self, i: int, bi: int, avgdl: float):
-        v = self._norm.get((i, bi, avgdl))
+    def positions(self, i: int):
+        """(doc_id, position) of every term occurrence of row i."""
+        v = self._pos.get(i)
         if v is None:
-            _, tfs, dls = self.decode(i, bi)
-            v = self._norm[(i, bi, avgdl)] = tfnorm(tfs, dls, avgdl)
+            s = self.postings_of(i)
+            v = self._pos[i] = (
+                np.repeat(self.ids[s], self.tfs[s]),
+                decode_blocks_positions(self.blocks[i], self.tfs[s]))
         return v
 
-    def block_ubs(self, i: int, avgdl: float):
-        """tfnorm upper bound of every block of row i (block-max)."""
-        v = self._ub.get((i, avgdl))
-        if v is None:
-            blks = self.blocks[i]
-            v = self._ub[(i, avgdl)] = block_ub(
-                np.array([b["max_tf"] for b in blks], dtype=np.int64),
-                np.array([b["min_dl"] for b in blks], dtype=np.int64),
-                avgdl)
-        return v
 
-    def pos_entry(self, i: int, bi: int):
-        """(doc_ids, tfs, flat positions) of one block."""
-        ids_b, tfs_b, _ = self.decode(i, bi)
-        pos = self._pos.get((i, bi))
-        if pos is None:
-            pos = self._pos[(i, bi)] = decode_block_positions(
-                self.blocks[i][bi], tfs_b)
-        return ids_b, tfs_b, pos
-
-
-def _pos_data(acc: dict) -> dict:
-    """term → [(ids, tfs, positions) per block] → term → (el_doc_ids,
-    el_positions), one element per term occurrence (_match_phrase's
-    input)."""
+def _pos_data(sp: _ShardPostings, terms) -> dict:
+    """term → (el_doc_ids, el_positions) over the shard's rows of each term,
+    one element per term occurrence (_match_phrase's input); terms without
+    a row here are absent."""
     out = {}
-    for t, lst in acc.items():
-        if lst:
-            ids_c = np.concatenate([x[0] for x in lst])
-            tfs_c = np.concatenate([x[1] for x in lst])
-            pos_c = np.concatenate([x[2] for x in lst])
-            out[t] = (np.repeat(ids_c, tfs_c), pos_c)
+    for t in terms:
+        parts = [sp.positions(i) for i in sp.rows_of.get(t, ())]
+        if parts:
+            out[t] = tuple(np.concatenate(c) for c in zip(*parts))
     return out
 
 
@@ -509,23 +516,32 @@ def _excluded(spec: QuerySpec, sp: _ShardPostings):
     """The shard's docs a query's negative clauses exclude — NOT-term
     postings plus NOT-phrase matches — or None when no negative posting
     lives in this shard."""
-    parts = []
-    for t in spec.negs:
-        for i in sp.rows_of.get(t, ()):
-            for bi in range(len(sp.blocks[i])):
-                parts.append(sp.decode(i, bi)[0])
-    np_terms = spec.negp_terms()
-    if any(t in sp.rows_of for t in np_terms):
-        acc = {t: [sp.pos_entry(i, bi)
-                   for i in sp.rows_of.get(t, ())
-                   for bi in range(len(sp.blocks[i]))]
-               for t in np_terms}
-        pos_data = _pos_data(acc)
+    parts = [sp.ids[sp.postings_of(i)]
+             for t in spec.negs for i in sp.rows_of.get(t, ())]
+    pos_data = _pos_data(sp, spec.negp_terms())
+    if pos_data:
         for slop, vars_ in spec.negp:
             mlist = [_match_phrase(pos_data, var, slop) for var in vars_]
             if mlist:
                 parts.append(np.unique(np.concatenate(mlist)))
     return np.unique(np.concatenate(parts)) if parts else None
+
+
+def _kept_blocks(sp: _ShardPostings, i: int, docs, bound=None,
+                 theta: float = 0.0):
+    """Block mask of postings row i: the blocks a query scores. A block is
+    dropped when its [first_doc_id, next block's first_doc_id) range holds
+    no doc of `docs` (unsigned-sorted) and its block-max `bound` (per
+    block, the most one of its docs can total; None drops on the range
+    alone) is below θ."""
+    b = sp.blocks_of(i)
+    j = np.searchsorted(docs, sp.first_u[b])
+    keep = np.diff(j, append=docs.size) > 0
+    if bound is not None:
+        # bounds and scores are float sums taken in different orders: the
+        # relative slack keeps a block whose best doc could tie θ
+        keep |= bound >= theta * (1.0 - 1e-9)
+    return keep
 
 
 def _branch_b(spec: QuerySpec, fmap, allowed, seen=None):
@@ -568,7 +584,8 @@ def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
     if bool_spec:
         phrase_terms |= {t for grp in bool_spec["phrases"].values()
                          for var in grp[1] for t in var}
-    pos_acc: dict = {t: [] for t in phrase_terms}
+    # positions of the phrase terms this query scores, decoded once per row
+    pos_data = _pos_data(sp, phrase_terms & {r[1] for r in rows})
 
     # excluded docs of this shard: NOT-term postings + NOT-phrase matches
     excl = _excluded(spec, sp)
@@ -578,40 +595,18 @@ def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
     group_of = {g: i for i, g in enumerate(groups_sorted)}
     row_group = np.array([group_of[r[3]] for r in rows], dtype=np.int64)
     n_groups = len(groups_sorted)
-    term_max_ub = np.array(
-        [w * max(sp.block_ubs(i, a).tolist(), default=0.0)
-         for i, _, w, _, a in rows], dtype=np.float64)
-    # a group's max possible contribution (for pruning bounds). With a
-    # dis_max tie_breaker the blended score max + tb*(sum - max) can
-    # exceed the max bound but never the sum bound, so bounds fall
-    # back to sum-combine (sound, merely looser)
-    group_ub = np.zeros(n_groups)
-    if combine == "max" and tie_breaker == 0.0:
-        np.maximum.at(group_ub, row_group, term_max_ub)
-    else:
-        np.add.at(group_ub, row_group, term_max_ub)
 
-    # Position-lazy two-pass for flat positive-phrase queries: decode
-    # the PHRASE terms first (positions included), compute the
-    # phrase-satisfying doc set P, then skip any free term's block
-    # whose docid range contains no member of P — such docs can never
-    # reach the result, and every block holding a P-doc is decoded in
-    # full, so surviving scores are exact. At scale a rare phrase makes
-    # P tiny and the common free terms' posting lists go untouched.
+    # Flat positive-phrase queries: P = the docs satisfying every phrase
+    # group. A free term's block whose docid range holds no member of P
+    # is not scored — its docs can never reach the result, and every
+    # block holding a P-doc is scored in full, so surviving scores are
+    # exact.
     phrase_P_u = None
     matched_pre = None
-    decoded_rows: set = set()
     if phrases:
-        for row_i, (i, t_name, _, _, _) in enumerate(rows):
-            if t_name not in phrase_terms:
-                continue
-            pos_acc[t_name].extend(sp.pos_entry(i, bi)
-                                   for bi in range(len(sp.blocks[i])))
-            decoded_rows.add(row_i)
-        pos_data0 = _pos_data(pos_acc)
         matched_pre = [
             (np.unique(np.concatenate(
-                [_match_phrase(pos_data0, var, grp[0])
+                [_match_phrase(pos_data, var, grp[0])
                  for var in grp[1]]))
              if grp[1] else np.empty(0, np.int64))
             for grp in phrases
@@ -625,87 +620,74 @@ def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
     # per-query too — sound only for flat-OR, non-phrase, non-boolean
     expected = spec.n_groups
     theta = 0.0
-    solo = None
-    best_i = None
+    best_i = best_u = None
     if prune and n_rows > 1 and expected == 0 \
             and not phrases and bool_spec is None:
+        # each row's bound: its weight times its best block's tfnorm bound
+        term_max_ub = np.array(
+            [w * max(sp.norms(a)[1][sp.blocks_of(i)].tolist(), default=0.0)
+             for i, _, w, _, a in rows], dtype=np.float64)
         best_i = int(np.argmax(term_max_ub))
-        i = rows[best_i][0]
-        ids_l, sc_l = [], []
-        for bi in range(len(sp.blocks[i])):
-            ids_l.append(sp.decode(i, bi)[0])
-            sc_l.append(idfs[best_i] * sp.norm(i, bi, avgdls[best_i]))
-        solo = (np.concatenate(ids_l) if ids_l else np.empty(0, np.int64),
-                np.concatenate(sc_l) if sc_l else np.empty(0))
-        if excl is not None and solo[0].size:
-            kp = ~np.isin(solo[0], excl)
-            solo = (solo[0][kp], solo[1][kp])
-        if allowed is not None and solo[0].size:
-            # θ must be a lower bound over FILTER-SURVIVING docs only —
-            # an unfiltered θ would over-prune blocks holding allowed
-            # docs that belong in the top-k
-            kp = np.isin(solo[0], allowed)
-            solo = (solo[0][kp], solo[1][kp])
-        if solo[1].size >= k:
-            theta = float(np.partition(solo[1], -k)[-k])
+        s = sp.postings_of(rows[best_i][0])
+        solo_ids = sp.ids[s]
+        solo = idfs[best_i] * sp.norms(avgdls[best_i])[0][s]
+        # θ must be a lower bound over SURVIVING docs only — excluded
+        # docs, and for filtered queries docs outside the allowed set,
+        # would over-prune blocks holding docs that belong in the top-k
+        kp = np.ones(solo.size, dtype=bool)
+        if excl is not None:
+            kp &= ~np.isin(solo_ids, excl)
+        if allowed is not None:
+            kp &= np.isin(solo_ids, allowed)
+        solo = solo[kp]
+        if solo.size >= k:
+            theta = float(np.partition(solo, -k)[-k])
+            best_u = np.sort(solo_ids[kp].view(np.uint64))
+            # a group's max possible contribution to a doc WITHOUT the θ
+            # row's term. A block holding one of its surviving docs is
+            # always scored: a bound that counts the θ row never falls
+            # below θ. With a dis_max tie_breaker the blended score max +
+            # tb*(sum - max) can exceed the max bound but never the sum
+            # bound, so bounds fall back to sum-combine (sound, looser)
+            ub_wo = term_max_ub.copy()
+            ub_wo[best_i] = 0.0
+            group_ub = np.zeros(n_groups)
+            if combine == "max" and tie_breaker == 0.0:
+                np.maximum.at(group_ub, row_group, ub_wo)
+            else:
+                np.add.at(group_ub, row_group, ub_wo)
 
     ids_parts, sc_parts, grp_parts = [], [], []
     for row_i, (i, t_name, _, _, _) in enumerate(rows):
-        blocks = sp.blocks[i]
-        t_idf = idfs[row_i]
-        av = avgdls[row_i]
         g = row_group[row_i]
-        if row_i == best_i and solo is not None:
-            ids_parts.append(solo[0]); sc_parts.append(solo[1])
-            grp_parts.append(np.full(solo[0].size, g, dtype=np.int64))
-            continue
-        if row_i in decoded_rows:
-            # phrase term — decoded (with positions) in pass 1
-            for bi in range(len(blocks)):
-                ids_b = sp.decode(i, bi)[0]
-                ids_parts.append(ids_b)
-                sc_parts.append(t_idf * sp.norm(i, bi, av))
-                grp_parts.append(np.full(ids_b.size, g, dtype=np.int64))
-            continue
-        # other groups can add at most their group bound; this row's own
-        # group can add at most the group bound (covers max-combine where
-        # siblings don't stack)
-        others_ub = float(group_ub.sum() - group_ub[g])
-        # own-group headroom beyond this block: sibling field-rows only
-        own_extra = float(group_ub[g] - term_max_ub[row_i]) \
-            if (combine == "sum" or tie_breaker > 0.0) else 0.0
-        ubs = sp.block_ubs(i, av)
-        for bi, blk in enumerate(blocks):
-            if phrase_P_u is not None:
-                # block docids ascend in unsigned order across blocks;
-                # skip if no phrase-matching doc falls in this block's
-                # [first_doc, next_first) range
-                lo = np.uint64(int(blk["first_doc_id"]) & ((1 << 64) - 1))
-                j0 = int(np.searchsorted(phrase_P_u, lo))
-                if bi + 1 < len(blocks):
-                    hi = np.uint64(
-                        int(blocks[bi + 1]["first_doc_id"])
-                        & ((1 << 64) - 1))
-                    j1 = int(np.searchsorted(phrase_P_u, hi))
-                else:
-                    j1 = phrase_P_u.size
-                if j0 == j1:
-                    continue
-            ub = t_idf * float(ubs[bi])
-            bound = (max(ub, float(group_ub[g]))
+        norm, ubs = sp.norms(avgdls[row_i])
+        keep = None
+        if best_u is not None and row_i != best_i:
+            # other groups can add at most their group bound; this row's
+            # own group can add at most the group bound (covers
+            # max-combine where siblings don't stack)
+            others_ub = float(group_ub.sum() - group_ub[g])
+            # own-group headroom beyond this block: sibling field-rows only
+            own_extra = float(group_ub[g] - term_max_ub[row_i]) \
+                if (combine == "sum" or tie_breaker > 0.0) else 0.0
+            ub = idfs[row_i] * ubs[sp.blocks_of(i)]
+            bound = (np.maximum(ub, float(group_ub[g]))
                      if combine == "max" and tie_breaker == 0.0
-                     else ub + own_extra)
-            if theta > 0.0 and bound + others_ub < theta:
-                continue
-            ids_b = sp.decode(i, bi)[0]
-            ids_parts.append(ids_b)
-            sc_parts.append(t_idf * sp.norm(i, bi, av))
-            grp_parts.append(np.full(ids_b.size, g, dtype=np.int64))
-            if t_name in phrase_terms:
-                pos_acc[t_name].append(sp.pos_entry(i, bi))
-    if not ids_parts:
-        return None
+                     else ub + own_extra) + others_ub
+            keep = _kept_blocks(sp, i, best_u, bound, theta)
+        elif phrase_P_u is not None and t_name not in phrase_terms:
+            keep = _kept_blocks(sp, i, phrase_P_u)
+        s = sp.postings_of(i)
+        ids_r, norm_r = sp.ids[s], norm[s]
+        if keep is not None and not keep.all():
+            pk = np.repeat(keep, sp.n[sp.blocks_of(i)])
+            ids_r, norm_r = ids_r[pk], norm_r[pk]
+        ids_parts.append(ids_r)
+        sc_parts.append(idfs[row_i] * norm_r)
+        grp_parts.append(np.full(ids_r.size, g, dtype=np.int64))
     ids = np.concatenate(ids_parts)
+    if not ids.size:
+        return None
     scores = np.concatenate(sc_parts)
     grps = np.concatenate(grp_parts)
     # stable lexsort: primary doc (unsigned), secondary group — within a
@@ -798,7 +780,6 @@ def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
             valid = du[rows_c] == su
             M[rows_c[valid], seg_groups[valid]] = True
         present = {g: M[:, gi] for g, gi in group_of.items()}
-        pos_data = _pos_data(pos_acc)
         for key, (slop_b, vars_) in bool_spec["phrases"].items():
             mlist = [_match_phrase(pos_data, var, slop_b)
                      for var in vars_]
@@ -863,9 +844,9 @@ def _make_scorer(specs: dict, k: int, prune: bool, combine: str = "sum",
     call and returns their CANDIDATE_SCHEMA rows.
 
     postings: the shard's pruned postings rows (term, blocks) for every
-    term the batch reads. Each block decodes at most once per call and is
-    shared by all queries that read it (_ShardPostings); block-max
-    pruning still skips the blocks no query needs.
+    term the batch reads. One decode pass over all of them per call, each
+    row's slice shared by all queries that read it (_ShardPostings);
+    block-max pruning skips scoring the blocks no query needs.
 
     right (cogroup form, None otherwise): the shard's per-doc
     (query_id, doc_id, allow, fbits) rows from the one documents scan,

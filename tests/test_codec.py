@@ -56,9 +56,9 @@ def test_blockmax_metadata():
     assert blocks[0]["max_tf"] == 50
     assert blocks[1]["max_tf"] == 1
     assert blocks[0]["min_dl"] == 100
-    from ipfs_search_spark.functions.codec import block_ub
-    assert block_ub(blocks[0]["max_tf"], blocks[0]["min_dl"], 100.0) > \
-        block_ub(blocks[1]["max_tf"], blocks[1]["min_dl"], 100.0)
+    from ipfs_search_spark.functions.codec import tfnorm
+    assert tfnorm(blocks[0]["max_tf"], blocks[0]["min_dl"], 100.0) > \
+        tfnorm(blocks[1]["max_tf"], blocks[1]["min_dl"], 100.0)
 
 
 @given(st.lists(st.lists(st.integers(min_value=0, max_value=2**31 - 1),

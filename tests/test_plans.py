@@ -150,6 +150,102 @@ def test_shard_call_shares_terms_across_queries():
         assert got.equals(solo.reset_index(drop=True)), qid
 
 
+def test_block_max_pruning_skips_blocks(monkeypatch):
+    """θ, the 5th best score of the high-idf term t, drops the blocks of
+    the low-idf term u that hold no t doc: their bound (u's block bound
+    plus nothing, since t is absent) is far below θ. Those blocks are not
+    scored, and the rows equal the unpruned ones."""
+    from ipfs_search_spark.plans import query as q
+
+    # u: 1000 docs in 8 blocks of 128; only its first block holds t docs
+    postings = _postings(("t", range(10), 9), ("u", range(1000), 1))
+    spec = q.QuerySpec(rows=[("t", 5.0, "t", 50.0), ("u", 0.1, "u", 50.0)])
+    masks = []
+    kept_blocks = q._kept_blocks
+
+    def record(sp, i, *args):
+        keep = kept_blocks(sp, i, *args)
+        masks.append((i, keep.tolist()))
+        return keep
+
+    monkeypatch.setattr(q, "_kept_blocks", record)
+    pruned = q._make_scorer({0: spec}, 5, True)(postings)
+    assert masks == [(1, [True] + [False] * 7)]  # row 1 is u
+    masks.clear()
+    full = q._make_scorer({0: spec}, 5, False)(postings)
+    assert masks == []
+    assert len(pruned) == 5 and pruned.equals(full)
+
+
+def _corpus_postings(block_size, split):
+    """One shard's postings, positions included, of a 300-doc corpus over
+    the terms a..e with random signed doc ids: one row per term, or two
+    (the first 200 docs and the last 100, the base ∪ segment layout)."""
+    import numpy as np
+    import pandas as pd
+
+    from ipfs_search_spark.functions.codec import encode_blocks
+    rng = np.random.default_rng(5)
+    ids = rng.choice(np.arange(-2**62, 2**62, 2**52), 300, replace=False)
+    docs = [rng.choice(list("abcde"), rng.integers(3, 20),
+                       p=[0.1, 0.3, 0.3, 0.2, 0.1]) for _ in ids]
+    parts = [range(200), range(200, 300)] if split else [range(300)]
+    terms, rows = [], []
+    for t in "abcde":
+        for part in parts:
+            js = [j for j in part if t in docs[j]]
+            tfs = np.array([(docs[j] == t).sum() for j in js])
+            dls = np.array([docs[j].size for j in js])
+            pos = np.concatenate([np.flatnonzero(docs[j] == t) for j in js])
+            terms.append(t)
+            rows.append(encode_blocks(ids[js], tfs, dls, pos,
+                                      block_size=block_size))
+    return pd.DataFrame({"shard": 0, "term": terms, "blocks": rows})
+
+
+def test_scorer_output_ignores_block_size_and_row_split(monkeypatch):
+    """Every query shape scores the same at block size 4 and 128, with each
+    term in one postings row or split in two: slicing across block
+    boundaries and concatenating a term's rows change no output row. Each
+    shard call decodes its blocks in one decode_blocks call, and the
+    positions of each phrase-term row (b, c) once."""
+    from ipfs_search_spark.plans import query as q
+    from ipfs_search_spark.plans.query import QuerySpec, _make_scorer
+
+    calls = []
+    for name in ("decode_blocks", "decode_blocks_positions"):
+        def counted(*args, _f=getattr(q, name), _name=name):
+            calls.append(_name)
+            return _f(*args)
+        monkeypatch.setattr(q, name, counted)
+
+    def rows(*terms):
+        w = {"a": 2.0, "b": 0.5, "c": 0.7, "d": 0.3}
+        return [(t, w[t], t, 10.0) for t in terms]
+
+    bc = [["b", "c"]]
+    specs = {
+        0: QuerySpec(rows=rows("a", "b", "c", "d")),
+        1: QuerySpec(rows=rows("a", "b"), n_groups=2),
+        2: QuerySpec(rows=rows("b", "c"), phrases=[[0, bc]]),
+        3: QuerySpec(rows=rows("b", "c"), phrases=[[2, bc]]),
+        4: QuerySpec(rows=rows("a"), negp=[[0, bc]]),
+        5: QuerySpec(rows=rows("a", "b", "c"), tree={
+            "tree": ["or", "a", '"b c"'], "phrases": {'"b c"': [0, bc]},
+            "fbitmap": {}, "fconst": {}}),
+    }
+    scorer = _make_scorer(specs, 10, True)
+    ref = scorer(_corpus_postings(128, False))
+    assert sorted(set(ref["query_id"])) == list(specs)
+    for block_size, split in ((4, False), (128, True), (4, True)):
+        calls.clear()
+        out = scorer(_corpus_postings(block_size, split))
+        assert out.equals(ref), (block_size, split)
+        n_rows = 4 if split else 2  # the postings rows of b and c
+        assert calls == (["decode_blocks"]
+                         + ["decode_blocks_positions"] * n_rows)
+
+
 def test_mixed_batch_same_results_as_solo(spark, built_index):
     """A filtered query riding in the batch must not change an unfiltered
     query's results (every query keeps its own in-shard cut)."""
