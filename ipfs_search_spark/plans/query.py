@@ -663,17 +663,16 @@ def _score_query(spec: QuerySpec, sp: _ShardPostings, k: int, prune: bool,
         norm, ubs = sp.norms(avgdls[row_i])
         keep = None
         if best_u is not None and row_i != best_i:
-            # other groups can add at most their group bound; this row's
-            # own group can add at most the group bound (covers
-            # max-combine where siblings don't stack)
+            # other groups can add at most their group bound; within this
+            # row's group a doc of this block gets the block's bound,
+            # combined with the bounds of its sibling field-rows (max for
+            # max-combine, where siblings don't stack; else their sum)
             others_ub = float(group_ub.sum() - group_ub[g])
-            # own-group headroom beyond this block: sibling field-rows only
-            own_extra = float(group_ub[g] - term_max_ub[row_i]) \
-                if (combine == "sum" or tie_breaker > 0.0) else 0.0
+            sib_ub = ub_wo[(row_group == g) & (np.arange(n_rows) != row_i)]
             ub = idfs[row_i] * ubs[sp.blocks_of(i)]
-            bound = (np.maximum(ub, float(group_ub[g]))
+            bound = (np.maximum(ub, sib_ub.max(initial=0.0))
                      if combine == "max" and tie_breaker == 0.0
-                     else ub + own_extra) + others_ub
+                     else ub + sib_ub.sum()) + others_ub
             keep = _kept_blocks(sp, i, best_u, bound, theta)
         elif phrase_P_u is not None and t_name not in phrase_terms:
             keep = _kept_blocks(sp, i, phrase_P_u)

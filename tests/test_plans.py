@@ -177,6 +177,51 @@ def test_block_max_pruning_skips_blocks(monkeypatch):
     assert len(pruned) == 5 and pruned.equals(full)
 
 
+def test_max_combine_prunes_by_block_bound(monkeypatch):
+    """Under combine='max' a fielded row's block is bounded by its own
+    block bound or its sibling field-rows' bound, whichever is larger, not
+    by the group's best block. t sets θ = 0.625 (its 5th best score);
+    u1 and u2 are fielded rows of one group u. Only u1's last block holds
+    a tf-4 doc (bound 0.769), its blocks 1-6 hold tf-1 docs (bound 0.455)
+    and u2 bounds at 0.136: those six blocks are not scored, and the rows
+    equal the unpruned ones."""
+    import numpy as np
+    import pandas as pd
+
+    from ipfs_search_spark.functions.codec import encode_blocks
+    from ipfs_search_spark.plans import query as q
+
+    def row(ids, tfs):
+        ids = np.asarray(ids, dtype=np.int64)
+        return encode_blocks(ids, np.asarray(tfs, dtype=np.int64),
+                             np.full(ids.size, 50), block_size=128)
+
+    u1_tf = np.ones(1000, dtype=np.int64)
+    u1_tf[999] = 4
+    postings = pd.DataFrame({
+        "shard": 0, "term": ["t", "u1", "u2"],
+        "blocks": [row(range(10), [9] + [2] * 9), row(range(1000), u1_tf),
+                   row([2000, 2001], [1, 1])]})
+    spec = q.QuerySpec(rows=[("t", 1.0, "t", 50.0), ("u1", 1.0, "u", 50.0),
+                             ("u2", 0.3, "u", 50.0)])
+    masks = []
+    kept_blocks = q._kept_blocks
+
+    def record(sp, i, *args):
+        keep = kept_blocks(sp, i, *args)
+        masks.append((i, keep.tolist()))
+        return keep
+
+    monkeypatch.setattr(q, "_kept_blocks", record)
+    pruned = q._make_scorer({0: spec}, 5, True, "max")(postings)
+    # row 1 is u1: block 0 holds t's docs, block 7 the tf-4 doc
+    assert masks == [(1, [True] + [False] * 6 + [True]), (2, [True])]
+    masks.clear()
+    full = q._make_scorer({0: spec}, 5, False, "max")(postings)
+    assert masks == []
+    assert len(pruned) == 5 and pruned.equals(full)
+
+
 def _corpus_postings(block_size, split):
     """One shard's postings, positions included, of a 300-doc corpus over
     the terms a..e with random signed doc ids: one row per term, or two
